@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** Access to the listener bus, which Spark keeps package-private: the
+  * tracer drains it before reading listener-fed counters. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
