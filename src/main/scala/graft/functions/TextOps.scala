@@ -869,8 +869,10 @@ object TextOps extends QueryModule {
     * Scale: pair explode is linear; counts are two partial aggs; the
     * per-pair re-join keys on the bigram (high entropy, no hot key — the
     * conditional already divides out w1's frequency); per-doc re-agg
-    * shuffles doc_id. The model table is O(distinct bigrams) — joined, not
-    * broadcast, because a 100-TB corpus's bigram vocabulary isn't small.
+    * shuffles doc_id. The model table is O(distinct bigrams): it is
+    * broadcast while its row count stays within `graft.broadcast.maxKeys`
+    * and shuffle-joined above it, because a 100-TB corpus's bigram
+    * vocabulary isn't small.
     */
   private val qTextLmScore = GQuery(
     (s, d) => {
@@ -884,8 +886,8 @@ object TextOps extends QueryModule {
         .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
       // one corpus pass builds the bigram table; the unigram marginals are
       // its per-w1 sums (identical to counting pair instances), so the
-      // model needs no second corpus pass — and it broadcasts, so scoring
-      // never shuffles the exploded pair stream
+      // model needs no second corpus pass — and below the size guard it
+      // broadcasts, so scoring never shuffles the exploded pair stream
       val big = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
         .localCheckpoint(true)
       val uni = big.groupBy("w1").agg(sum("c12").as("c1"))

@@ -1,12 +1,20 @@
 package graft.streaming
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan,
+  LessThanOrEqual, Literal}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Offset-named, rotation-chunked, idempotent ORC sink — the one piece of the
   * reference that Spark's file sink does not provide (SURVEY.md §4
@@ -32,7 +40,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    chunk)` dirs — O(files-in-this-batch) FS ops per commit, independent
   *    of how many files the topic has accumulated. The full directory walk
   *    exists only on the recovery path, gated by an in-flight marker: it
-  *    runs at most once after a crash, never per batch.
+  *    runs at most once after a crash, never per batch;
+  *  - every read (`read`, `readRange`, `readAsOf`, `readAsOfStr`) plans
+  *    over one committed-file index (`sinkRelation`). It skips files at
+  *    planning time: a pushed `column <op> literal` conjunct on `offset`
+  *    is judged against the chunk range in each file's name, and one on a
+  *    tracked stats column against the cell's `_graft_stats` line. The
+  *    window reads build the index from the statuses their exact-name
+  *    probes return, so planning them lists nothing and runs no job.
   *
   * Durability protocol (one commit per rotation file, `FileUtils.java:10-26`):
   *  1. `_graft_inflight` marker is created (listing the touched leaves);
@@ -502,7 +517,7 @@ object OffsetNamedOrcSink {
     }
     val existingPaths = touched.flatMap { t =>
       committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic))
-        .map(_.toString)
+        .map(_.getPath.toString)
     }
     val merged =
       if (existingPaths.isEmpty) flat
@@ -835,21 +850,19 @@ object OffsetNamedOrcSink {
     * dir, which would make every steady-state probe O(all files the
     * partition has accumulated). `-N` suffixes are assigned contiguously
     * from 1 by the hoist pass, so exact-name probes until the first miss
-    * cover them in O(1 + #suffixed).
+    * cover them in O(1 + #suffixed). Each probe is one `getFileStatus`
+    * (what `exists` costs), and the statuses it returns are what the read
+    * paths plan over — no second resolution of the same paths.
     */
   private def committedChunkFiles(fs: FileSystem, pDir: Path,
-      prefix: String): Seq[Path] = {
+      prefix: String): Seq[FileStatus] = {
     if (FsAudit.enabled) FsAudit.probes.add(s"$pDir/$prefix")
-    val found = Seq.newBuilder[Path]
-    val exact = new Path(pDir, s"$prefix.orc")
-    if (fs.exists(exact)) found += exact
-    var i = 1
-    var more = true
-    while (more) {
-      val p = new Path(pDir, s"$prefix-$i.orc")
-      if (fs.exists(p)) { found += p; i += 1 } else more = false
-    }
-    found.result()
+    def probe(name: String): Option[FileStatus] =
+      try Some(fs.getFileStatus(new Path(pDir, name)))
+      catch { case _: FileNotFoundException => None }
+    probe(s"$prefix.orc").toSeq ++
+      Iterator.from(1).map(i => probe(s"$prefix-$i.orc"))
+        .takeWhile(_.isDefined).flatten
   }
 
   /** Hoist ONE chunk's staging dir to its committed offset name — the
@@ -880,7 +893,7 @@ object OffsetNamedOrcSink {
           s"$cDir holds ${parts.size} part files — the one-file-per-chunk " +
             "repartition invariant is broken; refusing to hoist (a multi-part " +
             "rename pass is not crash-idempotent). Staging dir kept.")
-      committedChunkFiles(fs, pDir, prefix).foreach(f => fs.delete(f, false))
+      committedChunkFiles(fs, pDir, prefix).foreach(f => fs.delete(f.getPath, false))
       val t = new Path(pDir, s"$prefix.orc")
       // Hadoop signals most rename failures (e.g. a failed S3A copy) by
       // returning false, not throwing. An unchecked false here followed by
@@ -984,6 +997,13 @@ object OffsetNamedOrcSink {
     * on. (Reading a topic dir while a write is actively committing to it
     * is otherwise unsupported — same as the reference, whose verification
     * reads run between commits.)
+    *
+    * The topic is listed once, and a filter on the result skips files at
+    * planning time: `offset <op> literal` by the chunk range each committed
+    * file's name encodes, and `<stats column> <op> literal` by the cell's
+    * `_graft_stats` min/max (see `sinkRelation`). `read().filter` therefore
+    * opens only the files whose range can hold a matching row, and returns
+    * exactly what the unpruned scan would.
     */
   def read(spark: SparkSession, topicDir: String): DataFrame = {
     val fs = FileSystem.get(new java.net.URI(topicDir),
@@ -992,44 +1012,293 @@ object OffsetNamedOrcSink {
     val inflight = new Path(root, InflightMarker)
     if (fs.exists(inflight))
       recoverFromMarker(fs, root, root.getName, inflight)
-    // Read with the LATCHED schema, not a sampled file's: after a Backward
-    // widening the files carry mixed physical schemas, and sampling an old
-    // one would silently drop the added columns. With the declared schema,
-    // ORC's name-based column matching null-fills exactly the files that
-    // predate each widening. Layout dir columns (partition, dt, year, a
-    // routed field…) keep coming from the dirs — a declared column that is
-    // also a partition column is filled from its dir value.
-    val reader = latchedReader(spark, fs, root)
-    // _chunk: prefer the persisted chunk grid (offset - offset % flushSize,
-    // a PURE function of the row — identical to the committed file names by
-    // the O9 rotation invariant). The input_file_name() fallback (legacy
-    // dirs without a config marker) is NONDETERMINISTIC to Catalyst, and a
-    // nondeterministic projection blocks every filter above it from pushing
-    // into the ORC scan — with the row-pure grid, point lookups reach the
-    // scan's row-group stats and bloom filters.
-    val chunkCol = readMarker(fs, new Path(root, ConfigMarker)) match {
-      case Some(desc) =>
-        val flushSize = parseConfig(desc)._1
-        col("offset") - pmod(col("offset"), lit(flushSize))
-      case None =>
-        regexp_extract(input_file_name(), CommittedTailRe, 1).cast("long")
-    }
-    reader.orc(topicDir).withColumn(ChunkCol, chunkCol)
+    sinkRelation(spark, fs, root, None,
+      readMarker(fs, new Path(root, ConfigMarker)),
+      readMarker(fs, new Path(root, StatsMarker)))
   }
 
-  /** Declared-(latched-)schema reader — see read()'s scaladoc for why a
-    * sampled file's schema must never drive a read-back.
+  /** The one relation constructor under every sink read: an ORC
+    * `HadoopFsRelation` over a `CommittedFileIndex`.
+    *
+    * The listing is either the whole topic (`probed = None`: Spark's
+    * `InMemoryFileIndex` over the topic dir, what `spark.read.orc` builds)
+    * or the statuses the exact-name probes returned (`readRange`,
+    * `readAsOf*`, `deleteRows`): those seed the index's status cache, so
+    * planning re-resolves no path and starts no parallel-listing job,
+    * whatever the file count. Partition columns are inferred from the dirs
+    * under the topic root as `spark.read` infers them.
+    *
+    * Schema: the LATCHED one, not a sampled file's. After a Backward
+    * widening the files carry mixed physical schemas, and sampling an old
+    * one would silently drop the added columns; with the declared schema,
+    * ORC's name-based column matching null-fills exactly the files that
+    * predate each widening. Layout dir columns (partition, dt, year, a
+    * routed field…) come from the dirs — a declared column that is also a
+    * partition column is filled from its dir value. Only a dir without a
+    * schema marker (pre-protocol) samples the files.
+    *
+    * `_chunk`: the persisted chunk grid (offset - offset % flushSize), a
+    * PURE function of the row — identical to the committed file names by
+    * the O9 rotation invariant. The input_file_name() fallback (legacy dirs
+    * without a config marker) is NONDETERMINISTIC to Catalyst, and a
+    * nondeterministic projection blocks every filter above it from pushing
+    * into the ORC scan — with the row-pure grid, point lookups reach the
+    * scan's row-group stats and bloom filters, and the file index's
+    * skipping.
+    *
+    * Two reads of the same topic compare equal (index equality by root
+    * paths and listed files), so `sameResult` and cache reuse hold.
     */
-  private def latchedReader(spark: SparkSession, fs: FileSystem,
-      root: Path): org.apache.spark.sql.DataFrameReader =
-    readMarker(fs, new Path(root, SchemaMarker)) match {
-      case Some(json) =>
-        val latched = DataType.fromJson(json).asInstanceOf[StructType]
-        spark.read.schema(StructType(
-          org.apache.spark.sql.types.StructField("offset",
-            org.apache.spark.sql.types.LongType) +: latched.fields.toSeq))
-      case None => spark.read // pre-protocol dir: sampled-schema read
+  private def sinkRelation(spark: SparkSession, fs: FileSystem, root: Path,
+      probed: Option[Seq[FileStatus]], desc: Option[String],
+      statsText: => Option[String]): DataFrame = {
+    val qRoot = fs.makeQualified(root)
+    val declared = readMarker(fs, new Path(root, SchemaMarker)).map { json =>
+      StructType(StructField("offset", LongType) +:
+        DataType.fromJson(json).asInstanceOf[StructType].fields.toSeq)
     }
+    val listing = probed match {
+      case None => new InMemoryFileIndex(spark, Seq(qRoot), Map.empty, declared,
+        FileStatusCache.getOrCreate(spark))
+      case Some(files) => new InMemoryFileIndex(spark, files.map(_.getPath),
+        Map("basePath" -> qRoot.toString), declared, new ProbedStatuses(files))
+    }
+    // a declared column that is also a dir level keeps its declared type
+    // and moves to the partition side (DataSource's schema resolution)
+    val same = spark.sessionState.conf.resolver
+    val partitionSchema = StructType(listing.partitionSchema.map(p =>
+      declared.flatMap(_.find(f => same(f.name, p.name))).getOrElse(p)))
+    val dataSchema = declared
+      .map(d => StructType(d.filterNot(f => partitionSchema.exists(p => same(p.name, f.name)))))
+      .orElse(new OrcFileFormat().inferSchema(spark, Map.empty, listing.allFiles()))
+      .getOrElse(throw new IllegalStateException(
+        s"$root holds no committed ORC file and no $SchemaMarker — no schema to read"))
+    val index = new CommittedFileIndex(listing,
+      new FileSkipping(qRoot, desc, () => statsText))
+    val chunk = desc match {
+      case Some(d) => col("offset") - pmod(col("offset"), lit(parseConfig(d)._1))
+      case None => regexp_extract(input_file_name(), CommittedTailRe, 1).cast("long")
+    }
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
+        nullable(dataSchema).asInstanceOf[StructType], None, new OrcFileFormat,
+        Map.empty)(spark))
+      .withColumn(ChunkCol, chunk)
+  }
+
+  /** `dt` with every level nullable: ORC columns are, and a declared
+    * non-null field would let Catalyst drop null checks on the null-filled
+    * columns of files that predate a widening.
+    */
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  /** Status cache answering each probed file path with its own status, so
+    * `InMemoryFileIndex` lists nothing. Invalidation (a `refresh`) empties
+    * it, and the next listing asks the file system.
+    */
+  private final class ProbedStatuses(files: Seq[FileStatus]) extends FileStatusCache {
+    @volatile private var byPath: Map[Path, Array[FileStatus]] =
+      files.map(f => f.getPath -> Array(f)).toMap
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byPath.get(path)
+    override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+    override def invalidateAll(): Unit = byPath = Map.empty
+  }
+
+  /** The sink's file index: a listing of committed files plus file
+    * skipping. `listFiles` drops every file that a pushed data conjunct
+    * rules out (see `FileSkipping`); the row filter stays on top, so
+    * skipping only has to be conservative. Everything else — root paths,
+    * partition schema, `inputFiles`, size — is the listing's.
+    */
+  private final class CommittedFileIndex(listing: InMemoryFileIndex,
+      skipping: FileSkipping) extends FileIndex {
+    override def rootPaths: Seq[Path] = listing.rootPaths
+    override def partitionSchema: StructType = listing.partitionSchema
+    override def inputFiles: Array[String] = listing.inputFiles
+    override def sizeInBytes: Long = listing.sizeInBytes
+    override def refresh(): Unit = listing.refresh()
+    override def metadataOpsTimeNs: Option[Long] = listing.metadataOpsTimeNs
+
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val listed = listing.listFiles(partitionFilters, dataFilters)
+      val bounds = dataFilters.flatMap(conjuncts).flatMap(boundOf)
+      if (bounds.isEmpty) listed
+      else listed.map(d => d.copy(files = d.files.filter(f =>
+        skipping.keeps(f.fileStatus, bounds)))).filter(_.files.nonEmpty)
+    }
+
+    private def files: Set[Path] = listing.allFiles().map(_.getPath).toSet
+    override def equals(other: Any): Boolean = other match {
+      case o: CommittedFileIndex =>
+        rootPaths.toSet == o.rootPaths.toSet && files == o.files
+      case _ => false
+    }
+    override def hashCode: Int = rootPaths.toSet.hashCode
+  }
+
+  /** A pushed conjunct `column <op> value` that file skipping can judge:
+    * `op` is one of = < <= > >= with the column on the left, `value` a
+    * Long (integral column and literal) or a String (UTF-8-binary string
+    * column and literal).
+    */
+  private final case class Bound(column: String, op: String, value: Any)
+
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
+
+  /** The Bound a conjunct states, if it is a bare column compared with a
+    * non-null literal of the column's kind. Anything else — an OR, a cast
+    * or expression on either side, a column-to-column compare — states
+    * none, and so skips no file.
+    */
+  private def boundOf(e: Expression): Option[Bound] = {
+    def integral(t: DataType) =
+      t == ByteType || t == ShortType || t == IntegerType || t == LongType
+    def mk(a: AttributeReference, op: String, l: Literal): Option[Bound] =
+      (l.value, a.dataType) match {
+        case (v: Number, t) if integral(t) && integral(l.dataType) =>
+          Some(Bound(a.name, op, v.longValue))
+        case (v: UTF8String, StringType) if l.dataType == StringType =>
+          Some(Bound(a.name, op, v.toString))
+        case _ => None
+      }
+    e match {
+      case EqualTo(a: AttributeReference, l: Literal) => mk(a, "=", l)
+      case EqualTo(l: Literal, a: AttributeReference) => mk(a, "=", l)
+      case LessThan(a: AttributeReference, l: Literal) => mk(a, "<", l)
+      case LessThan(l: Literal, a: AttributeReference) => mk(a, ">", l)
+      case LessThanOrEqual(a: AttributeReference, l: Literal) => mk(a, "<=", l)
+      case LessThanOrEqual(l: Literal, a: AttributeReference) => mk(a, ">=", l)
+      case GreaterThan(a: AttributeReference, l: Literal) => mk(a, ">", l)
+      case GreaterThan(l: Literal, a: AttributeReference) => mk(a, "<", l)
+      case GreaterThanOrEqual(a: AttributeReference, l: Literal) => mk(a, ">=", l)
+      case GreaterThanOrEqual(l: Literal, a: AttributeReference) => mk(a, "<=", l)
+      case _ => None
+    }
+  }
+
+  /** A recorded value range [lo, hi] of one column in one file or cell;
+    * None leaves that side unbounded (the all-null sentinels). Values are
+    * Longs or Strings, matching the Bounds judged against them.
+    */
+  private type ValueRange = (Option[Any], Option[Any])
+
+  /** Can a file whose column values lie in `r` hold a row satisfying `b`?
+    * Strings compare as UTF-8 bytes (Spark's and the stats' ordering).
+    */
+  private def admits(r: ValueRange, b: Bound): Boolean = {
+    def cmp(x: Any): Int = (x, b.value) match {
+      case (x: Long, v: Long) => java.lang.Long.compare(x, v)
+      case (x: String, v: String) => utf8Cmp(x, v)
+    }
+    val (lo, hi) = r
+    b.op match {
+      case "=" => lo.forall(cmp(_) <= 0) && hi.forall(cmp(_) >= 0)
+      case "<" => lo.forall(cmp(_) < 0)
+      case "<=" => lo.forall(cmp(_) <= 0)
+      case ">" => hi.forall(cmp(_) > 0)
+      case ">=" => hi.forall(cmp(_) >= 0)
+    }
+  }
+
+  /** One committed cell's `_graft_stats` line: the cell and its recorded
+    * range per tracked column, in config order.
+    */
+  private final case class CellStats(cell: Touched, ranges: IndexedSeq[ValueRange])
+
+  /** Parse a `_graft_stats` payload against the topic's layout and stats
+    * spec. Lines are self-describing by field count (pre-rowcount lines
+    * are one field shorter); long bounds at Long.Min/MaxValue and the
+    * string `!null` token are the all-null sentinels and leave the range
+    * unbounded. None when ANY line fails to parse — a corrupt marker
+    * prunes nothing.
+    */
+  private def parseStats(text: String, prefixNames: Seq[String],
+      spec: Seq[(String, Boolean)]): Option[Seq[CellStats]] = {
+    def dec(v: String) = java.net.URLDecoder.decode(v, "UTF-8")
+    val base = prefixNames.size + 2
+    val Cell = raw"\d+(?:t-?\d+)?".r
+    try Some(text.linesIterator.filter(_.nonEmpty).map { l =>
+      val f = l.split("\\|", -1)
+      val at =
+        if (f.length == base + 1 + 2 * spec.size) base + 1 // key | n_rows | pairs
+        else if (f.length == base + 2 * spec.size) base // pre-rowcount line
+        else throw new IllegalArgumentException(s"stats line: $l")
+      val cell = f(base - 1)
+      require(Cell.pattern.matcher(cell).matches(), s"stats cell: $l")
+      cellParts(cell) // the chunk must fit a long
+      val ranges = spec.indices.map { i =>
+        val (mn, mx) = (f(at + 2 * i), f(at + 2 * i + 1))
+        if (spec(i)._2)
+          (Some(mn).filter(_ != StrStatsNull).map(dec),
+            Some(mx).filter(_ != StrStatsNull).map(dec)): ValueRange
+        else
+          (Some(mn.toLong).filter(_ != Long.MinValue),
+            Some(mx.toLong).filter(_ != Long.MaxValue)): ValueRange
+      }
+      CellStats(Touched(prefixNames.zip(f.take(prefixNames.size).map(dec)),
+        f(base - 2).toInt, cell), ranges)
+    }.toSeq)
+    catch { case _: IllegalArgumentException => None } // incl. NumberFormatException
+  }
+
+  /** File skipping for one topic dir. A committed file (named
+    * `<topic>+<p>+<chunk>[+t<bucket>][-N].orc` inside its `partition=<p>`
+    * dir) is skipped when a Bound rules out its `offset` range
+    * [chunk, chunk + flushSize) or its cell's recorded range of a tracked
+    * stats column. A file of any other name, a cell without a stats line,
+    * a missing config or a missing or corrupt stats marker skips nothing.
+    * The stats marker is read (`statsText`) only when a Bound names a
+    * tracked column.
+    */
+  private final class FileSkipping(root: Path, desc: Option[String],
+      statsText: () => Option[String]) {
+    private val topic = root.getName
+    private val committedName = ("^" + java.util.regex.Pattern.quote(fileTopic(topic)) +
+      raw"\+(\d+)\+(\d+)(?:\+t(-?\d+))?(?:-\d+)?\.orc$$").r
+    private val config = desc.map(parseConfig)
+    private val spec = desc.flatMap(statsSpecOf).getOrElse(Nil)
+    /** committed file prefix (`<partition dir>/<cell file prefix>`) → stats */
+    private lazy val byPrefix: Map[String, CellStats] = (for {
+      (_, layoutId, _) <- config
+      text <- statsText()
+      cells <- parseStats(text, prefixColsOf(layoutId), spec)
+    } yield cells.map(c =>
+      s"${c.cell.partitionDir(root)}/${c.cell.filePrefix(topic)}" -> c).toMap)
+      .getOrElse(Map.empty)
+
+    def keeps(f: FileStatus, bounds: Seq[Bound]): Boolean = config match {
+      case None => true
+      case Some((flushSize, _, _)) =>
+        val dir = f.getPath.getParent
+        committedName.findFirstMatchIn(f.getPath.getName) match {
+          case Some(m) if dir.getName == s"partition=${m.group(1)}" &&
+              m.group(2).toLongOption.isDefined =>
+            val chunk = m.group(2).toLong
+            val offsets: ValueRange = (Some(chunk),
+              Some(chunk + (flushSize - 1)).filter(_ >= chunk)) // no overflow
+            val prefix = f.getPath.getName.substring(0,
+              if (m.group(3) != null) m.end(3) else m.end(2))
+            lazy val cell = byPrefix.get(s"$dir/$prefix")
+            bounds.forall { b =>
+              val at = spec.indexWhere(_._1 == b.column)
+              if (b.column == "offset") admits(offsets, b)
+              else if (at < 0 || spec(at)._2 != b.value.isInstanceOf[String]) true
+              else cell.forall(c => admits(c.ranges(at), b))
+            }
+          case _ => true
+        }
+    }
+  }
 
   /** Per-cell min/max stats of `statsCols` (integer- or string-typed
     * emitted columns), merged into the `_graft_stats` marker: one line per
@@ -1128,17 +1397,6 @@ object OffsetNamedOrcSink {
     }
   }
 
-  /** Time-travel / as-of read by a stats column: rows with
-    * `column ∈ [lo, hi)`, touching ONLY the committed files whose recorded
-    * min/max range intersects the window. The commit-time `_graft_stats`
-    * marker (written by every `write(statsColumns = ...)` batch) plays the
-    * role of a Delta log's per-file stats: qualifying cells are probed by
-    * their exact committed names — no directory listing of non-qualifying
-    * partitions, no footer reads of non-qualifying files. Equals
-    * `read().filter(lo <= column < hi)` by construction; falls back to
-    * exactly that when the topic has no stats for `column` (legacy dir, or
-    * written without statsColumns — the config marker records which).
-    */
   /** The topic's committed-cell CATALOG as a DataFrame — the queryable face
     * of the `_graft_stats` marker (one row per committed (prefix, partition,
     * chunk) cell with its recorded stats range): what a lakehouse exposes as
@@ -1222,12 +1480,24 @@ object OffsetNamedOrcSink {
   private def statsColsOf(desc: String): Option[Seq[String]] =
     statsSpecOf(desc).map(_.map(_._1))
 
+  /** Time-travel / as-of read by a stats column: rows with
+    * `column ∈ [lo, hi)`, touching ONLY the committed files whose recorded
+    * min/max range intersects the window. The commit-time `_graft_stats`
+    * marker (written by every `write(statsColumns = ...)` batch) plays the
+    * role of a Delta log's per-file stats: qualifying cells are probed by
+    * their exact committed names — no listing of the topic's committed
+    * files, no footer reads of non-qualifying files — and the relation is
+    * planned over the probed statuses, with no parallel-listing job however
+    * many files qualify. `read().filter(lo <= column < hi)` skips the same
+    * files by the same rule but lists the topic first. Equals that read by
+    * construction, and falls back to it when the topic has no stats for
+    * `column` (legacy dir, or written without statsColumns — the config
+    * marker records which).
+    */
   def readAsOf(spark: SparkSession, topicDir: String, column: String,
       lo: Long, hi: Long): DataFrame = {
     require(lo < hi, s"empty stats window [$lo, $hi)")
-    readAsOfCore(spark, topicDir, column, wantString = false,
-      window = df => df.filter(col(column) >= lo && col(column) < hi),
-      qualifies = (mn, mx) => mx.toLong >= lo && mn.toLong < hi)
+    readAsOfCore(spark, topicDir, column, lo, hi, wantString = false)
   }
 
   /** String-column as-of read: rows with `column ∈ [lo, hi)` under Spark's
@@ -1243,12 +1513,7 @@ object OffsetNamedOrcSink {
   def readAsOfStr(spark: SparkSession, topicDir: String, column: String,
       lo: String, hi: String): DataFrame = {
     require(utf8Cmp(lo, hi) < 0, s"empty stats window ['$lo', '$hi')")
-    def dec(v: String) = java.net.URLDecoder.decode(v, "UTF-8")
-    readAsOfCore(spark, topicDir, column, wantString = true,
-      window = df => df.filter(col(column) >= lo && col(column) < hi),
-      qualifies = (mn, mx) =>
-        (mx == StrStatsNull || utf8Cmp(dec(mx), lo) >= 0) &&
-        (mn == StrStatsNull || utf8Cmp(dec(mn), hi) < 0))
+    readAsOfCore(spark, topicDir, column, lo, hi, wantString = true)
   }
 
   /** Unsigned lexicographic compare of the UTF-8 encodings — Spark's
@@ -1266,17 +1531,17 @@ object OffsetNamedOrcSink {
     x.length - y.length
   }
 
-  /** Shared marker-pruned as-of read: `qualifies` judges a cell's raw
-    * |mn|mx tokens for the requested column, `window` is the row-level
-    * filter that stays on top for boundary files. Falls back to the
-    * (filter-pushed-down) full scan when the topic has no stats for the
-    * column; refuses a type-mismatched probe (a numeric window against a
-    * string column would silently prune nothing meaningful).
+  /** Shared marker-pruned as-of read of `column ∈ [lo, hi)` (Longs or
+    * Strings): a cell qualifies when its recorded range admits both window
+    * bounds — the rule `read().filter`'s file skipping applies per file.
+    * The row-level window filter stays on top for boundary files. Falls
+    * back to the (file-skipping) full read when the topic has no stats for
+    * the column or the marker is corrupt; refuses a type-mismatched probe
+    * (a numeric window against a string column would silently prune
+    * nothing meaningful).
     */
   private def readAsOfCore(spark: SparkSession, topicDir: String,
-      column: String, wantString: Boolean,
-      window: DataFrame => DataFrame,
-      qualifies: (String, String) => Boolean): DataFrame = {
+      column: String, lo: Any, hi: Any, wantString: Boolean): DataFrame = {
     val fs = FileSystem.get(new java.net.URI(topicDir),
       spark.sparkContext.hadoopConfiguration)
     val root = new Path(topicDir)
@@ -1284,11 +1549,11 @@ object OffsetNamedOrcSink {
     val inflight = new Path(root, InflightMarker)
     if (fs.exists(inflight))
       recoverFromMarker(fs, root, topic, inflight)
+    def window(df: DataFrame) = df.filter(col(column) >= lo && col(column) < hi)
     def fullScan = window(read(spark, topicDir))
     (readMarker(fs, new Path(root, StatsMarker)),
         readMarker(fs, new Path(root, ConfigMarker))) match {
       case (Some(statsText), Some(desc)) =>
-        val (flushSize, layoutId, _) = parseConfig(desc)
         // prune on ANY tracked column — the pair offset inside each line
         // comes from the column's position in the config list
         val spec = statsSpecOf(desc).getOrElse(Nil)
@@ -1298,46 +1563,34 @@ object OffsetNamedOrcSink {
           s"stats column '$column' is ${if (spec(colIdx)._2) "string" else
             "numeric"}-typed — use ${if (spec(colIdx)._2) "readAsOfStr"
             else "readAsOf"}")
-        val prefixNames = prefixColsOf(layoutId)
-        val base = prefixNames.size + 2
-        val nOld = base + 2 * spec.size // pre-rowcount line
-        val nNew = base + 1 + 2 * spec.size // key | n_rows | pairs
-        val lines = statsText.linesIterator.filter(_.nonEmpty)
-          .map(_.split("\\|", -1)).toSeq
-        if (lines.exists(f => f.length != nOld && f.length != nNew))
-          return fullScan // corrupt: correctness first
-        val qual = lines.filter { f =>
-          val mnAt = (if (f.length == nNew) base + 1 else base) + 2 * colIdx
-          qualifies(f(mnAt), f(mnAt + 1))
-        }
-        val files = qual.flatMap { f =>
-          val prefix = prefixNames.zip(f).map { case (n, v) =>
-            n -> java.net.URLDecoder.decode(v, "UTF-8") }
-          val t = Touched(prefix, f(prefixNames.size).toInt,
-            f(prefixNames.size + 1))
-          committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic))
-        }
+        val cells = parseStats(statsText, prefixColsOf(parseConfig(desc)._2), spec)
+          .getOrElse(return fullScan) // corrupt: correctness first
+        val bounds = Seq(Bound(column, ">=", lo), Bound(column, "<", hi))
+        val files = cells
+          .filter(c => bounds.forall(admits(c.ranges(colIdx), _)))
+          .flatMap(c => committedChunkFiles(fs, c.cell.partitionDir(root),
+            c.cell.filePrefix(topic)))
         if (files.isEmpty) fullScan.filter(lit(false)) // provably empty window
-        else window(latchedReader(spark, fs, root)
-          .option("basePath", topicDir).orc(files.map(_.toString): _*)
-          .withColumn(ChunkCol,
-            col("offset") - pmod(col("offset"), lit(flushSize))))
+        else window(sinkRelation(spark, fs, root, Some(files), Some(desc),
+          Some(statsText)))
       case _ => fullScan
     }
   }
 
   /** Read back ONLY the offsets in `[fromOffset, untilOffset)` — the
     * reference's offset-range verification read, done without enumerating
-    * the topic's committed files. `read().filter(offset)` would list every
-    * file the topic has ever committed just to plan the scan; at millions
-    * of files that listing dominates a bounded-window read. This path
-    * instead derives the overlapping chunk starts from the persisted
-    * flush.size (the chunk grid is the file-naming contract, so file-level
-    * pruning is exact), lists only DIRECTORIES (the `partition=` leaves,
-    * O(#partitions × #dt-dirs)), and probes the candidate files by their
-    * deterministic names — O(#leaf-dirs × window/flushSize) FS ops,
-    * independent of total committed files. The offset filter stays on top
-    * for the boundary chunks' partial overlap.
+    * the topic's committed files. `read().filter(offset)` skips the same
+    * files, but only after listing every file the topic has ever committed
+    * to plan the scan; at millions of files that listing dominates a
+    * bounded-window read. This path instead derives the overlapping chunk
+    * starts from the persisted flush.size (the chunk grid is the
+    * file-naming contract, so file-level pruning is exact), lists only
+    * DIRECTORIES (the `partition=` leaves, O(#partitions × #dt-dirs)), and
+    * probes the candidate files by their deterministic names —
+    * O(#leaf-dirs × window/flushSize) FS ops, independent of total
+    * committed files. The relation is built from the probed statuses, so
+    * planning it lists and re-checks nothing. The offset filter stays on
+    * top for the boundary chunks' partial overlap.
     *
     * Equals `read(...).filter(fromOffset <= offset < untilOffset)` by
     * construction; falls back to exactly that when the topic dir predates
@@ -1393,13 +1646,10 @@ object OffsetNamedOrcSink {
           p = dir.getName.stripPrefix("partition=")
           c <- chunks
           f <- committedChunkFiles(fs, dir, f"${fileTopic(topic)}+$p+$c%010d")
-        } yield f.toString
+        } yield f
         if (files.isEmpty) fullScan
-        else spark.read.option("basePath", topicDir).orc(files: _*)
-          // row-pure grid (see read()): keeps the offset filter below
-          // pushdown-eligible
-          .withColumn(ChunkCol,
-            col("offset") - pmod(col("offset"), lit(flushSize)))
+        else sinkRelation(spark, fs, root, Some(files), Some(desc),
+            readMarker(fs, new Path(root, StatsMarker)))
           .filter(col("offset") >= fromOffset && col("offset") < untilOffset)
     }
   }
@@ -1683,17 +1933,8 @@ object OffsetNamedOrcSink {
     // re-read EXACTLY the touched chunks' files, with the latched schema
     // (mixed pre-/post-widening physical schemas — the read() contract)
     val files = touched.flatMap(t =>
-      committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic))
-        .map(_.toString))
-    val reader = readMarker(fs, new Path(root, SchemaMarker)) match {
-      case Some(json) =>
-        val latched = DataType.fromJson(json).asInstanceOf[StructType]
-        spark.read.schema(StructType(
-          org.apache.spark.sql.types.StructField("offset",
-            org.apache.spark.sql.types.LongType) +: latched.fields.toSeq))
-      case None => spark.read
-    }
-    val chunkRows = reader.option("basePath", topicDir).orc(files: _*)
+      committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic)))
+    val chunkRows = sinkRelation(spark, fs, root, Some(files), Some(desc), None)
       .withColumn(ChunkCol, cellCol)
     val nBefore = chunkRows.count()
     val valueCols = chunkRows.columns.toSeq
@@ -1720,7 +1961,7 @@ object OffsetNamedOrcSink {
         .mkString("\u0000")))
     emptyTouched.foreach(t =>
       committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic))
-        .foreach(f => fs.delete(f, false)))
+        .foreach(f => fs.delete(f.getPath, false)))
     if (liveTouched.nonEmpty)
       commitOverwrite(spark, fs, root, topicDir, topic, survivors, partCols,
         liveTouched)

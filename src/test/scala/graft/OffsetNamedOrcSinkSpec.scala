@@ -1443,4 +1443,199 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
     // idempotent: a second vacuum finds nothing
     assert(OffsetNamedOrcSink.vacuumOrphans(spark, topicDir).isEmpty)
   }
+
+  // ---------------------------------------------------------------- file skipping
+
+  /** `shaped` with a string column clustered by offset (`e00042`), so both
+    * the long (`id`) and the string (`etype`) stats ranges of a cell are
+    * narrow enough to skip on.
+    */
+  private lazy val clustered = shaped.withColumn("value", struct(
+    col("value.flag").as("flag"), col("value.uid").as("uid"),
+    col("value.id").as("id"), col("value.fval").as("fval"),
+    col("value.dval").as("dval"),
+    concat(lit("e"), lpad(col("offset").cast("string"), 5, "0")).as("etype")))
+
+  /** (ORC files the scan of `df` opened — its `numFiles` metric — and the
+    * sorted rows of `cols`), from one execution of `df`.
+    */
+  private def scanOf(df: org.apache.spark.sql.DataFrame,
+      cols: Seq[String]): (Long, Seq[String]) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val q = df.select(cols.map(col): _*)
+    val rows = q.collect().map(_.toString).sorted.toSeq
+    val plan = q.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val scans = plan.collect { case f: FileSourceScanExec => f }
+    assert(scans.size == 1, plan.toString.take(2000))
+    (scans.head.metrics("numFiles").value, rows)
+  }
+
+  /** `read(dir).filter(p)` against the same filter over a plain
+    * `spark.read.orc(dir)`: (files read() opened, files the plain scan
+    * opened), after asserting both return the same rows.
+    */
+  private def skipped(topicDir: String,
+      p: org.apache.spark.sql.Column): (Long, Long) = {
+    val plain = spark.read.orc(topicDir).filter(p)
+    val cols = plain.columns.toSeq.sorted
+    val (nSink, got) = scanOf(OffsetNamedOrcSink.read(spark, topicDir).filter(p), cols)
+    val (nPlain, want) = scanOf(plain, cols)
+    assert(got == want, s"read().filter($p) differs from the plain scan")
+    (nSink, nPlain)
+  }
+
+  test("read().filter skips files by chunk name and _graft_stats on every layout") {
+    val layouts: Seq[(String, Layout, Option[Long])] = Seq(
+      ("KafkaPartition", Layout.KafkaPartition, None),
+      ("TimeDaily", Layout.TimeDaily(), None),
+      ("Field", Layout.Field("flag"), None),
+      ("TimeMulti", Layout.TimeMulti(
+        Seq("year" -> "yyyy", "month" -> "MM", "day" -> "dd")), None),
+      ("rotateMs", Layout.KafkaPartition, Some(86400000L)))
+    val preds = Seq(
+      "offset" -> (col("offset") >= 300L && col("offset") < 420L),
+      "long stats" -> (col("id") >= 300L && col("id") < 420L),
+      "long stats, literal on the left" -> (lit(612L) === col("id")),
+      "string stats" -> (col("etype") >= "e00300" && col("etype") < "e00420"))
+    for ((name, layout, rotate) <- layouts) {
+      val topicDir = OffsetNamedOrcSink.write(clustered, freshOut(),
+        flushSize = 100, layout = layout, rotateMs = rotate,
+        statsColumns = Seq("id", "etype"))
+      for ((what, p) <- preds) {
+        val (nSink, nPlain) = skipped(topicDir, p)
+        assert(nSink > 0 && nSink < nPlain,
+          s"$name / $what: read().filter opened $nSink of $nPlain files")
+      }
+      // the chunk grid alone bounds an offset window: at most the window's
+      // two chunks' files in each dir (4 partitions × their time/field dirs)
+      val (nOffset, _) = skipped(topicDir, col("offset") >= 300L && col("offset") < 420L)
+      val (nAll, _) = skipped(topicDir, col("offset") >= 0L)
+      assert(nOffset * 3 <= nAll, s"$name: offset window opened $nOffset of $nAll")
+    }
+  }
+
+  test("read().filter skips nothing it cannot prove: OR, casts, column bounds, null cells, bad stats") {
+    // ids and etypes null below offset 300: those cells record the all-null
+    // sentinels, which always qualify
+    val withNulls = clustered.withColumn("value", struct(
+      col("value.flag").as("flag"), col("value.uid").as("uid"),
+      when(col("offset") >= 300, col("value.id")).as("id"),
+      col("value.fval").as("fval"), col("value.dval").as("dval"),
+      when(col("offset") >= 300, col("value.etype")).as("etype")))
+    val out = freshOut()
+    val topicDir = OffsetNamedOrcSink.write(withNulls, out, flushSize = 100,
+      statsColumns = Seq("id", "etype"))
+    val (nAll, _) = skipped(topicDir, lit(true))
+    val nullCellFiles = orcFiles(topicDir).count(f =>
+      f.getName.matches(raw"events\+\d\+0000000[012]00\.orc"))
+    assert(nullCellFiles > 0)
+    for ((what, p) <- Seq(
+        "OR" -> (col("id") < 350L || col("id") >= 950L),
+        "OR on offset" -> (col("offset") < 350L || col("offset") >= 950L),
+        "cast column" -> (col("id").cast("string") === "512"),
+        "column bound" -> (col("id") >= col("uid")))) {
+      val (n, _) = skipped(topicDir, p)
+      assert(n == nAll, s"$what skipped files: opened $n of $nAll")
+    }
+    // all-null cells are read; only the non-null cells outside the window skip
+    val window = col("id") >= 500L && col("id") < 600L
+    val strWindow = col("etype") >= "e00500" && col("etype") < "e00600"
+    for (p <- Seq(window, strWindow)) {
+      val (n, _) = skipped(topicDir, p)
+      assert(n >= nullCellFiles && n < nAll, s"$p opened $n of $nAll")
+    }
+    // pre-rowcount lines (one field shorter) still skip; a corrupt stats
+    // marker, then an absent one, skip nothing by stats and stay exact (the
+    // chunk names still bound offsets). Raw rewrites drop the checksum file.
+    val stats = new java.io.File(topicDir, "_graft_stats")
+    def rewriteStats(f: String => String): Unit = {
+      val text = new String(Files.readAllBytes(stats.toPath), "UTF-8")
+      Files.write(stats.toPath, f(text).getBytes("UTF-8"))
+      Files.deleteIfExists(new java.io.File(topicDir, "._graft_stats.crc").toPath)
+    }
+    val fresh = skipped(topicDir, window)._1
+    rewriteStats(_.linesIterator.filter(_.nonEmpty)
+      .map(_.split("\\|", -1).patch(2, Nil, 1).mkString("|")).mkString("\n"))
+    assert(skipped(topicDir, window)._1 == fresh)
+    rewriteStats(_ + "\n0|0|not-a-number")
+    assert(skipped(topicDir, window)._1 == nAll)
+    assert(skipped(topicDir, strWindow)._1 == nAll)
+    assert(skipped(topicDir, col("offset") >= 500L && col("offset") < 600L)._1 < nAll)
+    assert(stats.delete())
+    assert(skipped(topicDir, window)._1 == nAll)
+    assert(skipped(topicDir, strWindow)._1 == nAll)
+  }
+
+  /** Spark jobs started while `body` runs. Listener events arrive in order,
+    * so once a sentinel job that starts after `body` is seen, every job
+    * `body` started has been counted.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sentinel = s"graft-sentinel-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(sentinel), "sentinel job never reached the listener")
+      (out, seen.toArray.takeWhile(_ != sentinel).length)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("readRange/readAsOf/readAsOfStr over 33+ files plan with no Spark job; inputFiles = probed files") {
+    // flush.size 25 → 160 committed files, well past the 32-path threshold
+    // at which a path-list read starts a parallel-listing job
+    val topicDir = OffsetNamedOrcSink.write(clustered, freshOut(), flushSize = 25,
+      statsColumns = Seq("uid", "etype"))
+    val onDisk = orcFiles(topicDir).map(_.getAbsolutePath).toSet
+    val reads: Seq[(String, () => org.apache.spark.sql.DataFrame, Long)] = Seq(
+      ("readRange", () => OffsetNamedOrcSink.readRange(spark, topicDir, 0L, 1000L), 1000L),
+      ("readAsOf", () => OffsetNamedOrcSink.readAsOf(spark, topicDir, "uid",
+        Int.MinValue.toLong, Int.MaxValue.toLong), 1000L),
+      ("readAsOfStr", () => OffsetNamedOrcSink.readAsOfStr(spark, topicDir, "etype",
+        "e00000", "e00800"), 800L))
+    for ((name, read, rows) <- reads) {
+      FsAudit.reset(); FsAudit.enabled = true
+      val (df, jobs) = try jobsDuring(read()) finally FsAudit.enabled = false
+      assert(jobs == 0, s"$name started $jobs Spark job(s) before the action")
+      val input = df.inputFiles.map(f => new java.net.URI(f).getPath).toSet
+      // exactly the committed files whose exact-name probes ran
+      val prefixes = FsAudit.probes.toArray.map(_.toString.stripPrefix("file:")).toSet
+      val probed = onDisk.filter(f =>
+        prefixes(f.replaceAll("(-\\d+)?\\.orc$", "")))
+      assert(input.size >= 33 && input == probed,
+        s"$name: ${input.size} input files, ${probed.size} probed")
+      assert(df.count() == rows, name)
+    }
+  }
+
+  test("two read()s of one topic plan the same result: read(d).cache() serves read(d)") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val topicDir = OffsetNamedOrcSink.write(shaped, freshOut(), flushSize = 250)
+    val first = OffsetNamedOrcSink.read(spark, topicDir)
+    assert(first.queryExecution.analyzed.sameResult(
+      OffsetNamedOrcSink.read(spark, topicDir).queryExecution.analyzed))
+    first.cache()
+    try {
+      assert(first.count() == 1000)
+      val again = OffsetNamedOrcSink.read(spark, topicDir).filter(col("offset") < 100L)
+      assert(again.queryExecution.withCachedData.exists(_.isInstanceOf[InMemoryRelation]),
+        again.queryExecution.withCachedData.treeString.take(2000))
+      assert(again.count() == 100)
+    } finally { first.unpersist(); () }
+  }
 }
