@@ -1,20 +1,31 @@
 package graft.streaming
 
-import java.io.FileNotFoundException
+import java.io.{FileNotFoundException, IOException}
 import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftOutputMetrics,
+  SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
-  EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan,
-  LessThanOrEqual, Literal}
+  BoundReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual,
+  LessThan, LessThanOrEqual, Literal, UnsafeProjection}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache,
-  HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
+  HadoopFsRelation, InMemoryFileIndex, OutputWriter, OutputWriterFactory,
+  PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Offset-named, rotation-chunked, idempotent ORC sink — the one piece of the
   * reference that Spark's file sink does not provide (SURVEY.md §4
@@ -29,12 +40,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * Design for scale:
   *  - rotation (flush.size, reference O9) = offset-range chunking, computed
   *    as a column, so the whole write stays distributed;
-  *  - `repartition(layout cols, chunk)` co-locates each output file's rows in
-  *    one task → exactly one ORC file per leaf, written in parallel across
-  *    the cluster;
-  *  - `partitionBy` + dynamic partition overwrite makes re-processing an
-  *    offset range idempotent (reference O11's `overwrite(true)` recovery
-  *    contract, `DataWriterOrcTest.java:102-124`);
+  *  - one write job per commit, the reference's one `RecordWriter` per
+  *    output file (`OrcRecordWriterProvider.java:11-31`): one shuffle sends
+  *    each touched leaf's rows to one task, round-robin over
+  *    min(#leaves, defaultParallelism) tasks so the files are written in
+  *    parallel, and the task writes them sorted by offset as exactly one
+  *    ORC file in the leaf's `_chunk=` staging dir;
+  *  - re-processing an offset range is idempotent (reference O11's
+  *    `overwrite(true)` recovery contract, `DataWriterOrcTest.java:102-124`):
+  *    the hoist replaces a leaf's committed file with the staged one, and
+  *    the rows a leaf already holds are read back into the same job and
+  *    deduplicated by offset;
   *  - the rename to reference-style names is a driver-side, metadata-only
   *    pass that in steady state touches ONLY this batch's `(partition,
   *    chunk)` dirs — O(files-in-this-batch) FS ops per commit, independent
@@ -51,7 +67,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Durability protocol (one commit per rotation file, `FileUtils.java:10-26`):
   *  1. `_graft_inflight` marker is created (listing the touched leaves);
-  *  2. the overwrite job commits rows into transient `_chunk=` staging dirs;
+  *  2. the write job stages one file per touched leaf in a transient
+  *     `_chunk=` dir;
   *  3. the touched staging dirs are hoisted to committed offset names;
   *  4. the marker is deleted.
   * A crash anywhere in 1–4 leaves the marker behind; the next `write` (or
@@ -397,6 +414,8 @@ object OffsetNamedOrcSink {
     }
     def filePrefix(topic: String): String =
       cellFilePrefix(topic, partition.toString, cell)
+    /** The leaf's key, as `leafKey` renders it from a row. */
+    def key: String = (prefix.map(_._2) ++ Seq(partition.toString, cell)).mkString("\u0000")
   }
 
   /** Write a Kafka-shaped DataFrame (key, value:struct, topic, partition,
@@ -404,13 +423,13 @@ object OffsetNamedOrcSink {
     *
     * Chunk-spanning batches: a rotation chunk only partially covered by this
     * batch may already hold rows from an earlier batch (micro-batch
-    * boundaries are not flush-size-aligned). Dynamic overwrite would delete
-    * those rows, so the touched chunks' existing files — located exactly, by
-    * their deterministic names — are read back, eagerly MATERIALIZED
-    * (`localCheckpoint`), unioned in, and deduped by offset. Replay-safe AND
-    * batch-boundary-safe, and the write job never scans the directory it is
-    * about to overwrite (no dependence on the V1 path-check loophole). Cost
-    * is O(touched chunks × flushSize), never O(output).
+    * boundaries are not flush-size-aligned). The chunk's staged file
+    * replaces its committed one, so the touched chunks' existing files —
+    * located exactly, by their deterministic names — are read back into the
+    * same write job and deduplicated by offset per leaf. The read-back is
+    * lazy: the committed files it reads are deleted only by the hoist, after
+    * the job has ended. Replay-safe AND batch-boundary-safe. Cost is
+    * O(touched chunks × flushSize), never O(output).
     */
   def write(df: DataFrame, outDir: String, flushSize: Long,
       topic: String = "events",
@@ -562,50 +581,54 @@ object OffsetNamedOrcSink {
             .withColumn(ChunkCol, existingCell)
             // realign column order/types to flat's
             .select(flat.schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
-            // materialize NOW: after this the write job holds the old rows in
-            // memory and never reads under topicDir (ADVICE r1: dynamic
-            // overwrite must not scan its own output path)
-            .localCheckpoint(true)
         } finally spark.conf.set(inferKey, prevInfer)
-        // offsets are unique only per partition (Kafka contract) — a global
-        // offset dedup would drop same-offset rows across partitions
-        flat.union(existing).dropDuplicates("partition", "offset")
+        flat.union(existing)
       }
+    // a replayed offset meets its committed copy only through the
+    // read-back, so only then does the write job deduplicate — per leaf,
+    // i.e. per partition: offsets are unique only per partition (Kafka
+    // contract)
+    val dedup = existingPaths.nonEmpty
 
     // per-cell column stats (file-skipping metadata, the Delta-log idea):
     // recorded BEFORE the commit so a crash mid-commit leaves stats that
     // describe the post-recovery content — `merged` IS the full new content
     // of every touched cell, so replacing those cells' lines is exact
     if (statsColumns.nonEmpty)
-      updateStats(fs, root, merged, partCols, touched, statsColumns)
-    commitOverwrite(spark, fs, root, topicDir, topic, merged, partCols, touched,
-      orcOptions)
+      updateStats(fs, root, merged, partCols, touched, statsColumns, dedup)
+    commit(spark, fs, root, topic, merged, partCols, touched, orcOptions, dedup)
     topicDir
   }
 
   /** The distinct output leaves of a flattened batch. One driver-side
     * collect, bounded by files-in-this-batch (prefix cols cast to string:
     * the batch API builds them as strings, but compaction's read-back may
-    * infer other types from the dirs).
+    * infer other types from the dirs). Each input partition is deduplicated
+    * in its task and the driver merges the rest: one job and no shuffle,
+    * where `distinct()` costs a shuffle and, under adaptive execution, a
+    * second job.
     */
   private def touchedLeaves(flat: DataFrame, partCols: Seq[String]): Seq[Touched] = {
     val prefixNames = partCols.dropRight(2)
-    val sel = prefixNames.map(n => col(n).cast("string")) ++
-      Seq(col("partition").cast("int"), col(ChunkCol).cast("string"))
-    flat.select(sel: _*).distinct().collect().toSeq.map { r =>
+    val leaves = flat.select(prefixNames.map(n => col(n).cast("string")) ++
+      Seq(col("partition").cast("int"), col(ChunkCol).cast("string")): _*)
+    leaves.mapPartitions(_.distinct)(Encoders.row(leaves.schema))
+      .collect().distinct.toSeq.map { r =>
       Touched(prefixNames.zipWithIndex.map { case (n, i) => n -> r.getString(i) },
         r.getInt(prefixNames.size), r.getString(prefixNames.size + 1))
     }
   }
 
-  /** The shared commit step (write + compact): in-flight marker → dynamic
-    * partition overwrite → hoist ONLY the touched leaves to their committed
+  /** The shared commit step (write, compactTo, deleteRows): in-flight
+    * marker → one write job staging each touched leaf's file
+    * (`writeLeaves`) → hoist ONLY the touched leaves to their committed
     * offset names → drop the marker. Never a directory walk.
     */
-  private def commitOverwrite(spark: SparkSession, fs: FileSystem, root: Path,
-      topicDir: String, topic: String, flat: DataFrame,
-      partCols: Seq[String], touched: Seq[Touched],
-      orcOptions: Map[String, String] = Map.empty): Unit = {
+  private def commit(spark: SparkSession, fs: FileSystem, root: Path,
+      topic: String, rows: DataFrame, partCols: Seq[String],
+      touched: Seq[Touched], orcOptions: Map[String, String],
+      dedup: Boolean): Unit = {
+    if (touched.isEmpty) return
     val inflight = new Path(root, InflightMarker)
     // marker line = url-encoded prefix values, partition, chunk, '|'-joined.
     // URL-encoding makes the split unambiguous for arbitrary Field values
@@ -616,25 +639,125 @@ object OffsetNamedOrcSink {
         (t.prefix.map(p => java.net.URLEncoder.encode(p._2, "UTF-8")) ++
           Seq(t.partition.toString, t.cell)).mkString("|"))
         .mkString("\n"))
-    val prevMode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      flat
-        .repartition(partCols.map(col): _*)
-        .sortWithinPartitions(col("offset"))
-        .write.mode("overwrite")
-        // ORC writer tuning (e.g. orc.bloom.filter.columns /
-        // orc.bloom.filter.fpp): Spark forwards data-source options into
-        // the ORC writer configuration, so point-lookup columns get bloom
-        // streams in every row-group index of the committed files
-        .options(orcOptions)
-        .partitionBy(partCols: _*)
-        .orc(topicDir)
-    } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+    writeLeaves(spark, root, rows, partCols, touched, orcOptions, dedup)
     touched.foreach(t =>
       hoistChunkDir(fs, t.partitionDir(root), t.partition.toString, t.cell, topic))
     fs.delete(inflight, false)
     ()
+  }
+
+  /** The name a staged leaf file ends up with in its `_chunk=` dir. */
+  private val PartFile = "part-00000.orc"
+
+  /** Column carrying each row's index into the touched leaves. */
+  private val LeafCol = "_leaf"
+
+  /** A row's leaf key, in the form `Touched.key` renders. */
+  private def leafKey(prefixNames: Seq[String]): Column =
+    concat_ws("\u0000", prefixNames.map(n => col(n).cast("string")) ++
+      Seq(col("partition").cast("int").cast("string"),
+        col(ChunkCol).cast("string")): _*)
+
+  /** The commit's one write job: every touched leaf's rows become exactly
+    * one ORC file, `part-00000.orc` in the leaf's `_chunk=<cell>` staging
+    * dir, holding the columns `rows` carries besides the layout ones, in
+    * their order.
+    *
+    * Leaf i goes to task i mod n, n = min(#leaves, defaultParallelism): one
+    * shuffle (`repartitionById`, which adaptive execution never coalesces)
+    * spreads the files across cores, no task writing more than
+    * ⌈leaves / n⌉ of them. Each task sorts its rows by (leaf, offset) and
+    * streams them through `LeafWriter`, whose writers come from
+    * `OrcFileFormat.prepareWrite` with the session's ORC settings plus
+    * `orcOptions` — what `df.write.options(orcOptions).orc` applies.
+    */
+  private def writeLeaves(spark: SparkSession, root: Path, rows: DataFrame,
+      partCols: Seq[String], touched: Seq[Touched],
+      orcOptions: Map[String, String], dedup: Boolean): Unit = {
+    val leafOf = touched.zipWithIndex.map { case (t, i) => t.key -> i }.toMap
+    val leaf = udf((k: String) => leafOf.getOrElse(k,
+      throw new IllegalStateException(s"row outside the touched leaves: $k")))
+    val n = math.min(touched.size, spark.sparkContext.defaultParallelism)
+    val planned = rows
+      .withColumn(LeafCol, leaf(leafKey(partCols.dropRight(2))))
+      .repartitionById(n, col(LeafCol) % n)
+      .sortWithinPartitions(LeafCol, "offset")
+      .select((LeafCol +: rows.columns.toSeq.filterNot(partCols.contains)).map(col): _*)
+    val dataSchema = StructType(planned.schema.fields.tail)
+    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(orcOptions))
+    val factory = new OrcFileFormat().prepareWrite(spark, job, orcOptions, dataSchema)
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
+    val writer = new LeafWriter(
+      touched.map(t => new Path(t.partitionDir(root), s"$ChunkCol=${t.cell}").toString).toArray,
+      factory, dataSchema, conf, dedup)
+    try SQLExecution.withNewExecutionId(planned.queryExecution, Some(s"commit $root")) {
+      spark.sparkContext.runJob(planned.queryExecution.toRdd,
+        (ctx: TaskContext, it: Iterator[InternalRow]) => writer.write(ctx, it))
+    } finally conf.destroy()
+    ()
+  }
+
+  /** The task side of `writeLeaves`. Rows arrive as (leaf index, data
+    * columns…), sorted by leaf then offset; with `dedup` a leaf keeps the
+    * first row of each offset. A leaf's rows stream into a hidden,
+    * attempt-unique `.attempt-<task attempt id>.orc` in its staging dir,
+    * which on close replaces the dir's one `part-00000.orc`: a retried
+    * attempt overwrites the part file rather than adding a second, and a
+    * failed attempt's temp file is deleted with the dir by the hoist.
+    * Records and bytes written go to the task's OutputMetrics.
+    */
+  private final class LeafWriter(dirs: Array[String],
+      factory: OutputWriterFactory, dataSchema: StructType,
+      conf: Broadcast[SerializableConfiguration], dedup: Boolean)
+      extends Serializable {
+    def write(ctx: TaskContext, rows: Iterator[InternalRow]): Unit = {
+      val hadoopConf = conf.value.value
+      val attempt = new TaskAttemptContextImpl(hadoopConf, new TaskAttemptID(
+        "graft", ctx.stageId(), TaskType.MAP, ctx.partitionId(), ctx.attemptNumber()))
+      val data = UnsafeProjection.create(dataSchema.fields.toSeq.zipWithIndex.map {
+        case (f, i) => BoundReference(i + 1, f.dataType, f.nullable)
+      })
+      val offsetAt = dataSchema.fieldIndex("offset") + 1
+      var leaf = -1
+      var last = 0L
+      var records = 0L
+      var tmp: Path = null
+      var out: OutputWriter = null
+      def finish(): Unit = if (out != null) {
+        out.close()
+        out = null
+        val fs = tmp.getFileSystem(hadoopConf)
+        val bytes = fs.getFileStatus(tmp).getLen
+        val part = new Path(tmp.getParent, PartFile)
+        // a rename onto an existing file fails on some file systems
+        if (!fs.rename(tmp, part) && !(fs.delete(part, false) && fs.rename(tmp, part)))
+          throw new IOException(s"rename $tmp -> $part failed")
+        GraftOutputMetrics.add(records, bytes)
+        records = 0L
+      }
+      try {
+        rows.foreach { r =>
+          val l = r.getInt(0)
+          val offset = r.getLong(offsetAt)
+          if (l != leaf) {
+            finish()
+            leaf = l
+            tmp = new Path(dirs(l), s".attempt-${ctx.taskAttemptId()}.orc")
+            out = factory.newInstance(tmp.toString, dataSchema, attempt)
+          }
+          if (records == 0L || !dedup || offset != last) {
+            out.write(data(r))
+            records += 1
+          }
+          last = offset
+        }
+        finish()
+      } catch {
+        case e: Throwable =>
+          if (out != null) try out.close() catch { case NonFatal(_) => () }
+          throw e
+      }
+    }
   }
 
   /** Mixed-topic batch: one topic dir per topic, offsets deduped per
@@ -882,16 +1005,16 @@ object OffsetNamedOrcSink {
     // renames and its dir delete — the committed files ARE the data;
     // touching them here would destroy the only copy
     if (parts.nonEmpty) {
-      // exactly one part per chunk is an invariant (repartition on the leaf
-      // cols upstream). The old defensive multi-part branch was itself
-      // unsafe under crash-recovery: re-running it after a crash mid-rename
-      // would first DELETE the parts already renamed to committed names and
-      // then re-hoist only the survivors — losing data. Fail loudly instead;
-      // the staging dir and in-flight marker stay for manual inspection.
+      // exactly one part per chunk is an invariant (the leaf writer stages
+      // one fixed-name file per leaf). A multi-part hoist would be unsafe
+      // under crash-recovery: re-running it after a crash mid-rename would
+      // first DELETE the parts already renamed to committed names and then
+      // re-hoist only the survivors — losing data. Fail loudly instead; the
+      // staging dir and in-flight marker stay for manual inspection.
       if (parts.size > 1)
         throw new IllegalStateException(
           s"$cDir holds ${parts.size} part files — the one-file-per-chunk " +
-            "repartition invariant is broken; refusing to hoist (a multi-part " +
+            "invariant is broken; refusing to hoist (a multi-part " +
             "rename pass is not crash-idempotent). Staging dir kept.")
       committedChunkFiles(fs, pDir, prefix).foreach(f => fs.delete(f.getPath, false))
       val t = new Path(pDir, s"$prefix.orc")
@@ -1314,13 +1437,15 @@ object OffsetNamedOrcSink {
     * token `!null` — URLEncoder never emits a bare '!', so the sentinel
     * cannot collide with a real value. Touched cells' lines are REPLACED
     * (merged is their full new content); an all-null cell column records
-    * the always-qualifying sentinel range. One driver collect, bounded by
+    * the always-qualifying sentinel range. With `distinctOffsets` the row
+    * count is the cell's distinct offsets — what the commit's per-leaf
+    * dedup keeps of `merged`. One driver collect, bounded by
     * files-in-this-batch like touchedLeaves; adding a column adds two agg
     * buffers, never a second pass.
     */
   private def updateStats(fs: FileSystem, root: Path, merged: DataFrame,
       partCols: Seq[String], touched: Seq[Touched],
-      statsCols: Seq[String]): Unit = {
+      statsCols: Seq[String], distinctOffsets: Boolean): Unit = {
     statsCols.foreach(c => require(merged.columns.contains(c),
       s"stats column '$c' is not an emitted column " +
         s"(${merged.columns.mkString(", ")})"))
@@ -1330,14 +1455,14 @@ object OffsetNamedOrcSink {
     val keyCols = prefixNames.map(n => col(n).cast("string").as(n)) ++
       Seq(col("partition").cast("int").as("partition"),
         col(ChunkCol).cast("string").as(ChunkCol))
-    val aggCols = count(lit(1L)).as("nr") +:
+    val nRows = if (distinctOffsets) count_distinct(col("offset")) else count(lit(1L))
+    val aggCols = nRows.as("nr") +:
       statsCols.zipWithIndex.flatMap { case (c, i) =>
         val v = if (isStr(i)) col(c) else col(c).cast("long")
         Seq(min(v).as(s"mn$i"), max(v).as(s"mx$i"))
       }
     val rows = merged
-      .select(keyCols ++ statsCols.map(col): _*)
-      .groupBy((prefixNames :+ "partition" :+ ChunkCol).map(col): _*)
+      .groupBy(keyCols: _*)
       .agg(aggCols.head, aggCols.tail: _*)
       .collect()
     def enc(v: String) = java.net.URLEncoder.encode(v, "UTF-8")
@@ -1694,7 +1819,7 @@ object OffsetNamedOrcSink {
     * unchanged, just with fewer, larger files). The dt/partition layout is
     * carried over from the source dirs (no timestamp re-derivation — the
     * files do not store the record timestamp). Runs through the same
-    * marker → overwrite → hoist commit protocol as `write`, so a crashed
+    * marker → leaf write → hoist commit protocol as `write`, so a crashed
     * compaction recovers the same way; the incomplete output dir is simply
     * re-compacted (the source dir is never mutated). Swapping the compacted
     * dir in place of the source is the caller's move — on a rename-capable
@@ -1760,9 +1885,10 @@ object OffsetNamedOrcSink {
     // orcOptions ride the same path as write() — compaction must not strip
     // the topic's bloom filters.
     if (statsCols.nonEmpty && statsCols.forall(flat.columns.contains))
-      updateStats(newFs, newRoot, flat, partCols, touched, statsCols)
-    commitOverwrite(spark, newFs, newRoot, newTopicDir, topic, flat, partCols,
-      touched, orcOptions)
+      updateStats(newFs, newRoot, flat, partCols, touched, statsCols,
+        distinctOffsets = false)
+    commit(spark, newFs, newRoot, topic, flat, partCols, touched, orcOptions,
+      dedup = false)
     newTopicDir
   }
 
@@ -1815,8 +1941,9 @@ object OffsetNamedOrcSink {
     * runs (Delta VACUUM / Iceberg remove_orphan_files): remove debris a
     * crashed or interrupted writer left behind, without ever touching
     * crash-recovery evidence. Removed:
-    *   - `.spark-staging-*` / `_temporary` dirs at any level (dynamic
-    *     overwrite's job staging; recovery never reads them — replay
+    *   - `.spark-staging-*` / `_temporary` dirs at any level (the job
+    *     staging of Spark's own file writers, which wrote this sink's
+    *     commits before the leaf writer; recovery never reads them — replay
     *     rewrites the batch — so after a crash they are dead weight);
     *   - files inside a `partition=` leaf whose name is not the committed
     *     `<topic>+<p>+<chunk>[+t<bucket>][-N].orc` shape FOR THAT leaf
@@ -1878,12 +2005,11 @@ object OffsetNamedOrcSink {
     * the chunks that hold such rows. Untouched chunks are never read for
     * data or rewritten; touched chunks are re-read by their EXACT committed
     * names (the committedChunkFiles probes — no directory scan of the data)
-    * and their survivors recommitted through the same marker → dynamic
-    * overwrite → hoist protocol as write(), so a crash mid-erasure recovers
+    * and their survivors recommitted through the same marker → leaf write
+    * → hoist protocol as write(), so a crash mid-erasure recovers
     * identically and the operation is re-runnable until it returns 0.
     * Chunks left with NO survivors have their committed files deleted
-    * directly (a dynamic overwrite cannot express an empty partition);
-    * those deletes are idempotent single FS ops, done before the rewrite so
+    * directly (a leaf with no rows stages no file to hoist); those deletes are idempotent single FS ops, done before the rewrite so
     * any crash leaves only convergent work. Non-matching rows are only ever
     * rewritten, never dropped; rows where the predicate evaluates NULL are
     * kept (deleted ⟺ predicate TRUE — the SQL DELETE contract).
@@ -1891,9 +2017,9 @@ object OffsetNamedOrcSink {
     * Finding the touched chunks takes one full read of the topic (a
     * maintenance-path listing, like compactTo/expire) — but the REWRITE is
     * O(touched chunks × flushSize), never O(topic). Survivor rows are
-    * localCheckpoint-materialized before the overwrite, because the
-    * overwrite deletes the very files they came from (the write()-merge
-    * invariant). Returns #rows deleted.
+    * localCheckpoint-materialized before the commit, because the stats
+    * refresh reads them again after the hoist has replaced the very files
+    * they came from. Returns #rows deleted.
     */
   def deleteRows(spark: SparkSession, topicDir: String,
       predicate: org.apache.spark.sql.Column): Long = {
@@ -1949,8 +2075,8 @@ object OffsetNamedOrcSink {
     val deleted = nBefore - survivors.count()
     if (deleted == 0L) return 0L
 
-    // chunks with zero survivors can't be expressed by the overwrite —
-    // delete their committed files directly (idempotent, convergent)
+    // chunks with zero survivors stage nothing — delete their committed
+    // files directly (idempotent, convergent)
     val alive = survivors
       .select(partCols.map(c => col(c).cast("string")): _*)
       .distinct().collect()
@@ -1963,15 +2089,16 @@ object OffsetNamedOrcSink {
       committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic))
         .foreach(f => fs.delete(f.getPath, false)))
     if (liveTouched.nonEmpty)
-      commitOverwrite(spark, fs, root, topicDir, topic, survivors, partCols,
-        liveTouched)
+      commit(spark, fs, root, topic, survivors, partCols, liveTouched,
+        Map.empty, dedup = false)
     // stats refresh AFTER the commit: erased rows must stop being described
     // by the skipping metadata (a stale min/max is only a safe
     // over-approximation until then), and the post-commit order means a
     // crash can never leave stats NARROWER than the surviving data
     statsColsOf(desc).foreach { sc =>
       if (sc.forall(survivors.columns.contains) && liveTouched.nonEmpty)
-        updateStats(fs, root, survivors, partCols, liveTouched, sc)
+        updateStats(fs, root, survivors, partCols, liveTouched, sc,
+          distinctOffsets = false)
       removeStatsLines(fs, root, emptyTouched)
     }
     deleted

@@ -1638,4 +1638,99 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
       assert(again.count() == 100)
     } finally { first.unpersist(); () }
   }
+
+  // ---------------------------------------------------------------- leaf writer
+
+  /** Each offset of `topicDir` read back exactly once, and no `_chunk=`
+    * staging dir left behind.
+    */
+  private def assertCleanOnce(topicDir: String, rows: Long): Unit = {
+    val back = OffsetNamedOrcSink.read(spark, topicDir)
+    assert(back.count() == rows, s"rows: ${back.count()}")
+    assert(back.select("partition", "offset").distinct().count() == rows)
+    val staging = new java.io.File(topicDir).listFiles.filter(_.isDirectory)
+      .flatMap(_.listFiles).filter(_.getName.startsWith("_chunk="))
+    assert(staging.isEmpty, staging.mkString(", "))
+  }
+
+  test("maxRecordsPerFile below a chunk's rows still commits one file per chunk") {
+    // Spark's file writers split a task's output at maxRecordsPerFile; the
+    // sink's leaf writer writes each chunk as exactly one file whatever the
+    // session sets, so the hoist never meets a multi-part staging dir
+    val key = "spark.sql.files.maxRecordsPerFile"
+    val prev = spark.conf.getOption(key)
+    val out = freshOut()
+    val topicDir = try {
+      spark.conf.set(key, "10")
+      OffsetNamedOrcSink.write(shaped.filter(col("offset") < 2000), out, flushSize = 250)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(!new java.io.File(topicDir, "_graft_inflight").exists)
+    assertCleanOnce(topicDir, 1000)
+    val files = orcFiles(topicDir).map(_.getName)
+    assert(files.forall(raw"events\+\d+\+\d{10}\.orc".r.matches(_)), files.mkString(", "))
+    val cells = OffsetNamedOrcSink.read(spark, topicDir)
+      .select("partition", OffsetNamedOrcSink.ChunkCol).distinct().count()
+    assert(files.length == cells)
+  }
+
+  test("a replay half-covering a committed chunk keeps _graft_stats row counts exact") {
+    val ev = Tables(spark, sf, "events")
+    val shaped = ev.select(
+      col("user_id").cast("string").cast("binary").as("key"),
+      struct(col("event_id").as("id"), unix_micros(col("ts")).as("tsu"),
+        col("event_type").as("etype")).as("value"),
+      lit("nrows").as("topic"),
+      pmod(col("user_id"), lit(4)).cast("int").as("partition"),
+      col("event_id").as("offset"),
+      col("ts").as("timestamp"))
+    val out = freshOut()
+    def write(df: org.apache.spark.sql.DataFrame) = OffsetNamedOrcSink.write(df, out,
+      flushSize = 100, topic = "nrows", statsColumns = Seq("tsu"))
+    val topicDir = write(shaped)
+    def manifest = OffsetNamedOrcSink.manifest(spark, topicDir)
+      .select("partition", "chunk", "stats_lo", "stats_hi", "n_rows")
+    val before = manifest.collect().toSet
+    // offsets [100, 150) replay half of chunk 100: merged holds those rows
+    // twice, the committed chunk once
+    write(shaped.filter(col("offset") >= 100 && col("offset") < 150))
+    val truth = OffsetNamedOrcSink.read(spark, topicDir)
+      .groupBy(col("partition"), col("_chunk").as("chunk"))
+      .agg(count(lit(1)).as("n_rows"))
+    val after = manifest
+    assert(after.select("partition", "chunk", "n_rows")
+      .exceptAll(truth).count() == 0 &&
+      truth.exceptAll(after.select("partition", "chunk", "n_rows")).count() == 0,
+      after.collect().mkString(", "))
+    assert(after.collect().toSet == before, "min/max or row counts moved")
+    assertCleanOnce(topicDir, 1000)
+  }
+
+  test("recovery hoists only the part file of a staging dir, never an attempt's temp file") {
+    val out = freshOut()
+    val topicDir = OffsetNamedOrcSink.write(shaped.filter(col("offset") < 437), out, 250)
+    val pDir = new java.io.File(topicDir, "partition=0")
+    def committed(chunk: String) =
+      pDir.listFiles.filter(_.getName == s"events+0+$chunk.orc").head
+    // a crash after the write job: chunk 250's staged part file, plus the
+    // temp file of a failed attempt holding other rows (chunk 0's)
+    val staging = new java.io.File(pDir, "_chunk=250")
+    assert(staging.mkdir())
+    Files.copy(committed("0000000000").toPath,
+      new java.io.File(staging, ".attempt-7.orc").toPath)
+    assert(committed("0000000250").renameTo(new java.io.File(staging, "part-00000.orc")))
+    leaveInflightMarker(out, "0|250")
+    assertCleanOnce(topicDir, 437)
+    assert(!staging.exists())
+    // a retried attempt replaces the part file an earlier attempt of the
+    // same commit staged: a stale part-00000.orc (chunk 0's rows again) in
+    // chunk 250's staging dir is overwritten by the leaf's file, not hoisted
+    // next to it
+    assert(new java.io.File(topicDir, "_graft_inflight").delete())
+    assert(staging.mkdir())
+    Files.copy(committed("0000000000").toPath,
+      new java.io.File(staging, "part-00000.orc").toPath)
+    OffsetNamedOrcSink.write(shaped.filter(col("offset") >= 437), out, 250)
+    assertCleanOnce(topicDir, 1000)
+    assert(!new java.io.File(topicDir, "_graft_inflight").exists)
+  }
 }
