@@ -56,46 +56,14 @@ object Bench {
       val mine = passes.map(_.find(_._1 == name).get)
       (name, mine.map(_._2).min, mine.forall(_._3))
     }
-    // ms precision: full-double seconds ballooned the line past the
-    // driver's tail capture (BENCH_r02.json arrived truncated mid-JSON).
-    // Locale.ROOT: the f interpolator formats with the JVM default locale,
-    // and a comma decimal separator would corrupt the JSON line.
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qjson = results.map { case (k, v, ok) =>
-      s"\"" + k + "\":" + (if (ok) fmt(v) else "null")
-    }.mkString("{", ",", "}")
-    val errs = results.collect { case (k, _, false) => s"\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = results.collect { case (_, v, true) => v }.sum
-    // Two lines: the full per-query detail first, then a SHORT summary line
-    // LAST. The driver's tail capture truncated the single long line two
-    // rounds running (r2 and r3 both lost the head fields); a final line
-    // under 200 bytes survives any tail window and parses on its own.
-    println(s"""{"metric":"detail","runs":$nRuns,"queries":$qjson,"errors":$errs,"sf":"$sfDir"}""")
-    // Mid-size per-family rollup (<1.5 KB): the ~12 KB detail line exceeds
-    // the driver's ~2,000-char stdout tail every round, so the tail's last
-    // complete JSON lines are this rollup plus the short total below —
-    // enough to reconstruct family-level regressions when the detail line
-    // is truncated. Key is "families" (not "queries") so no parser can
-    // mistake it for the per-query contract map. Families are the q_<fam>
-    // name prefix; per-query ground truth stays in the detail line and the
-    // committed bench_latest.json.
-    val fams = results.groupBy { case (k, _, _) =>
-      k.split('_').take(2).mkString("_")
-    }.toSeq.sortBy(_._1).map { case (f, rs) =>
-      // ok-only sum, matching the total line's semantics
-      s"\"" + f + "\":" + fmt(rs.collect { case (_, v, true) => v }.sum)
-    }.mkString("{", ",", "}")
-    println(s"""{"metric":"rollup","families":$fams,"sf":"$sfDir"}""")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","runs":$nRuns,"nqueries":${qs.size},"nerrors":${results.count(!_._3)},"sf":"$sfDir"}""")
+    lines(results, nRuns, sfDir).foreach(println)
     // The round artifact (BENCH_r0N.json) keeps only a truncated stdout tail
     // — most per-query timings were lost to it every round. Persist the FULL
     // name→min-seconds map as a committed file so round-over-round regression
     // diffing never depends on prose capture. Full runs only: a
     // SPARK_GRAFT_BENCH_ONLY subset must not clobber the complete artifact.
     if (only.isEmpty) {
-      val full = s"""{"runs":$nRuns,"sf":"$sfDir","total_sec":${fmt(total)},"queries":$qjson,"errors":$errs}"""
+      val full = s"""{"runs":$nRuns,"sf":"$sfDir","total_sec":${fmt(okTotal(results))},"queries":${queriesJson(results)},"errors":${errorsJson(results)}}"""
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get("bench_latest.json"), full + "\n")
       catch { case t: Throwable =>
@@ -103,5 +71,54 @@ object Bench {
     }
     spark.stop()
     if (results.exists(!_._3)) sys.exit(1)
+  }
+
+  // ms precision: full-double seconds ballooned the line past the
+  // driver's tail capture (BENCH_r02.json arrived truncated mid-JSON).
+  // Locale.ROOT: the f interpolator formats with the JVM default locale,
+  // and a comma decimal separator would corrupt the JSON line.
+  private def fmt(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** name → min seconds, `null` for a query that failed any pass. */
+  private def queriesJson(results: Seq[(String, Double, Boolean)]): String =
+    results.map { case (k, v, ok) =>
+      s"\"" + k + "\":" + (if (ok) fmt(v) else "null")
+    }.mkString("{", ",", "}")
+
+  private def errorsJson(results: Seq[(String, Double, Boolean)]): String =
+    results.collect { case (k, _, false) => s"\"" + k + "\"" }.mkString("[", ",", "]")
+
+  /** Sum over the queries that succeeded in every pass. */
+  private def okTotal(results: Seq[(String, Double, Boolean)]): Double =
+    results.collect { case (_, v, true) => v }.sum
+
+  /** The bench's three stdout contract lines, in print order: the
+    * per-query detail, the per-family rollup, and the short total LAST.
+    * `results` holds (query, min seconds, succeeded in every pass).
+    *
+    * Two or three lines, not one: the driver's tail capture truncated the
+    * single long line two rounds running (r2 and r3 both lost the head
+    * fields); a final line under 200 bytes survives any tail window and
+    * parses on its own. The mid-size rollup (<1.5 KB) is there because the
+    * ~12 KB detail line exceeds the driver's ~2,000-char stdout tail every
+    * round, so the tail's last complete JSON lines are this rollup plus the
+    * total — enough to reconstruct family-level regressions when the detail
+    * line is truncated. Its key is "families" (not "queries") so no parser
+    * can mistake it for the per-query contract map. Families are the
+    * q_<fam> name prefix. A family holding a failed query reads `null`, as
+    * the detail line does per query: its ok-only sum would pass for a
+    * small, green total.
+    */
+  def lines(results: Seq[(String, Double, Boolean)], nRuns: Int,
+      sfDir: String): Seq[String] = {
+    val fams = results.groupBy { case (k, _, _) =>
+      k.split('_').take(2).mkString("_")
+    }.toSeq.sortBy(_._1).map { case (f, rs) =>
+      s"\"" + f + "\":" + (if (rs.forall(_._3)) fmt(okTotal(rs)) else "null")
+    }.mkString("{", ",", "}")
+    Seq(s"""{"metric":"detail","runs":$nRuns,"queries":${queriesJson(results)},"errors":${errorsJson(results)},"sf":"$sfDir"}""",
+      s"""{"metric":"rollup","families":$fams,"sf":"$sfDir"}""",
+      s"""{"metric":"total","value":${fmt(okTotal(results))},"unit":"sec","runs":$nRuns,"nqueries":${results.size},"nerrors":${results.count(!_._3)},"sf":"$sfDir"}""")
   }
 }

@@ -81,6 +81,34 @@ object Tables {
     spark.read.schema(sch).parquet(dir)
   }
 
+  /** `events.ts` as the TimestampType every query was written against,
+    * from whichever representation the parquet read gave it (under
+    * `spark.sql.legacy.parquet.nanosAsLong`): a LONG is a TIMESTAMP(NANOS)
+    * value, truncated to µs (DuckDB's TIMESTAMP_NS → TIMESTAMP cast); a
+    * MICROS timestamp arrives as ltz or ntz (session tz is UTC, so ntz →
+    * ltz is an identity on instants). Batch and streaming reads share it.
+    */
+  def eventsTs(raw: DataFrame): DataFrame = {
+    val f = org.apache.spark.sql.functions
+    raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        // nanosAsLong only rewrites TIMESTAMP(NANOS); a LONG here IS ns.
+        raw.withColumn("ts", f.timestamp_micros(f.expr("ts div 1000")))
+      case org.apache.spark.sql.types.TimestampType =>
+        raw
+      case org.apache.spark.sql.types.TimestampNTZType =>
+        raw.withColumn("ts", f.col("ts").cast("timestamp"))
+      case other =>
+        // Any other dtype means the generator changed representation (e.g.
+        // numeric seconds or a string); casting would silently reinterpret
+        // and surface only as an opaque oracle hash mismatch downstream.
+        throw new IllegalStateException(
+          s"events.ts arrived as unsupported parquet type $other; " +
+            "expected TIMESTAMP(NANOS) (read as ns LONG), TIMESTAMP(MICROS) " +
+            "ltz, or ntz. Update graft.Tables for the new representation.")
+    }
+  }
+
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     if (name == "events") {
@@ -96,26 +124,7 @@ object Tables {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val sch = schemaCache.computeIfAbsent(path,
         _ => spark.read.parquet(path).schema)
-      val raw = spark.read.schema(sch).parquet(path)
-      val f = org.apache.spark.sql.functions
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          // nanosAsLong only rewrites TIMESTAMP(NANOS); a LONG here IS ns.
-          raw.withColumn("ts", f.timestamp_micros(f.expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampType =>
-          raw
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          // Session tz is UTC, so ntz -> ltz is an identity on instants.
-          raw.withColumn("ts", f.col("ts").cast("timestamp"))
-        case other =>
-          // Any other dtype means the generator changed representation (e.g.
-          // numeric seconds or a string); casting would silently reinterpret
-          // and surface only as an opaque oracle hash mismatch downstream.
-          throw new IllegalStateException(
-            s"events.ts arrived as unsupported parquet type $other; " +
-              "expected TIMESTAMP(NANOS) (read as ns LONG), TIMESTAMP(MICROS) " +
-              "ltz, or ntz. Update graft.Tables for the new representation.")
-      }
+      eventsTs(spark.read.schema(sch).parquet(path))
     } else {
       val sch = schemaCache.computeIfAbsent(path,
         _ => spark.read.parquet(path).schema)

@@ -1,6 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
@@ -34,9 +38,9 @@ object KafkaShaped {
 
   /** Raw events schema, needed by streaming file sources (Structured
     * Streaming requires a declared schema; batch infers it — SURVEY.md §1.3).
-    * `ts` is declared Long: the driver parquet stores TIMESTAMP(NANOS),
-    * which Spark reads as ns-since-epoch longs under
-    * spark.sql.legacy.parquet.nanosAsLong (see graft.Tables).
+    * `ts` is declared Long: ns since the epoch, as Spark reads parquet
+    * TIMESTAMP(NANOS) under spark.sql.legacy.parquet.nanosAsLong (see
+    * graft.Tables). `streamFromDir` declares `ts` by the files' own unit.
     */
   val eventsSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
@@ -73,14 +77,31 @@ object KafkaShaped {
   def fromEvents(spark: SparkSession, sfDir: String, nPartitions: Int = 4): DataFrame =
     shape(Tables(spark, sfDir, "events"), nPartitions)
 
-  /** Streaming source: a parquet directory of events-schema files (ns
-    * timestamps truncated to µs, matching the batch loader).
+  /** Streaming source: a parquet directory of events-schema files, `ts`
+    * landed as a timestamp the way `graft.Tables` lands it. A stream needs
+    * its schema before any batch, so the unit of `ts` is read from the
+    * footer of the first file present when the stream starts (by name):
+    * TIMESTAMP(NANOS) or a plain INT64 is ns since the epoch, truncated to
+    * µs; TIMESTAMP(MICROS) is read as it is. An empty dir assumes MICROS,
+    * the unit of the test corpus and the benchmark's generator. Every file
+    * of one dir must share the unit.
     */
   def streamFromDir(spark: SparkSession, dir: String, nPartitions: Int = 4): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    shape(
-      spark.readStream.schema(eventsSchema).parquet(dir)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000"))),
-      nPartitions)
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    val first = (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil)
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath).sortBy(_.getName).headOption
+    val tsType = first.fold[DataType](TimestampType) { p =>
+      val footer = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+      val schema = try footer.getFileMetaData.getSchema finally footer.close()
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(schema)("ts").dataType
+    }
+    val declared = StructType(eventsSchema.map(f =>
+      if (f.name == "ts") f.copy(dataType = tsType) else f))
+    shape(Tables.eventsTs(spark.readStream.schema(declared).parquet(dir)), nPartitions)
   }
 }

@@ -1,31 +1,45 @@
 package graft.streaming
 
 import java.io.{FileNotFoundException, IOException}
+import java.net.URLEncoder
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.TaskContext
+import org.apache.orc.OrcFile
+import org.apache.orc.mapred.OrcStruct
+import org.apache.orc.mapreduce.OrcMapreduceRecordReader
+import org.apache.spark.{GraftStages, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftOutputMetrics,
   SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
-  BoundReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual,
-  LessThan, LessThanOrEqual, Literal, UnsafeProjection}
-import org.apache.spark.sql.execution.SQLExecution
+  BoundReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual,
+  JoinedRow, LessThan, LessThanOrEqual, Literal, SpecificInternalRow,
+  UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{CoalescedPartitionSpec, SQLExecution,
+  ShufflePartitionSpec, ShuffledRowRDD, UnsafeExternalRowSorter,
+  UnsafeRowSerializer}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex, OutputWriter, OutputWriterFactory,
-  PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+  PartitionDirectory, RecordReaderIterator}
+import org.apache.spark.sql.execution.datasources.orc.{OrcDeserializer,
+  OrcFileFormat, OrcUtils}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.metric.{SQLShuffleReadMetricsReporter,
+  SQLShuffleWriteMetricsReporter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.util.{CollectionAccumulator, SerializableConfiguration}
+import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 
 /** Offset-named, rotation-chunked, idempotent ORC sink — the one piece of the
   * reference that Spark's file sink does not provide (SURVEY.md §4
@@ -40,17 +54,19 @@ import org.apache.spark.util.SerializableConfiguration
   * Design for scale:
   *  - rotation (flush.size, reference O9) = offset-range chunking, computed
   *    as a column, so the whole write stays distributed;
-  *  - one write job per commit, the reference's one `RecordWriter` per
-  *    output file (`OrcRecordWriterProvider.java:11-31`): one shuffle sends
-  *    each touched leaf's rows to one task, round-robin over
-  *    min(#leaves, defaultParallelism) tasks so the files are written in
-  *    parallel, and the task writes them sorted by offset as exactly one
-  *    ORC file in the leaf's `_chunk=` staging dir;
+  *  - a commit is two Spark stages, the reference's one `RecordWriter` per
+  *    output file (`OrcRecordWriterProvider.java:11-31`): the map stage of
+  *    a shuffle hash-partitions the batch on the leaf key — its one scan —
+  *    and reports the touched leaves; one reduce job then writes each leaf
+  *    as exactly one ORC file, sorted by offset, in its `_chunk=` staging
+  *    dir, with the leaves dealt in even runs over min(#leaves,
+  *    defaultParallelism) tasks so the files are written in parallel. The
+  *    batch is planned once; nothing is re-planned between the stages;
   *  - re-processing an offset range is idempotent (reference O11's
   *    `overwrite(true)` recovery contract, `DataWriterOrcTest.java:102-124`):
   *    the hoist replaces a leaf's committed file with the staged one, and
-  *    the rows a leaf already holds are read back into the same job and
-  *    deduplicated by offset;
+  *    the task writing a leaf reads the rows it already holds back from
+  *    the leaf's probed files and deduplicates them by offset;
   *  - the rename to reference-style names is a driver-side, metadata-only
   *    pass that in steady state touches ONLY this batch's `(partition,
   *    chunk)` dirs — O(files-in-this-batch) FS ops per commit, independent
@@ -67,7 +83,7 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Durability protocol (one commit per rotation file, `FileUtils.java:10-26`):
   *  1. `_graft_inflight` marker is created (listing the touched leaves);
-  *  2. the write job stages one file per touched leaf in a transient
+  *  2. the reduce job stages one file per touched leaf in a transient
   *     `_chunk=` dir;
   *  3. the touched staging dirs are hoisted to committed offset names;
   *  4. the marker is deleted.
@@ -414,22 +430,35 @@ object OffsetNamedOrcSink {
     }
     def filePrefix(topic: String): String =
       cellFilePrefix(topic, partition.toString, cell)
-    /** The leaf's key, as `leafKey` renders it from a row. */
-    def key: String = (prefix.map(_._2) ++ Seq(partition.toString, cell)).mkString("\u0000")
+    /** The leaf's line in the in-flight marker, and the key of its
+      * `_graft_stats` line: url-encoded prefix values, partition and cell,
+      * '|'-joined. URL-encoding makes the split unambiguous for arbitrary
+      * Field values ('|', newline, '%' all encode away); TimeDaily's
+      * default-format values contain no '%', so legacy raw-dt markers decode
+      * unchanged.
+      */
+    def markerLine: String =
+      (prefix.map(p => URLEncoder.encode(p._2, "UTF-8")) ++
+        Seq(partition.toString, cell)).mkString("|")
   }
 
   /** Write a Kafka-shaped DataFrame (key, value:struct, topic, partition,
     * offset, timestamp) as offset-named ORC files. Returns the topic dir.
     *
+    * One `commit`: the batch is planned and scanned once, by the map stage
+    * that also finds its touched leaves; a second job writes them (a third
+    * first folds their `_graft_stats` lines on a `statsColumns` topic).
+    *
     * Chunk-spanning batches: a rotation chunk only partially covered by this
     * batch may already hold rows from an earlier batch (micro-batch
     * boundaries are not flush-size-aligned). The chunk's staged file
-    * replaces its committed one, so the touched chunks' existing files —
-    * located exactly, by their deterministic names — are read back into the
-    * same write job and deduplicated by offset per leaf. The read-back is
-    * lazy: the committed files it reads are deleted only by the hoist, after
-    * the job has ended. Replay-safe AND batch-boundary-safe. Cost is
-    * O(touched chunks × flushSize), never O(output).
+    * replaces its committed one, so between the two stages the touched
+    * chunks' existing files are located exactly, by their deterministic
+    * names, and the task writing a chunk reads them back and deduplicates
+    * its rows by offset. The committed files it reads are deleted only by
+    * the hoist, after the job has ended. Replay-safe AND
+    * batch-boundary-safe. Cost is O(touched chunks × flushSize), never
+    * O(output).
     */
   def write(df: DataFrame, outDir: String, flushSize: Long,
       topic: String = "events",
@@ -520,93 +549,35 @@ object OffsetNamedOrcSink {
       .select(partCols.map(col) ++ (col("offset") +:
         emittedValue.map(n => col("value").getField(n).as(n))): _*)
 
-    // touched output leaves — small by construction: one per output file of
-    // this batch. Their existing files have deterministic names, so the
-    // read-back probes exactly those names (never a directory scan).
-    val touched = touchedLeaves(flat, partCols)
-
+    // per-cell column stats (file-skipping metadata, the Delta-log idea) are
+    // recorded BEFORE anything is staged, so a crash mid-commit leaves stats
+    // that describe the post-recovery content: each touched cell's new
+    // content is its batch rows plus its read-back, exactly what the
+    // commit's stats job folds
     val inflight = new Path(root, InflightMarker)
-    // RECOVERY (rare, marker-gated): a crash inside a previous commit left
-    // merged rows inside `_chunk=` staging dirs. Re-running the hoist pass
-    // makes the name-based probes below complete again. Steady state never
-    // enters this branch — no per-batch directory walk.
-    if (fs.exists(inflight)) {
-      recoverFromMarker(fs, root, topic, inflight)
-      fs.delete(inflight, false)
-    }
-    val existingPaths = touched.flatMap { t =>
-      committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic))
-        .map(_.getPath.toString)
-    }
-    val merged =
-      if (existingPaths.isEmpty) flat
-      else {
-        // partition-type inference OFF for the merge read: flat carries
-        // every prefix col as a STRING, and inference would corrupt
-        // non-canonical values on the round trip (dir `f=05` infers int 5,
-        // casts back to "5" ≠ "05"). With inference off all dir cols come
-        // back as raw (unescaped) strings — exact.
-        val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        val prevInfer = spark.conf.get(inferKey)
-        // the rotated cell's time bucket is not stored in the rows (only in
-        // the file name) — rebuild the composite cell from the probed file's
-        // own name; without rotation the offset grid suffices
-        val existingCell = rotateMs match {
-          case None => col("offset") - pmod(col("offset"), lit(flushSize))
-          case Some(_) => concat(
-            // the name embeds the ZERO-PADDED chunk — normalize via long
-            regexp_extract(input_file_name(), CommittedTailRe, 1)
-              .cast("long").cast("string"),
-            lit("t"), regexp_extract(input_file_name(), CommittedTailRe, 2))
-        }
-        val existing = try {
-          spark.conf.set(inferKey, "false")
-          // Read with the DECLARED (latched) schema, never a sampled file's:
-          // after a Backward widening a touched chunk set can mix pre- and
-          // post-widening physical files, and sampling a narrow one would
-          // read the added columns as absent from EVERY file — the rewrite
-          // would then erase those values from rows not replayed in this
-          // batch (silent data loss; ADVICE r4). With the declared schema
-          // ORC's name-based matching null-fills exactly the files that
-          // predate each widening — the same contract as read(). flat's
-          // schema IS the latch (conformValueSchema ran above), so columns
-          // added by this very batch null-fill the same way; dir-derived
-          // columns (prefix values, partition) are declared too and fill
-          // from their dir values at the declared (string/int) types.
-          val declared = StructType(
-            flat.schema.fields.filterNot(_.name == ChunkCol))
-          spark.read.option("basePath", topicDir)
-            .schema(declared)
-            .orc(existingPaths: _*)
-            .withColumn(ChunkCol, existingCell)
-            // realign column order/types to flat's
-            .select(flat.schema.fields.map(f => col(f.name).cast(f.dataType)): _*)
-        } finally spark.conf.set(inferKey, prevInfer)
-        flat.union(existing)
+    commit(spark, fs, root, topic, flat, partCols, orcOptions, statsColumns) { touched =>
+      // RECOVERY (rare, marker-gated): a crash inside a previous commit left
+      // merged rows inside `_chunk=` staging dirs. Re-running the hoist pass
+      // makes the name-based probes below complete again. Steady state never
+      // enters this branch — no per-batch directory walk.
+      if (fs.exists(inflight)) {
+        recoverFromMarker(fs, root, topic, inflight)
+        fs.delete(inflight, false)
       }
-    // a replayed offset meets its committed copy only through the
-    // read-back, so only then does the write job deduplicate — per leaf,
-    // i.e. per partition: offsets are unique only per partition (Kafka
-    // contract)
-    val dedup = existingPaths.nonEmpty
-
-    // per-cell column stats (file-skipping metadata, the Delta-log idea):
-    // recorded BEFORE the commit so a crash mid-commit leaves stats that
-    // describe the post-recovery content — `merged` IS the full new content
-    // of every touched cell, so replacing those cells' lines is exact
-    if (statsColumns.nonEmpty)
-      updateStats(fs, root, merged, partCols, touched, statsColumns, dedup)
-    commit(spark, fs, root, topic, merged, partCols, touched, orcOptions, dedup)
+      // the touched leaves' existing files have deterministic names, so the
+      // read-back probes exactly those names (never a directory scan)
+      touched.map(t => committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic)))
+    }
     topicDir
   }
 
-  /** The distinct output leaves of a flattened batch. One driver-side
-    * collect, bounded by files-in-this-batch (prefix cols cast to string:
-    * the batch API builds them as strings, but compaction's read-back may
-    * infer other types from the dirs). Each input partition is deduplicated
-    * in its task and the driver merges the rest: one job and no shuffle,
-    * where `distinct()` costs a shuffle and, under adaptive execution, a
-    * second job.
+  /** The distinct output leaves of a flattened DataFrame — `deleteRows`'
+    * predicate read, which commits nothing itself. One driver-side collect,
+    * bounded by the leaves that hold a matching row (prefix cols cast to
+    * string: the batch API builds them as strings, but a sink read may
+    * infer other types from the dirs). Each input partition is
+    * deduplicated in its task and the driver merges the rest: one job and
+    * no shuffle.
     */
   private def touchedLeaves(flat: DataFrame, partCols: Seq[String]): Seq[Touched] = {
     val prefixNames = partCols.dropRight(2)
@@ -619,87 +590,357 @@ object OffsetNamedOrcSink {
     }
   }
 
-  /** The shared commit step (write, compactTo, deleteRows): in-flight
-    * marker → one write job staging each touched leaf's file
-    * (`writeLeaves`) → hoist ONLY the touched leaves to their committed
-    * offset names → drop the marker. Never a directory walk.
+  /** Shuffle buckets per core in a commit's map stage. A reduce task reads
+    * the bucket range its leaves hash to and drops the rows of the leaves a
+    * neighbour task owns in a shared edge bucket; more buckets mean fewer
+    * such rows. Balance does not depend on it (see `commit`).
+    */
+  private val BucketsPerCore = 4
+
+  /** The shared commit step (write, compactTo, deleteRows): two Spark
+    * stages, each started from the driver, around the on-disk protocol.
+    *
+    *  1. The map stage of a shuffle that hash-partitions `rows` on the leaf
+    *     key into a fixed number of buckets. It is the only scan of `rows`,
+    *     and each map task reports the distinct leaves it saw, so the
+    *     touched leaves arrive with it.
+    *  1. `between` runs on the driver with the touched leaves (also when
+    *     there are none): the caller's recovery check and read-back probes.
+    *     It returns each leaf's committed files to merge back.
+    *  1. On `statsCols` topics, one reduce job folds each leaf's row count,
+    *     min and max into its `_graft_stats` line, written before anything
+    *     is staged — or, with `statsAfterHoist`, after the hoist.
+    *  1. The in-flight marker lists every touched leaf; one reduce job
+    *     stages each leaf's file in its `_chunk=` dir (`LeafTasks` feeding
+    *     `LeafWriter`); the touched staging dirs are hoisted to their
+    *     committed names; the marker is deleted.
+    *
+    * `rows` is planned once, and nothing is re-planned between the stages.
+    * Never a directory walk. Returns the touched leaves.
+    *
+    * Balance: the leaves, ordered by bucket, are dealt in contiguous runs
+    * to min(#leaves, defaultParallelism) reduce tasks, so no task writes
+    * more than ⌈leaves / tasks⌉ files whatever the hash collisions. A task
+    * reads its run's bucket range; an edge bucket shared with a neighbour
+    * is read by both, each keeping only its own leaves' rows.
     */
   private def commit(spark: SparkSession, fs: FileSystem, root: Path,
       topic: String, rows: DataFrame, partCols: Seq[String],
-      touched: Seq[Touched], orcOptions: Map[String, String],
-      dedup: Boolean): Unit = {
-    if (touched.isEmpty) return
-    val inflight = new Path(root, InflightMarker)
-    // marker line = url-encoded prefix values, partition, chunk, '|'-joined.
-    // URL-encoding makes the split unambiguous for arbitrary Field values
-    // ('|', newline, '%' all encode away); TimeDaily's default-format values
-    // contain no '%', so legacy raw-dt markers decode unchanged.
-    writeMarker(fs, inflight,
-      touched.map(t =>
-        (t.prefix.map(p => java.net.URLEncoder.encode(p._2, "UTF-8")) ++
-          Seq(t.partition.toString, t.cell)).mkString("|"))
-        .mkString("\n"))
-    writeLeaves(spark, root, rows, partCols, touched, orcOptions, dedup)
-    touched.foreach(t =>
-      hoistChunkDir(fs, t.partitionDir(root), t.partition.toString, t.cell, topic))
-    fs.delete(inflight, false)
-    ()
+      orcOptions: Map[String, String], statsCols: Seq[String] = Nil,
+      statsAfterHoist: Boolean = false)(
+      between: Seq[Touched] => Seq[Seq[FileStatus]]): Seq[Touched] = {
+    val sc = spark.sparkContext
+    val dataCols = rows.columns.toSeq.filterNot(partCols.contains)
+    statsCols.foreach(c => require(dataCols.contains(c),
+      s"stats column '$c' is not an emitted column (${rows.columns.mkString(", ")})"))
+    val qe = rows.queryExecution
+    val attrs = qe.executedPlan.output
+    val keyOrdinals = partCols.map(rows.columns.indexOf(_))
+    val keyAttrs = keyOrdinals.map(attrs)
+    val buckets = HashPartitioning(keyAttrs, BucketsPerCore * sc.defaultParallelism)
+    val seen = new CollectionAccumulator[UnsafeRow]
+    sc.register(seen)
+    val leafKey = keyOrdinals.map(i => BoundReference(i, attrs(i).dataType, nullable = true))
+    // under the plan's SQL execution, so streaming progress and the SQL UI
+    // see the scan
+    val shuffle = SQLExecution.withNewExecutionId(qe, Some(s"commit $root")) {
+      val input = qe.toRdd
+      if (input.getNumPartitions == 0) None
+      else {
+        val dep = ShuffleExchangeExec.prepareShuffleDependency(
+          input.mapPartitions(trackLeaves(_, leafKey, seen)), attrs, buckets,
+          new UnsafeRowSerializer(attrs.size, null),
+          SQLShuffleWriteMetricsReporter.createShuffleWriteMetrics(sc))
+        GraftStages.runMapStage(sc, dep)
+        Some(dep)
+      }
+    }
+    try {
+      val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+      val nPrefix = partCols.size - 2
+      val render = UnsafeProjection.create(keyAttrs.indices.map(i =>
+        Cast(BoundReference(i, keyAttrs(i).dataType, nullable = true),
+          if (i == nPrefix) IntegerType else StringType, tz)))
+      val bucketOf = UnsafeProjection.create(Seq(buckets.partitionIdExpression), keyAttrs)
+      val leaves = seen.value.asScala.toSeq.distinct.map { k =>
+        val r = render(k)
+        (bucketOf(k).getInt(0), Touched(
+          partCols.take(nPrefix).zipWithIndex.map { case (n, i) => n -> r.getUTF8String(i).toString },
+          r.getInt(nPrefix), r.getUTF8String(nPrefix + 1).toString), k)
+      }.sortBy { case (b, t, _) => (b, t.markerLine) }
+      val touched = leaves.map(_._2)
+      val readBack = between(touched)
+      for (dep <- shuffle if touched.nonEmpty) {
+        val n = math.min(touched.size, sc.defaultParallelism)
+        val runs = Array.tabulate(n + 1)(t => t * touched.size / n) // task t: leaves [runs(t), runs(t + 1))
+        val reduce = new ShuffledRowRDD(dep,
+          SQLShuffleReadMetricsReporter.createShuffleReadMetrics(sc),
+          Array.tabulate[ShufflePartitionSpec](n)(t =>
+            CoalescedPartitionSpec(leaves(runs(t))._1, leaves(runs(t + 1) - 1)._1 + 1)))
+        val dataSchema = nullable(StructType(dataCols.map(rows.schema(_)))).asInstanceOf[StructType]
+        val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(orcOptions))
+        val factory = new OrcFileFormat().prepareWrite(spark, job, orcOptions, dataSchema)
+        // one broadcast serves the read-back and the writers
+        val conf = sc.broadcast(new SerializableConfiguration(job.getConfiguration))
+        try {
+          val tasks = new LeafTasks(attrs.map(_.dataType).toArray, keyOrdinals.toArray,
+            dataCols.map(rows.columns.indexOf(_)).toArray, dataSchema,
+            leaves.map(_._3).toArray, runs,
+            readBack.map(_.map(f => (f.getPath.toString, f.getLen)).toArray).toArray,
+            spark.sessionState.conf.caseSensitiveAnalysis, conf)
+          val stats = if (statsCols.isEmpty) Map.empty[String, String] else {
+            val isStr = statsCols.map(dataSchema(_).dataType == StringType)
+            val values = statsCols.zip(isStr).map { case (c, str) =>
+              val v = BoundReference(1 + dataSchema.fieldIndex(c), dataSchema(c).dataType, nullable = true)
+              if (str) v else Cast(v, LongType, tz)
+            }
+            sc.runJob(reduce, (ctx: TaskContext, it: Iterator[InternalRow]) =>
+                statsTails(tasks.rows(ctx, it), values, isStr.toArray))
+              .flatten.map { case (l, tail) =>
+                touched(l).markerLine -> s"${touched(l).markerLine}|$tail"
+              }.toMap
+          }
+          if (!statsAfterHoist) rewriteStats(fs, root, partCols.size, stats)
+          val inflight = new Path(root, InflightMarker)
+          writeMarker(fs, inflight, touched.map(_.markerLine).mkString("\n"))
+          val writer = new LeafWriter(
+            touched.map(t => new Path(t.partitionDir(root), s"$ChunkCol=${t.cell}").toString).toArray,
+            factory, dataSchema, conf)
+          sc.runJob(reduce, (ctx: TaskContext, it: Iterator[InternalRow]) =>
+            writer.write(ctx, tasks.rows(ctx, it)))
+          touched.foreach(t =>
+            hoistChunkDir(fs, t.partitionDir(root), t.partition.toString, t.cell, topic))
+          fs.delete(inflight, false)
+          if (statsAfterHoist) rewriteStats(fs, root, partCols.size, stats)
+        } finally conf.destroy()
+      }
+      touched
+    } finally shuffle.foreach(GraftStages.release(sc, _))
+  }
+
+  /** Stage 1's pass over one input partition: the rows go on to the
+    * shuffle unchanged, and once they are exhausted the distinct leaf keys
+    * among them are added to `seen`.
+    */
+  private def trackLeaves(rows: Iterator[InternalRow], key: Seq[Expression],
+      seen: CollectionAccumulator[UnsafeRow]): Iterator[InternalRow] = {
+    val keyOf = UnsafeProjection.create(key)
+    val leaves = new java.util.HashSet[UnsafeRow]()
+    new Iterator[InternalRow] {
+      override def hasNext: Boolean = rows.hasNext || {
+        leaves.forEach(k => seen.add(k))
+        leaves.clear()
+        false
+      }
+      override def next(): InternalRow = {
+        val r = rows.next()
+        val k = keyOf(r)
+        if (!leaves.contains(k)) leaves.add(k.copy())
+        r
+      }
+    }
+  }
+
+  /** Each leaf's `_graft_stats` line after its key — `n_rows|mn1|mx1|…` —
+    * folded over its rows as `LeafTasks.rows` yields them (sorted, and
+    * deduplicated when the commit deduplicates). `values` are the stats
+    * columns over those rows, strings as they are and the rest cast to
+    * long. Strings compare as UTF-8 bytes; a column with no non-null value
+    * in the leaf records its all-null sentinel pair.
+    */
+  private def statsTails(rows: Iterator[InternalRow], values: Seq[Expression],
+      isStr: Array[Boolean]): Array[(Int, String)] = {
+    val value = UnsafeProjection.create(values)
+    val k = isStr.length
+    val any = new Array[Boolean](k)
+    val (loL, hiL) = (new Array[Long](k), new Array[Long](k))
+    val (loS, hiS) = (new Array[UTF8String](k), new Array[UTF8String](k))
+    val out = Array.newBuilder[(Int, String)]
+    var leaf = -1
+    var n = 0L
+    def emit(): Unit = if (leaf >= 0)
+      out += leaf -> (n.toString +: (0 until k).flatMap { i =>
+        if (!any(i)) if (isStr(i)) Seq(StrStatsNull, StrStatsNull)
+          else Seq(Long.MinValue.toString, Long.MaxValue.toString)
+        else if (isStr(i)) Seq(loS(i), hiS(i)).map(s => URLEncoder.encode(s.toString, "UTF-8"))
+        else Seq(loL(i).toString, hiL(i).toString)
+      }).mkString("|")
+    rows.foreach { r =>
+      if (r.getInt(0) != leaf) {
+        emit()
+        leaf = r.getInt(0)
+        n = 0L
+        java.util.Arrays.fill(any, false)
+      }
+      n += 1
+      val v = value(r)
+      var i = 0
+      while (i < k) {
+        if (!v.isNullAt(i)) {
+          if (isStr(i)) {
+            val s = v.getUTF8String(i)
+            if (!any(i) || s.compareTo(loS(i)) < 0) loS(i) = s.clone()
+            if (!any(i) || s.compareTo(hiS(i)) > 0) hiS(i) = s.clone()
+          } else {
+            val x = v.getLong(i)
+            if (!any(i) || x < loL(i)) loL(i) = x
+            if (!any(i) || x > hiL(i)) hiL(i) = x
+          }
+          any(i) = true
+        }
+        i += 1
+      }
+    }
+    emit()
+    out.result()
+  }
+
+  /** Replace the `_graft_stats` lines of the `fresh` cells (key → line) and
+    * drop those of the `gone` cells (keys); a line's key is its first
+    * `nKey` fields. Other cells' lines are kept, and the file is rewritten
+    * in full, sorted.
+    *
+    * One line per committed cell,
+    * `<enc prefix values>|partition|cell|n_rows|mn1|mx1|mn2|mx2|…`: the
+    * cell ROW COUNT (a Delta log's numRecords: catalog-only `count(*)`, no
+    * data scan), then one |mn|mx pair per stats column in the CONFIG-MARKER
+    * ORDER (the multi-column generalization a Delta/Iceberg log keeps, so
+    * readAsOf pruning composes across predicates on different columns). A
+    * string column's bounds are URL-encoded (the encoding '|'/newline-
+    * escapes, so the split stays unambiguous) and its all-null sentinel is
+    * the literal token `!null` — URLEncoder never emits a bare '!', so the
+    * sentinel cannot collide with a real value. The format is
+    * self-describing by FIELD COUNT: pre-rowcount lines are one field
+    * shorter and every reader dispatches per line, so mixed-era markers (old
+    * cells untouched, replayed cells fresh) parse exactly.
+    */
+  private def rewriteStats(fs: FileSystem, root: Path, nKey: Int,
+      fresh: Map[String, String], gone: Set[String] = Set.empty): Unit = {
+    if (fresh.isEmpty && gone.isEmpty) return
+    val statsPath = new Path(root, StatsMarker)
+    val old = readMarker(fs, statsPath)
+    if (fresh.isEmpty && old.isEmpty) return
+    val kept = old.fold(Seq.empty[String])(_.linesIterator.filter(_.nonEmpty).toSeq)
+      .filterNot { l =>
+        val key = l.split("\\|", -1).take(nKey).mkString("|")
+        fresh.contains(key) || gone(key)
+      }
+    writeMarker(fs, statsPath, (kept ++ fresh.values).sorted.mkString("\n"))
   }
 
   /** The name a staged leaf file ends up with in its `_chunk=` dir. */
   private val PartFile = "part-00000.orc"
 
-  /** Column carrying each row's index into the touched leaves. */
+  /** Column carrying each reduce row's index into the touched leaves. */
   private val LeafCol = "_leaf"
 
-  /** A row's leaf key, in the form `Touched.key` renders. */
-  private def leafKey(prefixNames: Seq[String]): Column =
-    concat_ws("\u0000", prefixNames.map(n => col(n).cast("string")) ++
-      Seq(col("partition").cast("int").cast("string"),
-        col(ChunkCol).cast("string")): _*)
-
-  /** The commit's one write job: every touched leaf's rows become exactly
-    * one ORC file, `part-00000.orc` in the leaf's `_chunk=<cell>` staging
-    * dir, holding the columns `rows` carries besides the layout ones, in
-    * their order.
+  /** The reduce side of a commit, shared by its stats and write jobs. Task
+    * t's rows are (leaf index, data columns…) for the leaves
+    * [runs(t), runs(t + 1)), sorted by leaf then offset: the rows of its
+    * bucket range that carry one of its leaf keys, plus its leaves'
+    * read-back. A read-back row takes its leaf from the file it came from,
+    * and is read with `dataSchema` — the latched schema — so a file written
+    * before a Backward widening null-fills the added columns by name.
     *
-    * Leaf i goes to task i mod n, n = min(#leaves, defaultParallelism): one
-    * shuffle (`repartitionById`, which adaptive execution never coalesces)
-    * spreads the files across cores, no task writing more than
-    * ⌈leaves / n⌉ of them. Each task sorts its rows by (leaf, offset) and
-    * streams them through `LeafWriter`, whose writers come from
-    * `OrcFileFormat.prepareWrite` with the session's ORC settings plus
-    * `orcOptions` — what `df.write.options(orcOptions).orc` applies.
+    * A replayed offset meets its committed copy only through the
+    * read-back, so only a commit with a read-back deduplicates: a leaf
+    * keeps the first row of each offset — per leaf, i.e. per partition:
+    * offsets are unique only per partition (Kafka contract).
     */
-  private def writeLeaves(spark: SparkSession, root: Path, rows: DataFrame,
-      partCols: Seq[String], touched: Seq[Touched],
-      orcOptions: Map[String, String], dedup: Boolean): Unit = {
-    val leafOf = touched.zipWithIndex.map { case (t, i) => t.key -> i }.toMap
-    val leaf = udf((k: String) => leafOf.getOrElse(k,
-      throw new IllegalStateException(s"row outside the touched leaves: $k")))
-    val n = math.min(touched.size, spark.sparkContext.defaultParallelism)
-    val planned = rows
-      .withColumn(LeafCol, leaf(leafKey(partCols.dropRight(2))))
-      .repartitionById(n, col(LeafCol) % n)
-      .sortWithinPartitions(LeafCol, "offset")
-      .select((LeafCol +: rows.columns.toSeq.filterNot(partCols.contains)).map(col): _*)
-    val dataSchema = StructType(planned.schema.fields.tail)
-    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(orcOptions))
-    val factory = new OrcFileFormat().prepareWrite(spark, job, orcOptions, dataSchema)
-    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration))
-    val writer = new LeafWriter(
-      touched.map(t => new Path(t.partitionDir(root), s"$ChunkCol=${t.cell}").toString).toArray,
-      factory, dataSchema, conf, dedup)
-    try SQLExecution.withNewExecutionId(planned.queryExecution, Some(s"commit $root")) {
-      spark.sparkContext.runJob(planned.queryExecution.toRdd,
-        (ctx: TaskContext, it: Iterator[InternalRow]) => writer.write(ctx, it))
-    } finally conf.destroy()
-    ()
+  private final class LeafTasks(inputTypes: Array[DataType], keyOrdinals: Array[Int],
+      dataOrdinals: Array[Int], dataSchema: StructType, keys: Array[UnsafeRow],
+      runs: Array[Int], readBack: Array[Array[(String, Long)]],
+      caseSensitive: Boolean, conf: Broadcast[SerializableConfiguration])
+      extends Serializable {
+    private val dedup = readBack.exists(_.nonEmpty)
+    private val offsetAt = 1 + dataSchema.fieldIndex("offset")
+
+    def rows(ctx: TaskContext, shuffled: Iterator[InternalRow]): Iterator[InternalRow] = {
+      val mine = runs(ctx.partitionId()) until runs(ctx.partitionId() + 1)
+      val leafOf = new java.util.HashMap[UnsafeRow, Integer]()
+      mine.foreach(l => leafOf.put(keys(l), l))
+      val keyOf = UnsafeProjection.create(keyOrdinals.toSeq.map(i =>
+        BoundReference(i, inputTypes(i), nullable = true)))
+      def tagged(cols: Seq[(Int, DataType)]) = UnsafeProjection.create(
+        BoundReference(0, IntegerType, nullable = false) +:
+          cols.map { case (i, t) => BoundReference(1 + i, t, nullable = true) })
+      val fromBatch = tagged(dataOrdinals.toSeq.map(i => i -> inputTypes(i)))
+      val fromFile = tagged(dataSchema.fields.toSeq.map(_.dataType).zipWithIndex.map(_.swap))
+      val leaf = new SpecificInternalRow(Seq(IntegerType))
+      val joined = new JoinedRow
+      val sorter = UnsafeExternalRowSorter.create(
+        StructType(StructField(LeafCol, IntegerType, nullable = false) +: dataSchema.fields),
+        new LeafOffsetOrdering(offsetAt), PrefixComparators.LONG, new LeafPrefix,
+        GraftStages.pageSizeBytes, false)
+      shuffled.foreach { r =>
+        val l = leafOf.get(keyOf(r))
+        if (l != null) {
+          leaf.setInt(0, l)
+          sorter.insertRow(fromBatch(joined(leaf, r)))
+        }
+      }
+      if (dedup) {
+        val taskConf = new Configuration(conf.value.value)
+        mine.foreach { l =>
+          leaf.setInt(0, l)
+          readBack(l).foreach { case (path, len) =>
+            readOrc(ctx, taskConf, path, len).foreach(r => sorter.insertRow(fromFile(joined(leaf, r))))
+          }
+        }
+      }
+      val sorted = sorter.sort()
+      if (!dedup) sorted
+      else {
+        var lastLeaf = -1
+        var lastOffset = 0L
+        sorted.filter { r =>
+          val keep = r.getInt(0) != lastLeaf || r.getLong(offsetAt) != lastOffset
+          lastLeaf = r.getInt(0)
+          lastOffset = r.getLong(offsetAt)
+          keep
+        }
+      }
+    }
+
+    /** One committed ORC file's rows in `dataSchema`, matched by name. */
+    private def readOrc(ctx: TaskContext, taskConf: Configuration, path: String,
+        len: Long): Iterator[InternalRow] = {
+      val p = new Path(path)
+      val reader = OrcFile.createReader(p,
+        OrcFile.readerOptions(taskConf).filesystem(p.getFileSystem(taskConf)))
+      OrcUtils.requestedColumnIds(caseSensitive, dataSchema, dataSchema,
+          reader.getSchema, taskConf) match {
+        case None => reader.close(); Iterator.empty // a file with no columns has no rows
+        case Some((ids, canPrune)) =>
+          OrcUtils.orcResultSchemaString(canPrune, dataSchema, dataSchema, new StructType(), taskConf)
+          val it = new RecordReaderIterator(new OrcMapreduceRecordReader[OrcStruct](reader,
+            org.apache.orc.mapred.OrcInputFormat.buildOptions(taskConf, reader, 0, len)))
+          ctx.addTaskCompletionListener[Unit](_ => it.close())
+          val deserializer = new OrcDeserializer(dataSchema, ids)
+          it.map(deserializer.deserialize)
+      }
+    }
   }
 
-  /** The task side of `writeLeaves`. Rows arrive as (leaf index, data
-    * columns…), sorted by leaf then offset; with `dedup` a leaf keeps the
-    * first row of each offset. A leaf's rows stream into a hidden,
+  /** The order of a commit's reduce rows: leaf, then offset. */
+  private final class LeafOffsetOrdering(offsetAt: Int) extends Ordering[InternalRow] {
+    override def compare(a: InternalRow, b: InternalRow): Int = {
+      val c = Integer.compare(a.getInt(0), b.getInt(0))
+      if (c != 0) c else java.lang.Long.compare(a.getLong(offsetAt), b.getLong(offsetAt))
+    }
+  }
+
+  /** The sort prefix of a reduce row: its leaf. */
+  private final class LeafPrefix extends UnsafeExternalRowSorter.PrefixComputer {
+    private val prefix = new UnsafeExternalRowSorter.PrefixComputer.Prefix
+    override def computePrefix(row: InternalRow): UnsafeExternalRowSorter.PrefixComputer.Prefix = {
+      prefix.value = row.getInt(0)
+      prefix
+    }
+  }
+
+  /** The task side of the write job. Rows arrive as (leaf index, data
+    * columns…), grouped by leaf. A leaf's rows stream into a hidden,
     * attempt-unique `.attempt-<task attempt id>.orc` in its staging dir,
     * which on close replaces the dir's one `part-00000.orc`: a retried
     * attempt overwrites the part file rather than adding a second, and a
@@ -708,8 +949,7 @@ object OffsetNamedOrcSink {
     */
   private final class LeafWriter(dirs: Array[String],
       factory: OutputWriterFactory, dataSchema: StructType,
-      conf: Broadcast[SerializableConfiguration], dedup: Boolean)
-      extends Serializable {
+      conf: Broadcast[SerializableConfiguration]) extends Serializable {
     def write(ctx: TaskContext, rows: Iterator[InternalRow]): Unit = {
       val hadoopConf = conf.value.value
       val attempt = new TaskAttemptContextImpl(hadoopConf, new TaskAttemptID(
@@ -717,9 +957,7 @@ object OffsetNamedOrcSink {
       val data = UnsafeProjection.create(dataSchema.fields.toSeq.zipWithIndex.map {
         case (f, i) => BoundReference(i + 1, f.dataType, f.nullable)
       })
-      val offsetAt = dataSchema.fieldIndex("offset") + 1
       var leaf = -1
-      var last = 0L
       var records = 0L
       var tmp: Path = null
       var out: OutputWriter = null
@@ -738,18 +976,14 @@ object OffsetNamedOrcSink {
       try {
         rows.foreach { r =>
           val l = r.getInt(0)
-          val offset = r.getLong(offsetAt)
           if (l != leaf) {
             finish()
             leaf = l
             tmp = new Path(dirs(l), s".attempt-${ctx.taskAttemptId()}.orc")
             out = factory.newInstance(tmp.toString, dataSchema, attempt)
           }
-          if (records == 0L || !dedup || offset != last) {
-            out.write(data(r))
-            records += 1
-          }
-          last = offset
+          out.write(data(r))
+          records += 1
         }
         finish()
       } catch {
@@ -1423,105 +1657,6 @@ object OffsetNamedOrcSink {
     }
   }
 
-  /** Per-cell min/max stats of `statsCols` (integer- or string-typed
-    * emitted columns), merged into the `_graft_stats` marker: one line per
-    * committed cell,
-    * `<enc prefix values>|partition|cell|n_rows|mn1|mx1|mn2|mx2|…`
-    * — the cell ROW COUNT (a Delta log's numRecords: catalog-only
-    * `count(*)`, no data scan) then one |mn|mx pair per stats column, in
-    * the CONFIG-MARKER ORDER (the
-    * multi-column generalization a Delta/Iceberg log keeps, so readAsOf
-    * pruning composes across predicates on different columns). A string
-    * column's bounds are URL-encoded (the encoding '|'/newline-escapes, so
-    * the split stays unambiguous) and its all-null sentinel is the literal
-    * token `!null` — URLEncoder never emits a bare '!', so the sentinel
-    * cannot collide with a real value. Touched cells' lines are REPLACED
-    * (merged is their full new content); an all-null cell column records
-    * the always-qualifying sentinel range. With `distinctOffsets` the row
-    * count is the cell's distinct offsets — what the commit's per-leaf
-    * dedup keeps of `merged`. One driver collect, bounded by
-    * files-in-this-batch like touchedLeaves; adding a column adds two agg
-    * buffers, never a second pass.
-    */
-  private def updateStats(fs: FileSystem, root: Path, merged: DataFrame,
-      partCols: Seq[String], touched: Seq[Touched],
-      statsCols: Seq[String], distinctOffsets: Boolean): Unit = {
-    statsCols.foreach(c => require(merged.columns.contains(c),
-      s"stats column '$c' is not an emitted column " +
-        s"(${merged.columns.mkString(", ")})"))
-    val isStr = statsCols.map(c =>
-      merged.schema(c).dataType == org.apache.spark.sql.types.StringType)
-    val prefixNames = partCols.dropRight(2)
-    val keyCols = prefixNames.map(n => col(n).cast("string").as(n)) ++
-      Seq(col("partition").cast("int").as("partition"),
-        col(ChunkCol).cast("string").as(ChunkCol))
-    val nRows = if (distinctOffsets) count_distinct(col("offset")) else count(lit(1L))
-    val aggCols = nRows.as("nr") +:
-      statsCols.zipWithIndex.flatMap { case (c, i) =>
-        val v = if (isStr(i)) col(c) else col(c).cast("long")
-        Seq(min(v).as(s"mn$i"), max(v).as(s"mx$i"))
-      }
-    val rows = merged
-      .groupBy(keyCols: _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-      .collect()
-    def enc(v: String) = java.net.URLEncoder.encode(v, "UTF-8")
-    val fresh = rows.map { r =>
-      val key = (prefixNames.map(n => enc(r.getAs[String](n))) ++
-        Seq(r.getAs[Int]("partition").toString,
-          r.getAs[String](ChunkCol))).mkString("|")
-      val ranges = statsCols.indices.flatMap { i =>
-        val (mnI, mxI) = (r.fieldIndex(s"mn$i"), r.fieldIndex(s"mx$i"))
-        if (isStr(i))
-          Seq(if (r.isNullAt(mnI)) StrStatsNull else enc(r.getString(mnI)),
-            if (r.isNullAt(mxI)) StrStatsNull else enc(r.getString(mxI)))
-        else
-          Seq(
-            (if (r.isNullAt(mnI)) Long.MinValue else r.getLong(mnI)).toString,
-            (if (r.isNullAt(mxI)) Long.MaxValue else r.getLong(mxI)).toString)
-      }
-      // line = key | n_rows | per-column |mn|mx pairs. The ROW COUNT (a
-      // Delta log's numRecords) rides between the key and the pairs; the
-      // format is self-describing by FIELD COUNT — pre-rowcount topics'
-      // lines are one field shorter and every reader dispatches per line,
-      // so mixed-era markers (old cells untouched, replayed cells fresh)
-      // parse exactly.
-      key -> ((key +: (r.getAs[Long]("nr").toString +: ranges))
-        .mkString("|"))
-    }.toMap
-    val nKey = prefixNames.size + 2
-    val statsPath = new Path(root, StatsMarker)
-    val kept = readMarker(fs, statsPath)
-      .map(_.linesIterator.filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      .filterNot { l =>
-        fresh.contains(l.split("\\|", -1).take(nKey).mkString("|"))
-      }
-    writeMarker(fs, statsPath,
-      (kept ++ fresh.values.toSeq).sorted.mkString("\n"))
-  }
-
-  /** Drop the stats lines of cells whose committed files no longer exist
-    * (emptied by erasure/expiry). Stale lines are merely a safe
-    * over-approximation — probes find no files — but an erasure pass
-    * should not leave metadata describing removed cells.
-    */
-  private def removeStatsLines(fs: FileSystem, root: Path,
-      gone: Seq[Touched]): Unit = {
-    if (gone.isEmpty) return
-    val statsPath = new Path(root, StatsMarker)
-    readMarker(fs, statsPath).foreach { text =>
-      def enc(v: String) = java.net.URLEncoder.encode(v, "UTF-8")
-      val goneKeys = gone.map(t =>
-        (t.prefix.map(p => enc(p._2)) ++
-          Seq(t.partition.toString, t.cell)).mkString("|")).toSet
-      val nKey = gone.head.prefix.size + 2
-      val kept = text.linesIterator.filter(_.nonEmpty).filterNot { l =>
-        goneKeys(l.split("\\|", -1).take(nKey).mkString("|"))
-      }.toSeq
-      writeMarker(fs, statsPath, kept.mkString("\n"))
-    }
-  }
-
   /** The topic's committed-cell CATALOG as a DataFrame — the queryable face
     * of the `_graft_stats` marker (one row per committed (prefix, partition,
     * chunk) cell with its recorded stats range): what a lakehouse exposes as
@@ -1879,16 +2014,12 @@ object OffsetNamedOrcSink {
     readMarker(fs, new Path(root, SchemaMarker)).foreach(json =>
       writeMarker(newFs, new Path(newRoot, SchemaMarker), json))
 
-    val touched = touchedLeaves(flat, partCols)
-    // stats BEFORE the commit (the write() ordering): flat is the full new
-    // content, so a crashed compaction recovers with consistent metadata.
-    // orcOptions ride the same path as write() — compaction must not strip
-    // the topic's bloom filters.
-    if (statsCols.nonEmpty && statsCols.forall(flat.columns.contains))
-      updateStats(newFs, newRoot, flat, partCols, touched, statsCols,
-        distinctOffsets = false)
-    commit(spark, newFs, newRoot, topic, flat, partCols, touched, orcOptions,
-      dedup = false)
+    // stats BEFORE anything is staged (the write() ordering): flat is the
+    // full new content, so a crashed compaction recovers with consistent
+    // metadata. orcOptions ride the same path as write() — compaction must
+    // not strip the topic's bloom filters.
+    commit(spark, newFs, newRoot, topic, flat, partCols, orcOptions,
+      if (statsCols.forall(flat.columns.contains)) statsCols else Nil)(_.map(_ => Nil))
     newTopicDir
   }
 
@@ -2009,17 +2140,16 @@ object OffsetNamedOrcSink {
     * → hoist protocol as write(), so a crash mid-erasure recovers
     * identically and the operation is re-runnable until it returns 0.
     * Chunks left with NO survivors have their committed files deleted
-    * directly (a leaf with no rows stages no file to hoist); those deletes are idempotent single FS ops, done before the rewrite so
-    * any crash leaves only convergent work. Non-matching rows are only ever
-    * rewritten, never dropped; rows where the predicate evaluates NULL are
-    * kept (deleted ⟺ predicate TRUE — the SQL DELETE contract).
+    * directly (a leaf with no rows stages no file to hoist): the commit's
+    * map stage finds the leaves that still hold rows, and the others are
+    * deleted before its marker. Those deletes are idempotent single FS ops,
+    * so any crash leaves only convergent work. Non-matching rows are only
+    * ever rewritten, never dropped; rows where the predicate evaluates NULL
+    * are kept (deleted ⟺ predicate TRUE — the SQL DELETE contract).
     *
     * Finding the touched chunks takes one full read of the topic (a
     * maintenance-path listing, like compactTo/expire) — but the REWRITE is
-    * O(touched chunks × flushSize), never O(topic). Survivor rows are
-    * localCheckpoint-materialized before the commit, because the stats
-    * refresh reads them again after the hoist has replaced the very files
-    * they came from. Returns #rows deleted.
+    * O(touched chunks × flushSize), never O(topic). Returns #rows deleted.
     */
   def deleteRows(spark: SparkSession, topicDir: String,
       predicate: org.apache.spark.sql.Column): Long = {
@@ -2071,36 +2201,25 @@ object OffsetNamedOrcSink {
       .select(partCols.map { c =>
         if (prefixCols.contains(c)) col(c).cast("string").as(c) else col(c)
       } ++ (col("offset") +: valueCols.map(col)): _*)
-      .localCheckpoint(true)
     val deleted = nBefore - survivors.count()
     if (deleted == 0L) return 0L
 
-    // chunks with zero survivors stage nothing — delete their committed
-    // files directly (idempotent, convergent)
-    val alive = survivors
-      .select(partCols.map(c => col(c).cast("string")): _*)
-      .distinct().collect()
-      .map(r => (0 until partCols.size).map(r.getString).mkString("\u0000"))
-      .toSet
-    val (liveTouched, emptyTouched) = touched.partition(t =>
-      alive((t.prefix.map(_._2) ++ Seq(t.partition.toString, t.cell))
-        .mkString("\u0000")))
-    emptyTouched.foreach(t =>
-      committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic))
-        .foreach(f => fs.delete(f.getPath, false)))
-    if (liveTouched.nonEmpty)
-      commit(spark, fs, root, topic, survivors, partCols, liveTouched,
-        Map.empty, dedup = false)
-    // stats refresh AFTER the commit: erased rows must stop being described
+    // stats refresh AFTER the hoist: erased rows must stop being described
     // by the skipping metadata (a stale min/max is only a safe
     // over-approximation until then), and the post-commit order means a
     // crash can never leave stats NARROWER than the surviving data
-    statsColsOf(desc).foreach { sc =>
-      if (sc.forall(survivors.columns.contains) && liveTouched.nonEmpty)
-        updateStats(fs, root, survivors, partCols, liveTouched, sc,
-          distinctOffsets = false)
-      removeStatsLines(fs, root, emptyTouched)
+    val statsCols = statsColsOf(desc).filter(_.forall(survivors.columns.contains))
+    val live = commit(spark, fs, root, topic, survivors, partCols, Map.empty,
+        statsCols.getOrElse(Nil), statsAfterHoist = true) { live =>
+      // chunks with zero survivors stage nothing — delete their committed
+      // files directly (idempotent, convergent)
+      touched.filterNot(live.toSet).foreach(t =>
+        committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic))
+          .foreach(f => fs.delete(f.getPath, false)))
+      live.map(_ => Nil)
     }
+    rewriteStats(fs, root, partCols.size, Map.empty,
+      touched.filterNot(live.toSet).map(_.markerLine).toSet)
     deleted
   }
 }

@@ -568,8 +568,8 @@ object StreamOps {
   }
 
   /** The reference's end-to-end job as a stream: file source → Kafka shape →
-    * offset-named chunked ORC files, exactly-once via checkpoint + idempotent
-    * dynamic-partition overwrite (O7/O10/O11).
+    * offset-named chunked ORC files, exactly-once via checkpoint + the
+    * sink's idempotent offset-named commit (O7/O10/O11).
     */
   def runPipeline(spark: SparkSession, srcDir: String, outDir: String,
       checkpointDir: String, flushSize: Long = 250,

@@ -1570,18 +1570,28 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
     assert(skipped(topicDir, strWindow)._1 == nAll)
   }
 
-  /** Spark jobs started while `body` runs. Listener events arrive in order,
-    * so once a sentinel job that starts after `body` is seen, every job
-    * `body` started has been counted.
-    */
+  /** Spark jobs started while `body` runs. */
   private def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (out, work) = workDuring(body)
+    (out, work.jobs)
+  }
+
+  /** The Spark work started while `body` runs. Listener events arrive in
+    * order, so once a sentinel job that starts after `body` is seen, every
+    * job `body` started, and every task of those jobs, has been counted.
+    */
+  private def workDuring[T](body: => T): (T, OffsetNamedOrcSinkSpec.Work) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
     val sentinel = s"graft-sentinel-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Either[String, (Long, Long)]]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+        seen.add(Left(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => seen.add(Right(
+          (m.inputMetrics.recordsRead, m.outputMetrics.recordsWritten))))
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -1590,9 +1600,13 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
       sc.setJobDescription(sentinel)
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(sentinel), "sentinel job never reached the listener")
-      (out, seen.toArray.takeWhile(_ != sentinel).length)
+      while (!seen.contains(Left(sentinel)) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(Left(sentinel)), "sentinel job never reached the listener")
+      val events = seen.toArray.toSeq.asInstanceOf[Seq[Either[String, (Long, Long)]]]
+        .takeWhile(_ != Left(sentinel))
+      val tasks = events.collect { case Right(t) => t }
+      (out, OffsetNamedOrcSinkSpec.Work(events.count(_.isLeft), tasks.map(_._1),
+        tasks.map(_._2)))
     } finally sc.removeSparkListener(listener)
   }
 
@@ -1733,4 +1747,101 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
     assertCleanOnce(topicDir, 1000)
     assert(!new java.io.File(topicDir, "_graft_inflight").exists)
   }
+
+
+  // ------------------------------------------------------------ two-stage commit
+
+  test("a steady-state commit runs two jobs, reads its batch once and writes <= ceil(leaves/tasks) files per task") {
+    // 9 leaves of 100 rows each: partitions 0..2 × chunks 0, 100, 200
+    val src = s"${freshOut()}/batch"
+    spark.range(900).select(
+      col("id").cast("string").cast("binary").as("key"),
+      struct(col("id").as("id")).as("value"), lit("events").as("topic"),
+      pmod(col("id"), lit(3)).cast("int").as("partition"),
+      expr("id div 3").as("offset"), timestamp_seconds(col("id")).as("timestamp"))
+      .write.parquet(src)
+    val batch = spark.read.parquet(src)
+    val out = freshOut()
+    val topicDir = OffsetNamedOrcSink.write(batch, out, flushSize = 100)
+    // the replay merges every leaf's committed file back in
+    val (_, work) = workDuring(OffsetNamedOrcSink.write(batch, out, flushSize = 100))
+    assert(work.jobs == 2, s"${work.jobs} jobs")
+    assert(work.recordsRead.sum == 900, s"${work.recordsRead.sum} batch records read")
+    // a leaf holds 100 rows, so a task writing <= 300 records wrote <= 3 files
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val perTask = work.recordsWritten.filter(_ > 0)
+    assert(perTask.size == 4 && perTask.sum == 900 && perTask.forall(_ <= 300),
+      perTask.mkString(", "))
+    assert(orcFiles(topicDir).length == 9)
+    assertCleanOnce(topicDir, 900)
+  }
+
+  /** Kafka-shaped rows of offsets [from, until) in each of two partitions,
+    * with a long stats column `y`. */
+  private def twoPartitions(from: Long, until: Long) =
+    spark.range(2 * from, 2 * until).select(
+      col("id").cast("string").cast("binary").as("key"),
+      struct(col("id").as("id"), pmod(col("id") * 7, lit(13)).as("y")).as("value"),
+      lit("events").as("topic"),
+      pmod(col("id"), lit(2)).cast("int").as("partition"),
+      expr("id div 2").as("offset"),
+      timestamp_seconds(col("id")).as("timestamp"))
+
+  test("crash sweep: a write failed at any mutating FS call replays to each offset exactly once") {
+    val sc = spark.sparkContext
+    sc.hadoopConfiguration.set(s"fs.${FaultFs.Scheme}.impl", classOf[FaultFs].getName)
+    // batch A lands offsets [0, 70) of two partitions; batch B, [60, 120),
+    // merges into chunk 50 and opens chunk 100: 4 leaves, 2 of them merged
+    def write(out: String, from: Long, until: Long) = OffsetNamedOrcSink.write(
+      twoPartitions(from, until), FaultFs.uriOf(out), flushSize = 50, statsColumns = Seq("y"))
+    val landedA = freshOut()
+    write(landedA, 0, 70)
+    def landed(): String = {
+      val out = freshOut()
+      val from = java.nio.file.Paths.get(landedA)
+      Files.walk(from).forEach { p =>
+        val to = java.nio.file.Paths.get(out).resolve(from.relativize(p))
+        if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+      }
+      out
+    }
+    // a failed job's other tasks may still be running: let them finish
+    def quiesce(): Unit = {
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      while (sc.statusTracker.getExecutorInfos.exists(_.numRunningTasks > 0) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    }
+    FaultFs.arm(0)
+    write(landed(), 60, 120)
+    val calls = FaultFs.disarm()
+    assert(calls >= 15, s"$calls mutating calls in one commit")
+    for (k <- 1 to calls) {
+      val out = landed()
+      val topicDir = s"${FaultFs.uriOf(out)}/topics/events"
+      FaultFs.arm(k)
+      val failed = try { write(out, 60, 120); false }
+        catch { case scala.util.control.NonFatal(_) => true }
+        finally { FaultFs.disarm(); () }
+      quiesce()
+      assert(failed, s"call $k of $calls did not fail the write")
+      val marker = new java.io.File(out, "topics/events/_graft_inflight")
+      val marked = marker.exists
+      OffsetNamedOrcSink.read(spark, topicDir).count()
+      assert(marker.exists == marked, s"call $k: read() deleted the in-flight marker")
+      write(out, 60, 120)
+      val back = OffsetNamedOrcSink.read(spark, topicDir)
+      assert(back.count() == 240 &&
+        back.select("partition", "offset").distinct().count() == 240, s"call $k")
+      assert(OffsetNamedOrcSink.manifest(spark, topicDir).agg(sum("n_rows")).head().getLong(0) == 240,
+        s"call $k: manifest row counts")
+      assert(!marker.exists, s"call $k")
+    }
+  }
+}
+
+object OffsetNamedOrcSinkSpec {
+  /** Spark work a body started: its jobs, and per finished task the records
+    * it read from input and wrote as output.
+    */
+  final case class Work(jobs: Int, recordsRead: Seq[Long], recordsWritten: Seq[Long])
 }

@@ -163,6 +163,23 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streamFromDir reads ts in its files' unit: streamed timestamps equal fromEvents row for row") {
+    // the test corpus stores TIMESTAMP(MICROS); read as ns they land in 1970
+    val srcDir = tmp("graft-streamts-src-")
+    Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
+      java.nio.file.Paths.get(srcDir, "events.parquet"))
+    val q = KafkaShaped.streamFromDir(spark, srcDir)
+      .select("partition", "offset", "timestamp")
+      .writeStream.format("memory").queryName("streamts_test")
+      .trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    val streamed = spark.table("streamts_test")
+    val batch = KafkaShaped.fromEvents(spark, sf).select("partition", "offset", "timestamp")
+    assert(streamed.count() == 1000)
+    assert(streamed.exceptAll(batch).count() == 0 && batch.exceptAll(streamed).count() == 0,
+      streamed.exceptAll(batch).take(3).mkString(", "))
+  }
+
   test("file-source streaming pipeline lands offset-named ORC exactly once") {
     // stage the sf0.001 events as the streaming source directory
     val srcDir = tmp("graft-stream-src-")
