@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaCo
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.io.LocalCheckpointFileManager
 
 /** Kafka-source-shaped record stream (SURVEY.md §1.1, reference O1).
   *
@@ -85,9 +86,14 @@ object KafkaShaped {
     * µs; TIMESTAMP(MICROS) is read as it is. An empty dir assumes MICROS,
     * the unit of the test corpus and the benchmark's generator. Every file
     * of one dir must share the unit.
+    *
+    * Installs `LocalCheckpointFileManager` as the session's checkpoint file
+    * manager unless one is configured, so the streams started from it
+    * write their `file:` checkpoint logs without forking a process.
     */
   def streamFromDir(spark: SparkSession, dir: String, nPartitions: Int = 4): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    LocalCheckpointFileManager.install(spark)
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)

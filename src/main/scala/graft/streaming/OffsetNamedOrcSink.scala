@@ -40,6 +40,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.{CollectionAccumulator, SerializableConfiguration}
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
+import graft.io.LocalFs
 
 /** Offset-named, rotation-chunked, idempotent ORC sink — the one piece of the
   * reference that Spark's file sink does not provide (SURVEY.md §4
@@ -345,7 +346,7 @@ object OffsetNamedOrcSink {
     * (`OrcRecordWriter.java:133-152` / the connector's `store.url`,
     * path-style and env-credential behavior). Offline-testable: it only
     * sets `fs.s3a.*` keys on a Hadoop `Configuration`; the write path is
-    * already scheme-parameterized via `FileSystem.get(URI)`.
+    * already scheme-parameterized via the topic dir's URI (`topicFs`).
     */
   final case class S3AConf(
       endpoint: Option[String] = None,
@@ -380,6 +381,13 @@ object OffsetNamedOrcSink {
     val probes = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     def reset(): Unit = { dirsListed.clear(); probes.clear() }
   }
+
+  /** The file system of a topic dir, resolved from its URI under the
+    * session's Hadoop conf. A local (`file:`) dir gets `LocalFs`, so the
+    * sink's own creates and mkdirs fork no `chmod`.
+    */
+  private def topicFs(spark: SparkSession, topicDir: String): FileSystem =
+    LocalFs.fileSystem(new java.net.URI(topicDir), spark.sparkContext.hadoopConfiguration)
 
   private def listDir(fs: FileSystem, dir: Path): Seq[FileStatus] = {
     if (FsAudit.enabled) FsAudit.dirsListed.add(dir.toString)
@@ -487,8 +495,7 @@ object OffsetNamedOrcSink {
 
     val topicDir = s"$outDir/topics/$topic"
     val root = new Path(topicDir)
-    val fs = FileSystem.get(new java.net.URI(topicDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = topicFs(spark, topicDir)
 
     validateLayout(layout)
     ensureConfig(fs, root, flushSize, layout, rotateMs,
@@ -680,7 +687,9 @@ object OffsetNamedOrcSink {
         val dataSchema = nullable(StructType(dataCols.map(rows.schema(_)))).asInstanceOf[StructType]
         val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(orcOptions))
         val factory = new OrcFileFormat().prepareWrite(spark, job, orcOptions, dataSchema)
-        // one broadcast serves the read-back and the writers
+        // one broadcast serves the read-back and the writers; their local
+        // files go through LocalFs, like the driver's (`topicFs`)
+        LocalFs.mapFileScheme(job.getConfiguration)
         val conf = sc.broadcast(new SerializableConfiguration(job.getConfiguration))
         try {
           val tasks = new LeafTasks(attrs.map(_.dataType).toArray, keyOrdinals.toArray,
@@ -1101,8 +1110,7 @@ object OffsetNamedOrcSink {
   def migrate(spark: SparkSession, topicDir: String, flushSize: Long,
       layout: Layout = Layout.KafkaPartition): Unit = {
     require(flushSize > 0, "flush.size must be positive")
-    val fs = FileSystem.get(new java.net.URI(topicDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     require(fs.exists(root), s"$topicDir does not exist")
     val inflight = new Path(root, InflightMarker)
@@ -1363,8 +1371,7 @@ object OffsetNamedOrcSink {
     * exactly what the unpruned scan would.
     */
   def read(spark: SparkSession, topicDir: String): DataFrame = {
-    val fs = FileSystem.get(new java.net.URI(topicDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     val inflight = new Path(root, InflightMarker)
     if (fs.exists(inflight))
@@ -1669,8 +1676,7 @@ object OffsetNamedOrcSink {
     * maintenance-listing control-plane sanction.
     */
   def manifest(spark: SparkSession, topicDir: String): DataFrame = {
-    val fs = FileSystem.get(new java.net.URI(topicDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     val inflight = new Path(root, InflightMarker)
     if (fs.exists(inflight))
@@ -1802,8 +1808,7 @@ object OffsetNamedOrcSink {
     */
   private def readAsOfCore(spark: SparkSession, topicDir: String,
       column: String, lo: Any, hi: Any, wantString: Boolean): DataFrame = {
-    val fs = FileSystem.get(new java.net.URI(topicDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     val topic = root.getName
     val inflight = new Path(root, InflightMarker)
@@ -1862,8 +1867,7 @@ object OffsetNamedOrcSink {
       untilOffset: Long): DataFrame = {
     require(fromOffset < untilOffset,
       s"empty offset range [$fromOffset, $untilOffset)")
-    val fs = FileSystem.get(new java.net.URI(topicDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     val topic = root.getName
     val inflight = new Path(root, InflightMarker)
@@ -1920,8 +1924,7 @@ object OffsetNamedOrcSink {
     * shape without guessing from listings.
     */
   def layoutId(spark: SparkSession, topicDir: String): String = {
-    val fs = FileSystem.get(new java.net.URI(topicDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = topicFs(spark, topicDir)
     readMarker(fs, new Path(new Path(topicDir), ConfigMarker)) match {
       case Some(desc) => parseConfig(desc)._2
       case None => "kafka-partition" // legacy dir: the default layout
@@ -1968,8 +1971,7 @@ object OffsetNamedOrcSink {
   def compactTo(spark: SparkSession, topicDir: String, outDir: String,
       targetFlushSize: Long,
       orcOptions: Map[String, String] = Map.empty): String = {
-    val fs = FileSystem.get(new java.net.URI(topicDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     val topic = root.getName
     val desc = readMarker(fs, new Path(root, ConfigMarker)).getOrElse(
@@ -1993,8 +1995,7 @@ object OffsetNamedOrcSink {
 
     val newTopicDir = s"$outDir/topics/$topic"
     val newRoot = new Path(newTopicDir)
-    val newFs = FileSystem.get(new java.net.URI(newTopicDir),
-      spark.sparkContext.hadoopConfiguration)
+    val newFs = topicFs(spark, newTopicDir)
     // carry the stats contract VERBATIM (incl. :str type decorations): the
     // compacted topic keeps file-skipping metadata if the source tracked it
     // (recomputed below on the new grid)
@@ -2033,8 +2034,7 @@ object OffsetNamedOrcSink {
     * Maintenance-path listing, like compactTo. Returns #files deleted.
     */
   def expire(spark: SparkSession, topicDir: String, beforeOffset: Long): Int = {
-    val fs = FileSystem.get(new java.net.URI(topicDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     if (!fs.exists(root)) return 0
     val topic = root.getName
@@ -2089,8 +2089,7 @@ object OffsetNamedOrcSink {
     * driver-side list bounded by orphan count, never data-sized.
     */
   def vacuumOrphans(spark: SparkSession, topicDir: String): Seq[String] = {
-    val fs = FileSystem.get(new java.net.URI(topicDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     if (!fs.exists(root)) return Nil
     val topic = root.getName
@@ -2153,8 +2152,7 @@ object OffsetNamedOrcSink {
     */
   def deleteRows(spark: SparkSession, topicDir: String,
       predicate: org.apache.spark.sql.Column): Long = {
-    val fs = FileSystem.get(new java.net.URI(topicDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     val topic = root.getName
     val inflight = new Path(root, InflightMarker)

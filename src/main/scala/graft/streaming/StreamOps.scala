@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery, Trigger}
+import graft.io.LocalCheckpointFileManager
 import graft.sources.KafkaShaped
 
 /** Structured Streaming module (SURVEY.md §7 step 4; reference O1/O9 with
@@ -680,10 +681,15 @@ object StreamOps {
     * normally `KafkaShaped.valueSchema` plus whatever the drift policy
     * latched). `maxFilesPerTrigger` bounds per-batch work for backfills over
     * topics with many committed files.
+    *
+    * Installs `LocalCheckpointFileManager` as the session's checkpoint file
+    * manager unless one is configured, so the streams started from it
+    * write their `file:` checkpoint logs without forking a process.
     */
   def streamFromSink(spark: SparkSession, topicDir: String,
       valueSchema: org.apache.spark.sql.types.StructType,
       maxFilesPerTrigger: Int = 1000): DataFrame = {
+    LocalCheckpointFileManager.install(spark)
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     // recursiveFileLookup DISABLES directory-based partition inference —
     // the race-proofing: a mid-commit `_chunk=` staging dir (exempt from the

@@ -4,10 +4,10 @@ import java.io.IOException
 import java.net.URI
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path,
-  RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import graft.io.LocalFs
 
 /** The local file system under its own scheme, `faultfs:///<abs path>`,
   * that fails the k-th mutating call (create, rename, delete, mkdirs) once
@@ -57,8 +57,9 @@ object FaultFs {
   }
 
   /** The raw layer answers to `faultfs:///`, so paths of that scheme pass
-    * its scheme check. */
-  final class Raw extends RawLocalFileSystem {
+    * its scheme check; permissions are set in-process, as on the sink's
+    * own `file:` dirs (`graft.io.LocalFs`). */
+  final class Raw extends LocalFs.Raw {
     override def getUri: URI = URI.create(s"$Scheme:///")
     override def getScheme: String = Scheme
   }

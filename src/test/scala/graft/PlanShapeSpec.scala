@@ -1329,4 +1329,39 @@ class PlanShapeSpec extends SparkSpec {
     val byBin = base.orderBy(unhex(col("h"))).collect().map(_.getString(0))
     assert(byHex.sameElements(byBin), "binary md5 order diverges from hex order")
   }
+
+  test("graft.broadcast.maxKeys=0 sends the lm_score and boilerplate joins down their shuffle branch, still oracle-exact") {
+    // size-only broadcasts are off in both sessions, so a BroadcastHashJoin
+    // can come only from the size-guarded hint
+    def session(maxKeys: Option[String]) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      maxKeys.foreach(s.conf.set("graft.broadcast.maxKeys", _))
+      s
+    }
+    val guarded = Seq("q_text_lm_score", "q_text_boilerplate")
+    val (hinted, capped) = (session(None), session(Some("0")))
+    val dump = java.nio.file.Files.createTempDirectory("graft-maxkeys-").toString
+    guarded.foreach { name =>
+      val b = SparkEntry.queries(name)(hinted, sf).queryExecution.executedPlan.toString
+      assert(b.contains("BroadcastHashJoin"), s"$name below the guard:\n" + b.take(3000))
+      val df = SparkEntry.queries(name)(capped, sf)
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("BroadcastHashJoin") && p.contains("SortMergeJoin"),
+        s"$name above the guard:\n" + p.take(3000))
+      df.coalesce(1).write.parquet(s"$dump/$name")
+    }
+    def q(v: String) = "\"" + v.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(dump, "oracle_sql.json"),
+      guarded.map(n => s"${q(n)}: ${q(SparkEntry.oracleSql(n))}").mkString("{", ",", "}"))
+    val pb = new ProcessBuilder(Seq("python3", "tools/check_oracles.py", sf, dump) ++ guarded: _*)
+    pb.redirectErrorStream(true)
+    val proc = pb.start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    assert(proc.waitFor() == 0 && out.contains("== 2 ok, 0 fail =="), out)
+  }
 }

@@ -7,7 +7,7 @@ box-speed anchor so a future round can adjudicate "uniform slowdown vs
 real regression" with a measured ratio instead of a median-of-ratios
 argument.
 
-Four numbers, best-of-5 trials each:
+Four numbers, best-of-5 trials each, and the process tax:
   st_mibps  — single-thread sha256 over a fixed 1 MiB buffer, MiB/s.
   mt_mibps  — the same work fanned across all cores via multiprocessing.
   mem_gbps  — single-thread large-block memcpy (256 MiB bytearray copy),
@@ -18,6 +18,10 @@ Four numbers, best-of-5 trials each:
   steal_pct — guest-visible hypervisor steal (/proc/stat field 8) sampled
               across the mt phase, i.e. WHILE all cores are busy; idle
               steal reads ~0 even on a throttled host.
+  spawn_ms  — median wall time to spawn and reap `/bin/true`, over 20
+              trials, ms: the host's per-process tax. Every fork a JVM
+              makes (Hadoop's `chmod`/`readlink` shell-outs on a host
+              without its native library) pays at least this much.
 
 Usage: boxprobe.py [OUT.json]   (prints one JSON line; also writes OUT)
 """
@@ -25,6 +29,8 @@ import hashlib
 import json
 import multiprocessing as mp
 import os
+import statistics
+import subprocess
 import sys
 import time
 
@@ -67,6 +73,18 @@ def best_of(f, n=5):
     return best
 
 
+SPAWN_TRIALS = 20
+
+
+def spawn_ms():
+    times = []
+    for _ in range(SPAWN_TRIALS):
+        t0 = time.perf_counter()
+        subprocess.run(["/bin/true"], check=True)
+        times.append(time.perf_counter() - t0)
+    return statistics.median(times) * 1000
+
+
 def main():
     mib = ROUNDS  # MiB hashed per single call
     st = best_of(hash_work)
@@ -81,6 +99,7 @@ def main():
         "mt_mibps": round(mib * ncpu / mt, 1),
         "mem_gbps": round(MEM_MIB / 1024 / mem, 2),
         "steal_pct": round(100 * (s1 - s0) / max(t1 - t0, 1), 2),
+        "spawn_ms": round(spawn_ms(), 3),
         "ncpu": ncpu,
         "load1": round(os.getloadavg()[0], 2),
         "ts": int(time.time()),
