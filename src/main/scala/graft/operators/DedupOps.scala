@@ -998,8 +998,10 @@ object DedupOps extends QueryModule {
       // MEMORY_AND_DISK, spills rather than OOMs at scale.
       // NARROW candidate schema (r13, guide §2.3/§5): every column that
       // crosses the candidate join's exchanges is INT, not LONG — doc ids
-      // (dense, < 2³¹ at any plausible doc count; the cast back to LONG at
-      // the output boundary restores the exact original values), set sizes
+      // (the contract: every doc_id fits an INT. Under ANSI mode, Spark's
+      // default, a doc_id >= 2³¹ makes the `int` cast below throw; with
+      // ANSI off it would wrap silently. The cast back to LONG at the
+      // output boundary restores the exact original values), set sizes
       // and prefix positions (≤ doc token count), and the enumerated
       // partner (size, position) keys. The join keys (ptok, nb, pb) drop
       // from 24 to 12 bytes/row and the carried payload halves — same

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.io.{FileNotFoundException, IOException}
-import java.net.URLEncoder
+import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.jdk.CollectionConverters._
@@ -113,13 +113,6 @@ object OffsetNamedOrcSink {
   private val ConfigMarker = "_graft_sink.conf"
   private val SchemaMarker = "_graft_schema.json"
 
-  /** Tail of every committed file name:
-    * `+<zero-padded chunk>[+t<time bucket>][-N].orc` — group 1 is the
-    * offset-chunk start, group 2 the wall-clock-rotation bucket (empty when
-    * rotation is off).
-    */
-  private val CommittedTailRe = raw"\+(\d+)(?:\+t(-?\d+))?(?:-\d+)?\.orc$$"
-
   /** Output directory layout under `topics/<topic>/` (the reference's
     * partitioner surface, `S3SinkConnectorTestBase.java:62-64`:
     * `partition.field.name` / `path.format` / timezone).
@@ -198,6 +191,41 @@ object OffsetNamedOrcSink {
         .split(",").toSeq.map(_.split("=", 2)(0))
     else if (layoutId.startsWith("field:")) Seq(layoutId.stripPrefix("field:"))
     else throw new IllegalStateException(s"unknown sink layout id: $layoutId")
+
+  /** A topic's `_graft_sink.conf` marker: the offset chunk grid, the layout
+    * id, the wall-clock rotation, and the type-decorated stats columns (see
+    * `statsDecl`), whose ORDER fixes which |mn|mx pair of a stats line
+    * belongs to which column. A write compares the stored payload with its
+    * own `render` by string equality, so a value renders the same bytes
+    * for as long as topics written with it exist.
+    */
+  private final case class SinkConfig(flushSize: Long, layoutId: String,
+      rotateMs: Option[Long] = None, stats: Seq[String] = Nil) {
+    def render: String = s"flushSize=$flushSize\nlayout=$layoutId" +
+      rotateMs.fold("")(ms => s"\nrotate=$ms") +
+      (if (stats.isEmpty) "" else s"\nstats=${stats.mkString(",")}")
+    def prefixCols: Seq[String] = prefixColsOf(layoutId)
+    /** The stats columns as (name, isString): a bare token is the
+      * long-typed form, `name:str` a string-bounded pair.
+      */
+    def statsSpec: Seq[(String, Boolean)] = stats.map { tok =>
+      if (tok.endsWith(":str")) (tok.dropRight(4), true) else (tok, false)
+    }
+    def statsCols: Seq[String] = statsSpec.map(_._1)
+  }
+
+  private object SinkConfig {
+    def parse(desc: String): SinkConfig = {
+      val kv = desc.linesIterator.flatMap { l =>
+        l.split("=", 2) match { case Array(k, v) => Some(k -> v); case _ => None }
+      }.toMap
+      SinkConfig(kv.get("flushSize").map(_.toLong).getOrElse(
+          throw new IllegalStateException(s"no flushSize in sink config: $desc")),
+        kv.getOrElse("layout", "kafka-partition"),
+        kv.get("rotate").map(_.toLong),
+        kv.get("stats").fold(Seq.empty[String])(_.split(",", -1).toSeq))
+    }
+  }
 
   private val LevelName = "[A-Za-z0-9_]+".r
   private val ReservedCols =
@@ -412,12 +440,48 @@ object OffsetNamedOrcSink {
       case Array(c, b) => (c.toLong, Some(b))
     }
 
-  /** Committed file prefix of a cell (reference `FileUtils.fileKeyToCommit`
-    * naming, extended with `+t<bucket>` under wall-clock rotation).
+  /** A committed file name's fields as written: the partition, the
+    * zero-padded offset chunk, and `prefix`, the name up to the end of its
+    * cell (the `CommittedName.prefix` of that cell).
     */
-  private def cellFilePrefix(topic: String, partition: String, cell: String): String = {
-    val (chunk, bucket) = cellParts(cell)
-    f"${fileTopic(topic)}+$partition+$chunk%010d" + bucket.fold("")(b => s"+t$b")
+  private[graft] final case class CommittedName(partition: String, chunk: String,
+      prefix: String)
+
+  /** Every committed file name:
+    * `<topic>+<partition>+<%010d chunk>[+t<time bucket>][-N].orc` — the
+    * reference's `FileUtils.fileKeyToCommit` naming, extended with
+    * `+t<bucket>` under wall-clock rotation, and a `-N` suffix for extra
+    * files of one cell. Formatted by `prefix` and parsed by `parse` and
+    * `Tail` only.
+    */
+  private[graft] object CommittedName {
+    /** The name after `<topic>`, anchored at its end, so it also matches a
+      * whole path (Spark's `regexp_extract` over `input_file_name()`):
+      * group 1 is the partition, group 2 the offset chunk, group 3 the time
+      * bucket (empty when rotation is off).
+      */
+    val Tail = raw"\+(\d+)\+(\d+)(?:\+t(-?\d+))?(?:-\d+)?\.orc$$"
+    private val TailRe = Tail.r
+
+    /** The committed name of a cell, up to its `[-N].orc` ending. */
+    def prefix(topic: String, partition: String, cell: String): String = {
+      val (chunk, bucket) = cellParts(cell)
+      f"${fileTopic(topic)}+$partition+$chunk%010d" + bucket.fold("")(b => s"+t$b")
+    }
+
+    /** A cell's `n`-th committed file: `<prefix>.orc`, then `<prefix>-<n>.orc`. */
+    def file(prefix: String, n: Int): String =
+      if (n == 0) s"$prefix.orc" else s"$prefix-$n.orc"
+
+    /** The fields of `name` if it is a committed name of `topic`. */
+    def parse(topic: String, name: String): Option[CommittedName] = {
+      val t = fileTopic(topic)
+      if (!name.startsWith(t)) None
+      else TailRe.findPrefixMatchOf(name.substring(t.length)).map { m =>
+        CommittedName(m.group(1), m.group(2),
+          name.substring(0, t.length + (if (m.group(3) != null) m.end(3) else m.end(2))))
+      }
+    }
   }
 
   /** One output leaf touched by the current batch. `prefix` carries the
@@ -437,7 +501,7 @@ object OffsetNamedOrcSink {
       new Path(base, s"partition=$partition")
     }
     def filePrefix(topic: String): String =
-      cellFilePrefix(topic, partition.toString, cell)
+      CommittedName.prefix(topic, partition.toString, cell)
     /** The leaf's line in the in-flight marker, and the key of its
       * `_graft_stats` line: url-encoded prefix values, partition and cell,
       * '|'-joined. URL-encoding makes the split unambiguous for arbitrary
@@ -448,6 +512,24 @@ object OffsetNamedOrcSink {
     def markerLine: String =
       (prefix.map(p => URLEncoder.encode(p._2, "UTF-8")) ++
         Seq(partition.toString, cell)).mkString("|")
+  }
+
+  private object Touched {
+    private val Cell = raw"\d+(?:t-?\d+)?".r
+
+    /** The leaf whose `markerLine` leads `fields`, the '|'-split fields of
+      * an in-flight marker line or a `_graft_stats` line, on a layout with
+      * the dir levels `prefixNames`. None when those fields are no key.
+      */
+    def parse(fields: Array[String], prefixNames: Seq[String]): Option[Touched] = {
+      val n = prefixNames.size
+      if (fields.size < n + 2 || !Cell.matches(fields(n + 1))) None
+      else try {
+        cellParts(fields(n + 1)) // the chunk must fit a long
+        Some(Touched(prefixNames.zip(fields.take(n).map(URLDecoder.decode(_, "UTF-8"))),
+          fields(n).toInt, fields(n + 1)))
+      } catch { case _: IllegalArgumentException => None } // incl. NumberFormatException
+    }
   }
 
   /** Write a Kafka-shaped DataFrame (key, value:struct, topic, partition,
@@ -561,16 +643,11 @@ object OffsetNamedOrcSink {
     // that describe the post-recovery content: each touched cell's new
     // content is its batch rows plus its read-back, exactly what the
     // commit's stats job folds
-    val inflight = new Path(root, InflightMarker)
     commit(spark, fs, root, topic, flat, partCols, orcOptions, statsColumns) { touched =>
-      // RECOVERY (rare, marker-gated): a crash inside a previous commit left
-      // merged rows inside `_chunk=` staging dirs. Re-running the hoist pass
-      // makes the name-based probes below complete again. Steady state never
-      // enters this branch — no per-batch directory walk.
-      if (fs.exists(inflight)) {
-        recoverFromMarker(fs, root, topic, inflight)
-        fs.delete(inflight, false)
-      }
+      // a crash inside a previous commit left merged rows inside `_chunk=`
+      // staging dirs: hoisting them makes the name-based probes below
+      // complete again
+      recoverIfCrashed(fs, root, clear = true)
       // the touched leaves' existing files have deterministic names, so the
       // read-back probes exactly those names (never a directory scan)
       touched.map(t => committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic)))
@@ -697,7 +774,7 @@ object OffsetNamedOrcSink {
             leaves.map(_._3).toArray, runs,
             readBack.map(_.map(f => (f.getPath.toString, f.getLen)).toArray).toArray,
             spark.sessionState.conf.caseSensitiveAnalysis, conf)
-          val stats = if (statsCols.isEmpty) Map.empty[String, String] else {
+          val stats = if (statsCols.isEmpty) Map.empty[Touched, String] else {
             val isStr = statsCols.map(dataSchema(_).dataType == StringType)
             val values = statsCols.zip(isStr).map { case (c, str) =>
               val v = BoundReference(1 + dataSchema.fieldIndex(c), dataSchema(c).dataType, nullable = true)
@@ -706,10 +783,11 @@ object OffsetNamedOrcSink {
             sc.runJob(reduce, (ctx: TaskContext, it: Iterator[InternalRow]) =>
                 statsTails(tasks.rows(ctx, it), values, isStr.toArray))
               .flatten.map { case (l, tail) =>
-                touched(l).markerLine -> s"${touched(l).markerLine}|$tail"
+                touched(l) -> s"${touched(l).markerLine}|$tail"
               }.toMap
           }
-          if (!statsAfterHoist) rewriteStats(fs, root, partCols.size, stats)
+          val prefixNames = partCols.take(nPrefix)
+          if (!statsAfterHoist) rewriteStats(fs, root, prefixNames, stats)
           val inflight = new Path(root, InflightMarker)
           writeMarker(fs, inflight, touched.map(_.markerLine).mkString("\n"))
           val writer = new LeafWriter(
@@ -720,7 +798,7 @@ object OffsetNamedOrcSink {
           touched.foreach(t =>
             hoistChunkDir(fs, t.partitionDir(root), t.partition.toString, t.cell, topic))
           fs.delete(inflight, false)
-          if (statsAfterHoist) rewriteStats(fs, root, partCols.size, stats)
+          if (statsAfterHoist) rewriteStats(fs, root, prefixNames, stats)
         } finally conf.destroy()
       }
       touched
@@ -804,10 +882,10 @@ object OffsetNamedOrcSink {
     out.result()
   }
 
-  /** Replace the `_graft_stats` lines of the `fresh` cells (key → line) and
-    * drop those of the `gone` cells (keys); a line's key is its first
-    * `nKey` fields. Other cells' lines are kept, and the file is rewritten
-    * in full, sorted.
+  /** Replace the `_graft_stats` lines of the `fresh` cells (cell → line)
+    * and drop those of the `gone` cells, on a layout with the dir levels
+    * `prefixNames`. Other cells' lines, and lines that name no cell, are
+    * kept, and the file is rewritten in full, sorted.
     *
     * One line per committed cell,
     * `<enc prefix values>|partition|cell|n_rows|mn1|mx1|mn2|mx2|…`: the
@@ -823,17 +901,15 @@ object OffsetNamedOrcSink {
     * shorter and every reader dispatches per line, so mixed-era markers (old
     * cells untouched, replayed cells fresh) parse exactly.
     */
-  private def rewriteStats(fs: FileSystem, root: Path, nKey: Int,
-      fresh: Map[String, String], gone: Set[String] = Set.empty): Unit = {
+  private def rewriteStats(fs: FileSystem, root: Path, prefixNames: Seq[String],
+      fresh: Map[Touched, String], gone: Set[Touched] = Set.empty): Unit = {
     if (fresh.isEmpty && gone.isEmpty) return
     val statsPath = new Path(root, StatsMarker)
     val old = readMarker(fs, statsPath)
     if (fresh.isEmpty && old.isEmpty) return
     val kept = old.fold(Seq.empty[String])(_.linesIterator.filter(_.nonEmpty).toSeq)
-      .filterNot { l =>
-        val key = l.split("\\|", -1).take(nKey).mkString("|")
-        fresh.contains(key) || gone(key)
-      }
+      .filterNot(l => Touched.parse(l.split("\\|", -1), prefixNames)
+        .exists(t => fresh.contains(t) || gone(t)))
     writeMarker(fs, statsPath, (kept ++ fresh.values).sorted.mkString("\n"))
   }
 
@@ -1062,40 +1138,44 @@ object OffsetNamedOrcSink {
   private def ensureConfig(fs: FileSystem, root: Path, flushSize: Long,
       layout: Layout, rotateMs: Option[Long] = None,
       statsColumns: Seq[String] = Nil): Unit = {
-    val desc = s"flushSize=$flushSize\nlayout=${layoutIdOf(layout)}" +
-      rotateMs.fold("")(ms => s"\nrotate=$ms") +
-      // stats coverage is all-or-nothing per topic: a cell missing from the
-      // stats marker would be silently excluded by readAsOf, so mixing
-      // stats and no-stats writes must fail fast like a flush.size mismatch.
-      // The comma-joined ORDER is part of the contract — it fixes which
-      // |mn|mx pair in a stats line belongs to which column.
-      (if (statsColumns.isEmpty) ""
-       else s"\nstats=${statsColumns.mkString(",")}")
+    // stats coverage is all-or-nothing per topic: a cell missing from the
+    // stats marker would be silently excluded by readAsOf, so mixing stats
+    // and no-stats writes must fail fast like a flush.size mismatch
+    stampConfig(fs, root, SinkConfig(flushSize, layoutIdOf(layout), rotateMs, statsColumns)) {
+      // a markerless dir that already holds committed layout dirs was
+      // written before the config-marker protocol (or by something else):
+      // silently adopting the caller's flush.size would probe existing
+      // files on the wrong chunk grid and commit overlapping offset
+      // ranges, and a crash under the pre-marker sink may have left
+      // staged rows that only the full-walk recovery can save — both are
+      // exactly what migrate() handles, so demand it instead of guessing.
+      // One root listing, and only on a markerless dir — never steady state.
+      if (fs.exists(root) && listDir(fs, root).exists { st =>
+          val n = st.getPath.getName
+          st.isDirectory && (n.startsWith("partition=") || n.startsWith(s"$DtCol="))
+        })
+        throw new IllegalStateException(
+          s"$root holds a committed layout but no $ConfigMarker — a dir " +
+            "from before the config-marker protocol must be adopted " +
+            "explicitly: call migrate(topicDir, flushSize, layout) with " +
+            "the grid it was originally written with")
+      fs.mkdirs(root)
+    }
+  }
+
+  /** Write `cfg` as the topic's config marker, running `first` before, or
+    * require the marker the topic already has to be `cfg`, byte for byte:
+    * a topic keeps one chunk grid, layout, rotation and stats declaration.
+    */
+  private def stampConfig(fs: FileSystem, root: Path, cfg: SinkConfig)(first: => Unit): Unit = {
+    val desc = cfg.render
     val p = new Path(root, ConfigMarker)
     readMarker(fs, p) match {
       case Some(existing) => require(existing == desc,
         s"sink config mismatch at $root: committed {${existing.replace("\n", ", ")}} " +
           s"vs requested {${desc.replace("\n", ", ")}} — all writes against one " +
           "topic dir must use the same flush.size and layout")
-      case None =>
-        // a markerless dir that already holds committed layout dirs was
-        // written before the config-marker protocol (or by something else):
-        // silently adopting the caller's flush.size would probe existing
-        // files on the wrong chunk grid and commit overlapping offset
-        // ranges, and a crash under the pre-marker sink may have left
-        // staged rows that only the full-walk recovery can save — both are
-        // exactly what migrate() handles, so demand it instead of guessing.
-        // One root listing, and only on a markerless dir — never steady state.
-        if (fs.exists(root) && listDir(fs, root).exists { st =>
-            val n = st.getPath.getName
-            st.isDirectory && (n.startsWith("partition=") || n.startsWith(s"$DtCol="))
-          })
-          throw new IllegalStateException(
-            s"$root holds a committed layout but no $ConfigMarker — a dir " +
-              "from before the config-marker protocol must be adopted " +
-              "explicitly: call migrate(topicDir, flushSize, layout) with " +
-              "the grid it was originally written with")
-        fs.mkdirs(root); writeMarker(fs, p, desc)
+      case None => first; writeMarker(fs, p, desc)
     }
   }
 
@@ -1117,13 +1197,7 @@ object OffsetNamedOrcSink {
     recover(fs, root, root.getName)
     fs.delete(inflight, false) // full walk covers whatever a marker recorded
     validateLayout(layout)
-    val p = new Path(root, ConfigMarker)
-    val desc = s"flushSize=$flushSize\nlayout=${layoutIdOf(layout)}"
-    readMarker(fs, p) match {
-      case Some(existing) => require(existing == desc,
-        s"$root already committed a different config: $existing")
-      case None => writeMarker(fs, p, desc)
-    }
+    stampConfig(fs, root, SinkConfig(flushSize, layoutIdOf(layout)))(())
   }
 
   /** Latch the first write's value-struct schema (O4) and apply the drift
@@ -1140,19 +1214,22 @@ object OffsetNamedOrcSink {
       case Some(json) =>
         val latched = DataType.fromJson(json).asInstanceOf[StructType]
         val key = (s: StructType) => s.fields.toSeq.map(f => (f.name, f.dataType))
+        // `value` projected onto `target`: shared fields cast to the target
+        // type, missing ones null, extra ones dropped
+        def project(target: StructType): DataFrame = {
+          val incNames = incoming.fieldNames.toSet
+          df.withColumn("value", struct(target.fields.toSeq.map { f =>
+            if (incNames.contains(f.name))
+              col("value").getField(f.name).cast(f.dataType).as(f.name)
+            else lit(null).cast(f.dataType).as(f.name)
+          }: _*))
+        }
         if (key(latched) == key(incoming)) df
         else drift match {
           case DriftMode.Reject => throw new IllegalStateException(
             s"schema drift rejected (DriftMode.Reject): latched " +
               s"${latched.simpleString} vs incoming ${incoming.simpleString}")
-          case DriftMode.Project =>
-            val incNames = incoming.fieldNames.toSet
-            val fields = latched.fields.toSeq.map { f =>
-              if (incNames.contains(f.name))
-                col("value").getField(f.name).cast(f.dataType).as(f.name)
-              else lit(null).cast(f.dataType).as(f.name)
-            }
-            df.withColumn("value", struct(fields: _*))
+          case DriftMode.Project => project(latched)
           case DriftMode.Backward | DriftMode.Full =>
             // FULL runs BACKWARD's widening (the reference's FULL *is*
             // BACKWARD's implementation — see the DriftMode scaladoc); the
@@ -1163,22 +1240,12 @@ object OffsetNamedOrcSink {
             val added = incoming.fields.filterNot(f => latchedNames.contains(f.name))
             val widened = StructType(latched.fields ++ added)
             if (added.nonEmpty) writeMarker(fs, p, widened.json) // re-latch
-            val incNames = incoming.fieldNames.toSet
-            df.withColumn("value", struct(widened.fields.toSeq.map { f =>
-              if (incNames.contains(f.name))
-                col("value").getField(f.name).cast(f.dataType).as(f.name)
-              else lit(null).cast(f.dataType).as(f.name) // project up
-            }: _*))
+            project(widened) // project up
           case DriftMode.Forward =>
             // the latch never moves: project DOWN onto it (added incoming
             // fields dropped, missing ones null), refuse retypes
             rejectRetyped(latched, incoming, drift)
-            val incNames = incoming.fieldNames.toSet
-            df.withColumn("value", struct(latched.fields.toSeq.map { f =>
-              if (incNames.contains(f.name))
-                col("value").getField(f.name).cast(f.dataType).as(f.name)
-              else lit(null).cast(f.dataType).as(f.name)
-            }: _*))
+            project(latched)
         }
     }
   }
@@ -1225,8 +1292,8 @@ object OffsetNamedOrcSink {
     def probe(name: String): Option[FileStatus] =
       try Some(fs.getFileStatus(new Path(pDir, name)))
       catch { case _: FileNotFoundException => None }
-    probe(s"$prefix.orc").toSeq ++
-      Iterator.from(1).map(i => probe(s"$prefix-$i.orc"))
+    probe(CommittedName.file(prefix, 0)).toSeq ++
+      Iterator.from(1).map(i => probe(CommittedName.file(prefix, i)))
         .takeWhile(_.isDefined).flatten
   }
 
@@ -1240,7 +1307,7 @@ object OffsetNamedOrcSink {
       cell: String, topic: String): Unit = {
     val cDir = new Path(pDir, s"$ChunkCol=$cell")
     if (!fs.exists(cDir)) return
-    val prefix = cellFilePrefix(topic, p, cell)
+    val prefix = CommittedName.prefix(topic, p, cell)
     val parts = listDir(fs, cDir)
       .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
     // a part-less _chunk dir means a crash landed between this chunk's
@@ -1259,7 +1326,7 @@ object OffsetNamedOrcSink {
             "invariant is broken; refusing to hoist (a multi-part " +
             "rename pass is not crash-idempotent). Staging dir kept.")
       committedChunkFiles(fs, pDir, prefix).foreach(f => fs.delete(f.getPath, false))
-      val t = new Path(pDir, s"$prefix.orc")
+      val t = new Path(pDir, CommittedName.file(prefix, 0))
       // Hadoop signals most rename failures (e.g. a failed S3A copy) by
       // returning false, not throwing. An unchecked false here followed by
       // the staging-dir delete would destroy the chunk's only copy — fail
@@ -1272,41 +1339,39 @@ object OffsetNamedOrcSink {
     fs.delete(cDir, true) // now holds only commit markers, if that
   }
 
-  /** Recover a crashed commit. The in-flight marker records the crashed
-    * batch's touched leaves, and only one marker can ever exist (each write
-    * recovers its predecessor before writing its own), so hoisting exactly
-    * those leaves is complete — O(touched leaves), even on a topic with
-    * millions of committed files. The expected field count comes from the
-    * persisted layout; any line that doesn't parse against it (incl. a
-    * legacy pre-generalization marker, whose KafkaPartition form carried an
-    * empty leading dt field) falls back to the full directory walk —
-    * correct, just slower, and only ever after a crash.
+  /** Recover a crashed commit before touching the topic: the in-flight
+    * marker, when it exists, records the crashed batch's touched leaves,
+    * and only one marker can ever exist (each write recovers its
+    * predecessor before writing its own), so hoisting exactly those leaves
+    * is complete — O(touched leaves), even on a topic with millions of
+    * committed files. The expected field count comes from the persisted
+    * layout; any line that doesn't parse against it (incl. a legacy
+    * pre-generalization marker, whose KafkaPartition form carried an empty
+    * leading dt field) falls back to the full directory walk — correct,
+    * just slower, and only ever after a crash.
+    *
+    * With `clear` the marker is then deleted. Only the paths that commit
+    * own the protocol: a reader keeps the marker, so it can never erase
+    * the crash evidence a racing writer's recovery depends on.
     */
-  private def recoverFromMarker(fs: FileSystem, root: Path, topic: String,
-      inflight: Path): Unit = {
-    val prefixNames = readMarker(fs, new Path(root, ConfigMarker))
-      .map(desc => prefixColsOf(parseConfig(desc)._2))
+  private def recoverIfCrashed(fs: FileSystem, root: Path, clear: Boolean): Unit = {
+    val inflight = new Path(root, InflightMarker)
+    if (!fs.exists(inflight)) return
+    val topic = root.getName
+    val prefixNames = readConfig(fs, root).map(_.prefixCols)
     val lines = readMarker(fs, inflight)
       .map(_.linesIterator.filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val Num = raw"\d+".r
-    val Cell = raw"\d+(?:t-?\d+)?".r
     val parsed = prefixNames.map { names =>
       lines.flatMap { line =>
-        val parts = line.split("\\|", -1).toSeq
-        if (parts.size == names.size + 2 &&
-            Num.pattern.matcher(parts(names.size)).matches() &&
-            Cell.pattern.matcher(parts(names.size + 1)).matches())
-          Some(Touched(
-            names.zip(parts.take(names.size)
-              .map(v => java.net.URLDecoder.decode(v, "UTF-8"))),
-            parts(names.size).toInt, parts(names.size + 1)))
-        else None
+        Some(line.split("\\|", -1)).filter(_.length == names.size + 2)
+          .flatMap(Touched.parse(_, names))
       }
     }.getOrElse(Nil)
     if (parsed.nonEmpty && parsed.size == lines.size)
       parsed.foreach(t =>
         hoistChunkDir(fs, t.partitionDir(root), t.partition.toString, t.cell, topic))
     else recover(fs, root, topic)
+    if (clear) fs.delete(inflight, false)
   }
 
   /** Full-walk recovery: hoist every surviving `_chunk=` staging dir under
@@ -1332,6 +1397,14 @@ object OffsetNamedOrcSink {
       }
     walk(root)
   }
+
+  private def readConfig(fs: FileSystem, root: Path): Option[SinkConfig] =
+    readMarker(fs, new Path(root, ConfigMarker)).map(SinkConfig.parse)
+
+  /** The config of a topic dir that must have one (the maintenance paths). */
+  private def sinkConfig(fs: FileSystem, root: Path): SinkConfig =
+    readConfig(fs, root).getOrElse(throw new IllegalStateException(
+      s"$root has no sink config marker — not a sink topic dir"))
 
   private def readMarker(fs: FileSystem, p: Path): Option[String] =
     if (!fs.exists(p)) None
@@ -1373,11 +1446,8 @@ object OffsetNamedOrcSink {
   def read(spark: SparkSession, topicDir: String): DataFrame = {
     val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
-    val inflight = new Path(root, InflightMarker)
-    if (fs.exists(inflight))
-      recoverFromMarker(fs, root, root.getName, inflight)
-    sinkRelation(spark, fs, root, None,
-      readMarker(fs, new Path(root, ConfigMarker)),
+    recoverIfCrashed(fs, root, clear = false)
+    sinkRelation(spark, fs, root, None, readConfig(fs, root),
       readMarker(fs, new Path(root, StatsMarker)))
   }
 
@@ -1414,7 +1484,7 @@ object OffsetNamedOrcSink {
     * paths and listed files), so `sameResult` and cache reuse hold.
     */
   private def sinkRelation(spark: SparkSession, fs: FileSystem, root: Path,
-      probed: Option[Seq[FileStatus]], desc: Option[String],
+      probed: Option[Seq[FileStatus]], config: Option[SinkConfig],
       statsText: => Option[String]): DataFrame = {
     val qRoot = fs.makeQualified(root)
     val declared = readMarker(fs, new Path(root, SchemaMarker)).map { json =>
@@ -1438,10 +1508,10 @@ object OffsetNamedOrcSink {
       .getOrElse(throw new IllegalStateException(
         s"$root holds no committed ORC file and no $SchemaMarker — no schema to read"))
     val index = new CommittedFileIndex(listing,
-      new FileSkipping(qRoot, desc, () => statsText))
-    val chunk = desc match {
-      case Some(d) => col("offset") - pmod(col("offset"), lit(parseConfig(d)._1))
-      case None => regexp_extract(input_file_name(), CommittedTailRe, 1).cast("long")
+      new FileSkipping(qRoot, config, () => statsText))
+    val chunk = config match {
+      case Some(c) => col("offset") - pmod(col("offset"), lit(c.flushSize))
+      case None => regexp_extract(input_file_name(), CommittedName.Tail, 2).cast("long")
     }
     spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
         nullable(dataSchema).asInstanceOf[StructType], None, new OrcFileFormat,
@@ -1574,32 +1644,32 @@ object OffsetNamedOrcSink {
     }
   }
 
-  /** One committed cell's `_graft_stats` line: the cell and its recorded
-    * range per tracked column, in config order.
+  /** One committed cell's `_graft_stats` line: the cell, its row count
+    * (None on a pre-rowcount line) and its recorded range per tracked
+    * column, in config order.
     */
-  private final case class CellStats(cell: Touched, ranges: IndexedSeq[ValueRange])
+  private final case class CellStats(cell: Touched, rows: Option[Long],
+      ranges: IndexedSeq[ValueRange])
 
   /** Parse a `_graft_stats` payload against the topic's layout and stats
     * spec. Lines are self-describing by field count (pre-rowcount lines
     * are one field shorter); long bounds at Long.Min/MaxValue and the
     * string `!null` token are the all-null sentinels and leave the range
-    * unbounded. None when ANY line fails to parse — a corrupt marker
-    * prunes nothing.
+    * unbounded. None when ANY line fails to parse.
     */
   private def parseStats(text: String, prefixNames: Seq[String],
       spec: Seq[(String, Boolean)]): Option[Seq[CellStats]] = {
-    def dec(v: String) = java.net.URLDecoder.decode(v, "UTF-8")
+    def dec(v: String) = URLDecoder.decode(v, "UTF-8")
     val base = prefixNames.size + 2
-    val Cell = raw"\d+(?:t-?\d+)?".r
     try Some(text.linesIterator.filter(_.nonEmpty).map { l =>
       val f = l.split("\\|", -1)
-      val at =
-        if (f.length == base + 1 + 2 * spec.size) base + 1 // key | n_rows | pairs
-        else if (f.length == base + 2 * spec.size) base // pre-rowcount line
+      val rows =
+        if (f.length == base + 1 + 2 * spec.size) Some(f(base).toLong) // key | n_rows | pairs
+        else if (f.length == base + 2 * spec.size) None // pre-rowcount line
         else throw new IllegalArgumentException(s"stats line: $l")
-      val cell = f(base - 1)
-      require(Cell.pattern.matcher(cell).matches(), s"stats cell: $l")
-      cellParts(cell) // the chunk must fit a long
+      val cell = Touched.parse(f, prefixNames)
+        .getOrElse(throw new IllegalArgumentException(s"stats key: $l"))
+      val at = base + rows.size
       val ranges = spec.indices.map { i =>
         val (mn, mx) = (f(at + 2 * i), f(at + 2 * i + 1))
         if (spec(i)._2)
@@ -1609,8 +1679,7 @@ object OffsetNamedOrcSink {
           (Some(mn.toLong).filter(_ != Long.MinValue),
             Some(mx.toLong).filter(_ != Long.MaxValue)): ValueRange
       }
-      CellStats(Touched(prefixNames.zip(f.take(prefixNames.size).map(dec)),
-        f(base - 2).toInt, cell), ranges)
+      CellStats(cell, rows, ranges)
     }.toSeq)
     catch { case _: IllegalArgumentException => None } // incl. NumberFormatException
   }
@@ -1624,35 +1693,30 @@ object OffsetNamedOrcSink {
     * The stats marker is read (`statsText`) only when a Bound names a
     * tracked column.
     */
-  private final class FileSkipping(root: Path, desc: Option[String],
+  private final class FileSkipping(root: Path, config: Option[SinkConfig],
       statsText: () => Option[String]) {
     private val topic = root.getName
-    private val committedName = ("^" + java.util.regex.Pattern.quote(fileTopic(topic)) +
-      raw"\+(\d+)\+(\d+)(?:\+t(-?\d+))?(?:-\d+)?\.orc$$").r
-    private val config = desc.map(parseConfig)
-    private val spec = desc.flatMap(statsSpecOf).getOrElse(Nil)
+    private val spec = config.fold(Seq.empty[(String, Boolean)])(_.statsSpec)
     /** committed file prefix (`<partition dir>/<cell file prefix>`) → stats */
     private lazy val byPrefix: Map[String, CellStats] = (for {
-      (_, layoutId, _) <- config
+      cfg <- config
       text <- statsText()
-      cells <- parseStats(text, prefixColsOf(layoutId), spec)
+      cells <- parseStats(text, cfg.prefixCols, spec)
     } yield cells.map(c =>
       s"${c.cell.partitionDir(root)}/${c.cell.filePrefix(topic)}" -> c).toMap)
       .getOrElse(Map.empty)
 
     def keeps(f: FileStatus, bounds: Seq[Bound]): Boolean = config match {
       case None => true
-      case Some((flushSize, _, _)) =>
+      case Some(cfg) =>
         val dir = f.getPath.getParent
-        committedName.findFirstMatchIn(f.getPath.getName) match {
-          case Some(m) if dir.getName == s"partition=${m.group(1)}" &&
-              m.group(2).toLongOption.isDefined =>
-            val chunk = m.group(2).toLong
+        CommittedName.parse(topic, f.getPath.getName) match {
+          case Some(n) if dir.getName == s"partition=${n.partition}" &&
+              n.chunk.toLongOption.isDefined =>
+            val chunk = n.chunk.toLong
             val offsets: ValueRange = (Some(chunk),
-              Some(chunk + (flushSize - 1)).filter(_ >= chunk)) // no overflow
-            val prefix = f.getPath.getName.substring(0,
-              if (m.group(3) != null) m.end(3) else m.end(2))
-            lazy val cell = byPrefix.get(s"$dir/$prefix")
+              Some(chunk + (cfg.flushSize - 1)).filter(_ >= chunk)) // no overflow
+            lazy val cell = byPrefix.get(s"$dir/${n.prefix}")
             bounds.forall { b =>
               val at = spec.indexWhere(_._1 == b.column)
               if (b.column == "offset") admits(offsets, b)
@@ -1678,73 +1742,39 @@ object OffsetNamedOrcSink {
   def manifest(spark: SparkSession, topicDir: String): DataFrame = {
     val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
-    val inflight = new Path(root, InflightMarker)
-    if (fs.exists(inflight))
-      recoverFromMarker(fs, root, root.getName, inflight)
+    recoverIfCrashed(fs, root, clear = false)
     import spark.implicits._
     // the config marker names the tracked columns (in line order); a topic
     // written before the multi-column format has exactly one unnamed pair —
     // surface it under the recorded single name, or "" for pre-config dirs.
-    // Long-typed pairs land in (stats_lo, stats_hi); string-typed pairs in
-    // (stats_lo_str, stats_hi_str), the other side null — one uniform
-    // catalog schema over mixed-type stats like a Delta log's minValues map.
-    val conf = readMarker(fs, new Path(root, ConfigMarker))
-    val spec = conf.flatMap(statsSpecOf).getOrElse(Nil)
-    val nPrefix = conf.map(c => prefixColsOf(parseConfig(c)._2).size)
-      .getOrElse(0)
-    def dec(v: String) = java.net.URLDecoder.decode(v, "UTF-8")
-    val rows = readMarker(fs, new Path(root, StatsMarker))
-      .map(_.linesIterator.filter(_.nonEmpty).flatMap { l =>
-        val f = l.split("\\|", -1)
-        val cols = if (spec.nonEmpty) spec else Seq(("", false))
-        // rowcount-era lines carry key | n_rows | pairs; pre-rowcount
-        // lines are one field shorter — dispatch per LINE (mixed-era
-        // markers are the normal state after a partial replay)
-        val hasNr = f.length == nPrefix + 3 + 2 * cols.size
-        val nrOpt = if (hasNr) Some(f(nPrefix + 2).toLong)
-          else None: Option[Long]
-        val pairsAt = nPrefix + (if (hasNr) 3 else 2)
-        val prefix = f.take(nPrefix).map(dec).mkString("/")
-        cols.zipWithIndex.map { case ((name, isStr), i) =>
-          val (mn, mx) = (f(pairsAt + 2 * i), f(pairsAt + 1 + 2 * i))
-          if (isStr)
-            (prefix, f(nPrefix).toInt, f(nPrefix + 1).toLong, name,
-              None: Option[Long], None: Option[Long],
-              if (mn == StrStatsNull) None else Some(dec(mn)),
-              if (mx == StrStatsNull) None else Some(dec(mx)), nrOpt)
-          else
-            (prefix, f(nPrefix).toInt, f(nPrefix + 1).toLong, name,
-              Some(mn.toLong), Some(mx.toLong),
-              None: Option[String], None: Option[String], nrOpt)
-        }
-      }.toSeq).getOrElse(Nil)
+    // Long-typed pairs land in (stats_lo, stats_hi), all-null sentinels
+    // included; string-typed pairs in (stats_lo_str, stats_hi_str), the
+    // other side null — one uniform catalog schema over mixed-type stats
+    // like a Delta log's minValues map.
+    val conf = readConfig(fs, root)
+    val spec = conf.map(_.statsSpec).filter(_.nonEmpty).getOrElse(Seq(("", false)))
+    val cells = readMarker(fs, new Path(root, StatsMarker)).fold(Seq.empty[CellStats]) { text =>
+      parseStats(text, conf.fold(Seq.empty[String])(_.prefixCols), spec).getOrElse(
+        throw new IllegalStateException(
+          s"$root/$StatsMarker does not parse against the topic's config"))
+    }
+    val rows = cells.flatMap { c =>
+      val prefix = c.cell.prefix.map(_._2).mkString("/")
+      val chunk = cellParts(c.cell.cell)._1
+      spec.zip(c.ranges).map { case ((name, isStr), (lo, hi)) =>
+        if (isStr)
+          (prefix, c.cell.partition, chunk, name, None: Option[Long], None: Option[Long],
+            lo.map(_.toString), hi.map(_.toString), c.rows)
+        else
+          (prefix, c.cell.partition, chunk, name,
+            Some(lo.fold(Long.MinValue)(_.asInstanceOf[Long])),
+            Some(hi.fold(Long.MaxValue)(_.asInstanceOf[Long])),
+            None: Option[String], None: Option[String], c.rows)
+      }
+    }
     rows.toDF("prefix", "partition", "chunk", "stats_col",
       "stats_lo", "stats_hi", "stats_lo_str", "stats_hi_str", "n_rows")
   }
-
-  /** The raw (type-decorated) stats tokens of a `_graft_sink.conf` payload
-    * — what compactTo re-stamps verbatim so the compacted topic keeps the
-    * exact stats contract.
-    */
-  private def statsDeclOf(desc: String): Option[Seq[String]] =
-    desc.linesIterator.collectFirst {
-      case l if l.startsWith("stats=") =>
-        l.stripPrefix("stats=").split(",", -1).toSeq
-    }
-
-  /** The stats columns recorded in a `_graft_sink.conf` payload as
-    * (name, isString) pairs, config order = per-line |mn|mx pair order;
-    * None when the topic tracks none. A bare token is the long-typed
-    * legacy/default form; `name:str` marks a string-bounded pair.
-    */
-  private def statsSpecOf(desc: String): Option[Seq[(String, Boolean)]] =
-    statsDeclOf(desc).map(_.map { tok =>
-      if (tok.endsWith(":str")) (tok.dropRight(4), true) else (tok, false)
-    })
-
-  /** Tracked stats column NAMES (type suffix stripped). */
-  private def statsColsOf(desc: String): Option[Seq[String]] =
-    statsSpecOf(desc).map(_.map(_._1))
 
   /** Time-travel / as-of read by a stats column: rows with
     * `column ∈ [lo, hi)`, touching ONLY the committed files whose recorded
@@ -1811,24 +1841,21 @@ object OffsetNamedOrcSink {
     val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     val topic = root.getName
-    val inflight = new Path(root, InflightMarker)
-    if (fs.exists(inflight))
-      recoverFromMarker(fs, root, topic, inflight)
+    recoverIfCrashed(fs, root, clear = false)
     def window(df: DataFrame) = df.filter(col(column) >= lo && col(column) < hi)
     def fullScan = window(read(spark, topicDir))
-    (readMarker(fs, new Path(root, StatsMarker)),
-        readMarker(fs, new Path(root, ConfigMarker))) match {
-      case (Some(statsText), Some(desc)) =>
+    (readMarker(fs, new Path(root, StatsMarker)), readConfig(fs, root)) match {
+      case (Some(statsText), Some(cfg)) =>
         // prune on ANY tracked column — the pair offset inside each line
         // comes from the column's position in the config list
-        val spec = statsSpecOf(desc).getOrElse(Nil)
+        val spec = cfg.statsSpec
         val colIdx = spec.indexWhere(_._1 == column)
         if (colIdx < 0) return fullScan
         require(spec(colIdx)._2 == wantString,
           s"stats column '$column' is ${if (spec(colIdx)._2) "string" else
             "numeric"}-typed — use ${if (spec(colIdx)._2) "readAsOfStr"
             else "readAsOf"}")
-        val cells = parseStats(statsText, prefixColsOf(parseConfig(desc)._2), spec)
+        val cells = parseStats(statsText, cfg.prefixCols, spec)
           .getOrElse(return fullScan) // corrupt: correctness first
         val bounds = Seq(Bound(column, ">=", lo), Bound(column, "<", hi))
         val files = cells
@@ -1836,7 +1863,7 @@ object OffsetNamedOrcSink {
           .flatMap(c => committedChunkFiles(fs, c.cell.partitionDir(root),
             c.cell.filePrefix(topic)))
         if (files.isEmpty) fullScan.filter(lit(false)) // provably empty window
-        else window(sinkRelation(spark, fs, root, Some(files), Some(desc),
+        else window(sinkRelation(spark, fs, root, Some(files), Some(cfg),
           Some(statsText)))
       case _ => fullScan
     }
@@ -1870,19 +1897,17 @@ object OffsetNamedOrcSink {
     val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     val topic = root.getName
-    val inflight = new Path(root, InflightMarker)
-    if (fs.exists(inflight))
-      recoverFromMarker(fs, root, topic, inflight)
+    recoverIfCrashed(fs, root, clear = false)
     def fullScan = read(spark, topicDir)
       .filter(col("offset") >= fromOffset && col("offset") < untilOffset)
-    readMarker(fs, new Path(root, ConfigMarker)) match {
+    readConfig(fs, root) match { // a corrupt marker throws, like compactTo/expire
       case None => fullScan // legacy dir: no recorded chunk grid to prune on
-      case Some(desc) =>
-        val (flushSize, _, rotate) = parseConfig(desc) // corrupt marker throws, like compactTo/expire
+      case Some(cfg) =>
+        val flushSize = cfg.flushSize
         // a wall-clock-rotated grid has unbounded time buckets per offset
         // chunk — cell names are not enumerable from the window alone, so
         // degrade to the (still offset-pushed-down) full scan
-        if (rotate.isDefined) return fullScan
+        if (cfg.rotateMs.isDefined) return fullScan
         // An open-ended sentinel window (untilOffset=Long.MaxValue with a
         // small flush.size) must not eagerly enumerate billions of chunk
         // starts on the driver: past this cap the probe count exceeds any
@@ -1909,10 +1934,10 @@ object OffsetNamedOrcSink {
           dir <- leafDirs(root)
           p = dir.getName.stripPrefix("partition=")
           c <- chunks
-          f <- committedChunkFiles(fs, dir, f"${fileTopic(topic)}+$p+$c%010d")
+          f <- committedChunkFiles(fs, dir, CommittedName.prefix(topic, p, c.toString))
         } yield f
         if (files.isEmpty) fullScan
-        else sinkRelation(spark, fs, root, Some(files), Some(desc),
+        else sinkRelation(spark, fs, root, Some(files), Some(cfg),
             readMarker(fs, new Path(root, StatsMarker)))
           .filter(col("offset") >= fromOffset && col("offset") < untilOffset)
     }
@@ -1923,24 +1948,9 @@ object OffsetNamedOrcSink {
     * write the topic (e.g. `StreamOps.streamFromSink`) learns the directory
     * shape without guessing from listings.
     */
-  def layoutId(spark: SparkSession, topicDir: String): String = {
-    val fs = topicFs(spark, topicDir)
-    readMarker(fs, new Path(new Path(topicDir), ConfigMarker)) match {
-      case Some(desc) => parseConfig(desc)._2
-      case None => "kafka-partition" // legacy dir: the default layout
-    }
-  }
-
-  /** Parse a `_graft_sink.conf` payload → (flushSize, layoutId, rotateMs). */
-  private def parseConfig(desc: String): (Long, String, Option[Long]) = {
-    val kv = desc.linesIterator.flatMap { l =>
-      l.split("=", 2) match { case Array(k, v) => Some(k -> v); case _ => None }
-    }.toMap
-    (kv.get("flushSize").map(_.toLong).getOrElse(
-        throw new IllegalStateException(s"no flushSize in sink config: $desc")),
-      kv.getOrElse("layout", "kafka-partition"),
-      kv.get("rotate").map(_.toLong))
-  }
+  def layoutId(spark: SparkSession, topicDir: String): String =
+    readConfig(topicFs(spark, topicDir), new Path(topicDir))
+      .fold("kafka-partition")(_.layoutId) // legacy dir: the default layout
 
   /** Compact a topic dir onto a coarser rotation grid — the object-store
     * small-file problem. A long-running stream with a small flush.size (or a
@@ -1974,15 +1984,13 @@ object OffsetNamedOrcSink {
     val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     val topic = root.getName
-    val desc = readMarker(fs, new Path(root, ConfigMarker)).getOrElse(
-      throw new IllegalStateException(
-        s"$topicDir has no sink config marker — not a sink topic dir"))
-    val (flushSize, layoutId, _) = parseConfig(desc)
+    val cfg = sinkConfig(fs, root)
+    val flushSize = cfg.flushSize
     require(targetFlushSize > flushSize && targetFlushSize % flushSize == 0,
       s"target flush.size $targetFlushSize must be a proper multiple of the " +
         s"committed $flushSize (chunk ranges must nest to keep offset names exact)")
 
-    val prefixCols = prefixColsOf(layoutId)
+    val prefixCols = cfg.prefixCols
     val partCols = prefixCols ++ Seq("partition", ChunkCol)
     val df = read(spark, topicDir)
     val valueCols = df.columns.toSeq
@@ -1998,19 +2006,9 @@ object OffsetNamedOrcSink {
     val newFs = topicFs(spark, newTopicDir)
     // carry the stats contract VERBATIM (incl. :str type decorations): the
     // compacted topic keeps file-skipping metadata if the source tracked it
-    // (recomputed below on the new grid)
-    val statsCols = statsColsOf(desc).getOrElse(Nil)
-    val statsDeclTok = statsDeclOf(desc).getOrElse(Nil)
-    val newDesc = s"flushSize=$targetFlushSize\nlayout=$layoutId" +
-      (if (statsDeclTok.isEmpty) ""
-       else s"\nstats=${statsDeclTok.mkString(",")}")
-    readMarker(newFs, new Path(newRoot, ConfigMarker)) match {
-      case Some(existing) => require(existing == newDesc,
-        s"compaction target $newTopicDir already committed a different config")
-      case None =>
-        newFs.mkdirs(newRoot)
-        writeMarker(newFs, new Path(newRoot, ConfigMarker), newDesc)
-    }
+    // (recomputed below on the new grid). The new grid has no time buckets.
+    stampConfig(newFs, newRoot, SinkConfig(targetFlushSize, cfg.layoutId, None, cfg.stats))(
+      newFs.mkdirs(newRoot))
     // carry the latched schema so later write()s keep their drift checks
     readMarker(fs, new Path(root, SchemaMarker)).foreach(json =>
       writeMarker(newFs, new Path(newRoot, SchemaMarker), json))
@@ -2020,7 +2018,7 @@ object OffsetNamedOrcSink {
     // metadata. orcOptions ride the same path as write() — compaction must
     // not strip the topic's bloom filters.
     commit(spark, newFs, newRoot, topic, flat, partCols, orcOptions,
-      if (statsCols.forall(flat.columns.contains)) statsCols else Nil)(_.map(_ => Nil))
+      if (cfg.statsCols.forall(flat.columns.contains)) cfg.statsCols else Nil)(_.map(_ => Nil))
     newTopicDir
   }
 
@@ -2038,16 +2036,8 @@ object OffsetNamedOrcSink {
     val root = new Path(topicDir)
     if (!fs.exists(root)) return 0
     val topic = root.getName
-    val inflight = new Path(root, InflightMarker)
-    if (fs.exists(inflight)) // normalize a crashed layout before judging names
-      recoverFromMarker(fs, root, topic, inflight)
-    val desc = readMarker(fs, new Path(root, ConfigMarker)).getOrElse(
-      throw new IllegalStateException(
-        s"$topicDir has no sink config marker — not a sink topic dir"))
-    val (flushSize, _, _) = parseConfig(desc)
-    val FileName =
-      (java.util.regex.Pattern.quote(fileTopic(topic)) +
-        raw"\+(\d+)\+(\d+)(?:\+t-?\d+)?(?:-\d+)?\.orc").r
+    recoverIfCrashed(fs, root, clear = false) // normalize a crashed layout before judging names
+    val flushSize = sinkConfig(fs, root).flushSize
     var deleted = 0
     def visit(dir: Path): Unit =
       listDir(fs, dir).foreach { st =>
@@ -2057,12 +2047,9 @@ object OffsetNamedOrcSink {
         if (st.isDirectory && n.contains("=") &&
             !n.startsWith("_") && !n.startsWith("."))
           visit(st.getPath)
-        else if (st.isFile) n match {
-          case FileName(_, chunk)
-              if chunk.toLong + flushSize <= beforeOffset =>
-            if (fs.delete(st.getPath, false)) deleted += 1
-          case _ => ()
-        }
+        else if (st.isFile && CommittedName.parse(topic, n)
+            .exists(_.chunk.toLong + flushSize <= beforeOffset))
+          if (fs.delete(st.getPath, false)) deleted += 1
       }
     visit(root)
     deleted
@@ -2093,9 +2080,6 @@ object OffsetNamedOrcSink {
     val root = new Path(topicDir)
     if (!fs.exists(root)) return Nil
     val topic = root.getName
-    val committedRe =
-      ("^" + java.util.regex.Pattern.quote(fileTopic(topic)) +
-        raw"\+(\d+)\+\d+(?:\+t-?\d+)?(?:-\d+)?\.orc$$").r
     val removed = Seq.newBuilder[String]
     def del(p: Path, recursive: Boolean): Unit =
       if (fs.delete(p, recursive)) removed += p.toString
@@ -2109,11 +2093,9 @@ object OffsetNamedOrcSink {
           else if (n.startsWith(s"$ChunkCol=")) () // recovery evidence
           else if (!n.startsWith(".") && !n.startsWith("_"))
             del(st.getPath, recursive = true)
-        } else n match {
-          case committedRe(fp) if fp == p => ()
-          case _ if n.startsWith("_") || n.startsWith(".") => ()
-          case _ => del(st.getPath, recursive = false)
-        }
+        } else if (!CommittedName.parse(topic, n).exists(_.partition == p) &&
+            !n.startsWith("_") && !n.startsWith("."))
+          del(st.getPath, recursive = false)
       }
     def walk(dir: Path): Unit =
       listDir(fs, dir).foreach { st =>
@@ -2155,30 +2137,18 @@ object OffsetNamedOrcSink {
     val fs = topicFs(spark, topicDir)
     val root = new Path(topicDir)
     val topic = root.getName
-    val inflight = new Path(root, InflightMarker)
-    if (fs.exists(inflight)) {
-      recoverFromMarker(fs, root, topic, inflight)
-      fs.delete(inflight, false)
-    }
-    val desc = readMarker(fs, new Path(root, ConfigMarker)).getOrElse(
-      throw new IllegalStateException(
-        s"$topicDir has no sink config marker — not a sink topic dir"))
-    val (_, layoutId, rotate) = parseConfig(desc)
-    val prefixCols = prefixColsOf(layoutId)
+    recoverIfCrashed(fs, root, clear = true)
+    val cfg = sinkConfig(fs, root)
+    val prefixCols = cfg.prefixCols
     val partCols = prefixCols ++ Seq("partition", ChunkCol)
 
     // the commit cell lives only in the file NAME: offset chunk, plus the
     // event-time bucket on a wall-clock-rotated grid (write()'s merge-path
     // convention — the zero-padded chunk normalizes through long)
-    val cellCol = rotate match {
-      case None =>
-        regexp_extract(input_file_name(), CommittedTailRe, 1)
-          .cast("long").cast("string")
-      case Some(_) => concat(
-        regexp_extract(input_file_name(), CommittedTailRe, 1)
-          .cast("long").cast("string"),
-        lit("t"), regexp_extract(input_file_name(), CommittedTailRe, 2))
-    }
+    def nameField(group: Int) = regexp_extract(input_file_name(), CommittedName.Tail, group)
+    val chunkCol = nameField(2).cast("long").cast("string")
+    val cellCol =
+      if (cfg.rotateMs.isEmpty) chunkCol else concat(chunkCol, lit("t"), nameField(3))
     val matches = read(spark, topicDir).withColumn(ChunkCol, cellCol)
       .filter(predicate)
     val touched = touchedLeaves(matches, partCols)
@@ -2188,7 +2158,7 @@ object OffsetNamedOrcSink {
     // (mixed pre-/post-widening physical schemas — the read() contract)
     val files = touched.flatMap(t =>
       committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic)))
-    val chunkRows = sinkRelation(spark, fs, root, Some(files), Some(desc), None)
+    val chunkRows = sinkRelation(spark, fs, root, Some(files), Some(cfg), None)
       .withColumn(ChunkCol, cellCol)
     val nBefore = chunkRows.count()
     val valueCols = chunkRows.columns.toSeq
@@ -2206,9 +2176,9 @@ object OffsetNamedOrcSink {
     // by the skipping metadata (a stale min/max is only a safe
     // over-approximation until then), and the post-commit order means a
     // crash can never leave stats NARROWER than the surviving data
-    val statsCols = statsColsOf(desc).filter(_.forall(survivors.columns.contains))
+    val statsCols = if (cfg.statsCols.forall(survivors.columns.contains)) cfg.statsCols else Nil
     val live = commit(spark, fs, root, topic, survivors, partCols, Map.empty,
-        statsCols.getOrElse(Nil), statsAfterHoist = true) { live =>
+        statsCols, statsAfterHoist = true) { live =>
       // chunks with zero survivors stage nothing — delete their committed
       // files directly (idempotent, convergent)
       touched.filterNot(live.toSet).foreach(t =>
@@ -2216,8 +2186,7 @@ object OffsetNamedOrcSink {
           .foreach(f => fs.delete(f.getPath, false)))
       live.map(_ => Nil)
     }
-    rewriteStats(fs, root, partCols.size, Map.empty,
-      touched.filterNot(live.toSet).map(_.markerLine).toSet)
+    rewriteStats(fs, root, prefixCols, Map.empty, touched.filterNot(live.toSet).toSet)
     deleted
   }
 }

@@ -696,7 +696,7 @@ object StreamOps {
     // `_` filter because its name contains '=') can then never reach
     // partition parsing. Every dir-encoded column is re-derived from the
     // committed file PATH instead: partition and chunk are embedded in the
-    // name contract `<topic>+<p>+<%010d chunk>[-N].orc`, dt in its dir.
+    // name contract (`OffsetNamedOrcSink.CommittedName`), dt in its dir.
     val prefixCols =
       OffsetNamedOrcSink.prefixColsOf(OffsetNamedOrcSink.layoutId(spark, topicDir))
     val schema = StructType(
@@ -708,14 +708,10 @@ object StreamOps {
       .option("pathGlobFilter", "*+*+*.orc") // committed names only — see scaladoc
       .option("ignoreMissingFiles", "true") // staging dir deleted mid-walk — see scaladoc
       .orc(topicDir)
-      .withColumn("partition",
-        regexp_extract(input_file_name(),
-          raw"\+(\d+)\+\d+(?:\+t-?\d+)?(?:-\d+)?\.orc$$", 1)
-          .cast("int"))
-      .withColumn(OffsetNamedOrcSink.ChunkCol,
-        regexp_extract(input_file_name(),
-          raw"\+(\d+)(?:\+t-?\d+)?(?:-\d+)?\.orc$$", 1)
-          .cast("long"))
+      .withColumn("partition", regexp_extract(input_file_name(),
+        OffsetNamedOrcSink.CommittedName.Tail, 1).cast("int"))
+      .withColumn(OffsetNamedOrcSink.ChunkCol, regexp_extract(input_file_name(),
+        OffsetNamedOrcSink.CommittedName.Tail, 2).cast("long"))
     // one column per value-derived dir level (dt=/year=/<field>=…),
     // unescaped back to the raw value: partitionBy Hive-escapes path-special
     // chars (%XX) when writing the dirs. Hive escaping never emits '+', so

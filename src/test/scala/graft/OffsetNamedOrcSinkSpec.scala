@@ -1837,6 +1837,82 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
       assert(!marker.exists, s"call $k")
     }
   }
+
+  /** The events as a topic whose value carries a long (`tsu`) and a string
+    * (`etype`) field, both usable as stats columns.
+    */
+  private def eventsShaped(topic: String) = Tables(spark, sf, "events").select(
+    col("user_id").cast("string").cast("binary").as("key"),
+    struct(col("event_id").as("id"), unix_micros(col("ts")).as("tsu"),
+      col("event_type").as("etype")).as("value"),
+    lit(topic).as("topic"),
+    pmod(col("user_id"), lit(4)).cast("int").as("partition"),
+    col("event_id").as("offset"),
+    col("ts").as("timestamp"))
+
+  test("manifest of a wall-clock-rotated stats topic lists every cell and counts every row") {
+    val topicDir = OffsetNamedOrcSink.write(eventsShaped("rot"), freshOut(),
+      flushSize = 100, topic = "rot", rotateMs = Some(86400000L), statsColumns = Seq("tsu"))
+    val files = orcFiles(topicDir).map(_.getName)
+    assert(files.nonEmpty && files.forall(_.contains("+t")), files.take(3).mkString(", "))
+    val man = OffsetNamedOrcSink.manifest(spark, topicDir)
+    // one row per committed cell, and a cell commits one file
+    assert(man.count() == files.length)
+    val back = OffsetNamedOrcSink.read(spark, topicDir)
+    assert(man.agg(sum("n_rows")).head.getLong(0) == back.count())
+    // `chunk` is the cell's offset chunk: the cells of one (partition,
+    // chunk) add up to the rows read back under that chunk
+    val perChunk = (df: org.apache.spark.sql.DataFrame) =>
+      df.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
+    assert(perChunk(man.groupBy("partition", "chunk").agg(sum("n_rows"))) ==
+      perChunk(back.groupBy(col("partition"), col("_chunk")).count()))
+    // a stats file that does not parse yields no catalog, never a short one
+    // (a raw rewrite drops the checksum file)
+    val stats = java.nio.file.Paths.get(topicDir, "_graft_stats")
+    Files.write(stats, (new String(Files.readAllBytes(stats), "UTF-8") + "\n0|0|x")
+      .getBytes("UTF-8"))
+    Files.delete(java.nio.file.Paths.get(topicDir, "._graft_stats.crc"))
+    intercept[IllegalStateException](OffsetNamedOrcSink.manifest(spark, topicDir))
+  }
+
+  test("_graft_sink.conf payloads stay byte-identical for every layout and option") {
+    import OffsetNamedOrcSink.Layout
+    val src = eventsShaped("events").filter(col("offset") < 50)
+    def conf(topicDir: String) = new String(Files.readAllBytes(
+      java.nio.file.Paths.get(topicDir, "_graft_sink.conf")), "UTF-8")
+    def written(layout: Layout = Layout.KafkaPartition, rotateMs: Option[Long] = None,
+        stats: Seq[String] = Nil) = OffsetNamedOrcSink.write(src, freshOut(), 250,
+      layout = layout, rotateMs = rotateMs, statsColumns = stats)
+    assert(conf(written()) == "flushSize=250\nlayout=kafka-partition")
+    assert(conf(written(Layout.TimeDaily())) == "flushSize=250\nlayout=time:yyyy-MM-dd")
+    assert(conf(written(Layout.TimeDaily("yyyy-MM", "fr"))) ==
+      "flushSize=250\nlayout=timeloc:fr|yyyy-MM")
+    assert(conf(written(Layout.Field("etype"))) == "flushSize=250\nlayout=field:etype")
+    assert(conf(written(Layout.TimeMulti())) ==
+      "flushSize=250\nlayout=timev2:UTC|year=yyyy,month=MM,day=dd,hour=HH")
+    assert(conf(written(Layout.TimeMulti(Seq("d" -> "yyyy-MM-dd", "h" -> "HH"),
+      "America/Los_Angeles", "de"))) ==
+      "flushSize=250\nlayout=timev3:de|America/Los_Angeles|d=yyyy-MM-dd,h=HH")
+    assert(conf(written(rotateMs = Some(3600000L))) ==
+      "flushSize=250\nlayout=kafka-partition\nrotate=3600000")
+    assert(conf(written(stats = Seq("tsu"))) == "flushSize=250\nlayout=kafka-partition\nstats=tsu")
+    val rotatedStats = written(Layout.Field("etype"), Some(3600000L), Seq("tsu", "id"))
+    assert(conf(rotatedStats) ==
+      "flushSize=250\nlayout=field:etype\nrotate=3600000\nstats=tsu,id")
+    val strStats = written(stats = Seq("etype", "tsu"))
+    assert(conf(strStats) == "flushSize=250\nlayout=kafka-partition\nstats=etype:str,tsu")
+    // compaction keeps the layout and the stats declaration, and drops the
+    // rotation grid
+    assert(conf(OffsetNamedOrcSink.compactTo(spark, strStats, freshOut(), 500)) ==
+      "flushSize=500\nlayout=kafka-partition\nstats=etype:str,tsu")
+    assert(conf(OffsetNamedOrcSink.compactTo(spark, rotatedStats, freshOut(), 1000)) ==
+      "flushSize=1000\nlayout=field:etype\nstats=tsu,id")
+    // migrate stamps flush.size and layout only
+    val legacy = written(Layout.TimeDaily())
+    assert(new java.io.File(legacy, "_graft_sink.conf").delete())
+    OffsetNamedOrcSink.migrate(spark, legacy, 250, Layout.TimeDaily())
+    assert(conf(legacy) == "flushSize=250\nlayout=time:yyyy-MM-dd")
+  }
 }
 
 object OffsetNamedOrcSinkSpec {

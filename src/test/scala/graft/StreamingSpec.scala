@@ -322,6 +322,28 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streamFromSink derives partition and _chunk from +t-suffixed names like read()") {
+    val outDir = tmp("graft-tail-rot-")
+    val topicDir = OffsetNamedOrcSink.write(KafkaShaped.fromEvents(spark, sf),
+      outDir, flushSize = 250, rotateMs = Some(3600000L))
+    val names = new java.io.File(topicDir).listFiles.filter(_.isDirectory)
+      .flatMap(_.listFiles).map(_.getName).filter(_.endsWith(".orc"))
+    assert(names.nonEmpty && names.forall(_.contains("+t")), names.take(3).mkString(", "))
+    val q = StreamOps.streamFromSink(spark, topicDir, KafkaShaped.valueSchema)
+      .writeStream.format("memory").queryName("sink_tail_rot")
+      .option("checkpointLocation", tmp("graft-tail-rot-ck-"))
+      .start()
+    try {
+      q.processAllAvailable()
+      val out = spark.table("sink_tail_rot")
+      assert(out.count() == 1000)
+      val batch = OffsetNamedOrcSink.read(spark, topicDir)
+        .select("offset", "partition", "_chunk").collect().map(_.toSeq).toSet
+      assert(out.select("offset", "partition", "_chunk")
+        .collect().map(_.toSeq).toSet == batch)
+    } finally q.stop()
+  }
+
   test("streamFromSink types a Field-routed non-string column like batch read") {
     import graft.streaming.OffsetNamedOrcSink.Layout
     val outDir = tmp("graft-tail-field-")
