@@ -14,29 +14,32 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.orc.OrcFile
 import org.apache.orc.mapred.OrcStruct
 import org.apache.orc.mapreduce.OrcMapreduceRecordReader
-import org.apache.spark.{GraftStages, TaskContext}
+import org.apache.spark.{GraftStages, Partition, TaskContext}
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftOutputMetrics,
-  SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
-  BoundReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual,
-  JoinedRow, LessThan, LessThanOrEqual, Literal, SpecificInternalRow,
-  UnsafeProjection, UnsafeRow}
+  Row, SparkSession, sources}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow,
+  ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+  Expression, JoinedRow, SpecificInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{CoalescedPartitionSpec, SQLExecution,
-  ShufflePartitionSpec, ShuffledRowRDD, UnsafeExternalRowSorter,
-  UnsafeRowSerializer}
-import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusCache,
-  HadoopFsRelation, InMemoryFileIndex, OutputWriter, OutputWriterFactory,
-  PartitionDirectory, RecordReaderIterator}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.execution.{CoalescedPartitionSpec, FileRelation,
+  PartitionedFileUtil, SQLExecution, ShufflePartitionSpec, ShuffledRowRDD,
+  UnsafeExternalRowSorter, UnsafeRowSerializer}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition,
+  FileScanRDD, FileStatusCache, InMemoryFileIndex, OutputWriter,
+  OutputWriterFactory, RecordReaderIterator}
 import org.apache.spark.sql.execution.datasources.orc.{OrcDeserializer,
   OrcFileFormat, OrcUtils}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.metric.{SQLShuffleReadMetricsReporter,
   SQLShuffleWriteMetricsReporter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{BaseRelation, PrunedFilteredScan}
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.{CollectionAccumulator, SerializableConfiguration}
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
@@ -74,12 +77,15 @@ import graft.io.LocalFs
   *    of how many files the topic has accumulated. The full directory walk
   *    exists only on the recovery path, gated by an in-flight marker: it
   *    runs at most once after a crash, never per batch;
-  *  - every read (`read`, `readRange`, `readAsOf`, `readAsOfStr`) plans
-  *    over one committed-file index (`sinkRelation`). It skips files at
-  *    planning time: a pushed `column <op> literal` conjunct on `offset`
-  *    is judged against the chunk range in each file's name, and one on a
-  *    tracked stats column against the cell's `_graft_stats` line. The
-  *    window reads build the index from the statuses their exact-name
+  *  - every read (`read`, `readRange`, `readAsOf`, `readAsOfStr`) is the
+  *    sink's own scan (`SinkScan`, built by `sinkRelation`) over a listing
+  *    of committed files. It skips files at planning time: a pushed
+  *    `column <op> literal` conjunct on `offset` is judged against the
+  *    chunk range in each file's name, and one on a tracked stats column
+  *    against the cell's `_graft_stats` line. It evaluates every pushed
+  *    predicate it can judge itself, per row, so no window literal reaches
+  *    generated code and a lookup with a new window compiles nothing. The
+  *    window reads build the listing from the statuses their exact-name
   *    probes return, so planning them lists nothing and runs no job.
   *
   * Durability protocol (one commit per rotation file, `FileUtils.java:10-26`):
@@ -689,17 +695,19 @@ object OffsetNamedOrcSink {
     *     and each map task reports the distinct leaves it saw, so the
     *     touched leaves arrive with it.
     *  1. `between` runs on the driver with the touched leaves (also when
-    *     there are none): the caller's recovery check and read-back probes.
-    *     It returns each leaf's committed files to merge back.
+    *     there are none): the caller's recovery check and probes. It
+    *     returns the committed files each leaf's new file replaces; with
+    *     `readBack` their rows are merged into it.
     *  1. On `statsCols` topics, one reduce job folds each leaf's row count,
     *     min and max into its `_graft_stats` line, written before anything
     *     is staged — or, with `statsAfterHoist`, after the hoist.
     *  1. The in-flight marker lists every touched leaf; one reduce job
     *     stages each leaf's file in its `_chunk=` dir (`LeafTasks` feeding
-    *     `LeafWriter`); the touched staging dirs are hoisted to their
-    *     committed names; the marker is deleted.
+    *     `LeafWriter`); each staged file is hoisted to its committed name
+    *     in place of the files it replaces; the marker is deleted.
     *
     * `rows` is planned once, and nothing is re-planned between the stages.
+    * The writers' Hadoop conf is built and broadcast while stage 1 runs.
     * Never a directory walk. Returns the touched leaves.
     *
     * Balance: the leaves, ordered by bucket, are dealt in contiguous runs
@@ -711,7 +719,7 @@ object OffsetNamedOrcSink {
   private def commit(spark: SparkSession, fs: FileSystem, root: Path,
       topic: String, rows: DataFrame, partCols: Seq[String],
       orcOptions: Map[String, String], statsCols: Seq[String] = Nil,
-      statsAfterHoist: Boolean = false)(
+      statsAfterHoist: Boolean = false, readBack: Boolean = true)(
       between: Seq[Touched] => Seq[Seq[FileStatus]]): Seq[Touched] = {
     val sc = spark.sparkContext
     val dataCols = rows.columns.toSeq.filterNot(partCols.contains)
@@ -725,6 +733,7 @@ object OffsetNamedOrcSink {
     val seen = new CollectionAccumulator[UnsafeRow]
     sc.register(seen)
     val leafKey = keyOrdinals.map(i => BoundReference(i, attrs(i).dataType, nullable = true))
+    val dataSchema = nullable(StructType(dataCols.map(rows.schema(_)))).asInstanceOf[StructType]
     // under the plan's SQL execution, so streaming progress and the SQL UI
     // see the scan
     val shuffle = SQLExecution.withNewExecutionId(qe, Some(s"commit $root")) {
@@ -735,8 +744,14 @@ object OffsetNamedOrcSink {
           input.mapPartitions(trackLeaves(_, leafKey, seen)), attrs, buckets,
           new UnsafeRowSerializer(attrs.size, null),
           SQLShuffleWriteMetricsReporter.createShuffleWriteMetrics(sc))
-        GraftStages.runMapStage(sc, dep)
-        Some(dep)
+        val stage = GraftStages.submit(sc, dep)
+        val (factory, conf) = try writerConf(spark, orcOptions, dataSchema)
+          catch { case e: Throwable => stage.cancel(); throw e }
+        try stage.get()
+        catch { case e: Throwable =>
+          conf.destroy(); GraftStages.release(sc, dep); throw e
+        }
+        Some((dep, factory, conf))
       }
     }
     try {
@@ -753,56 +768,62 @@ object OffsetNamedOrcSink {
           r.getInt(nPrefix), r.getUTF8String(nPrefix + 1).toString), k)
       }.sortBy { case (b, t, _) => (b, t.markerLine) }
       val touched = leaves.map(_._2)
-      val readBack = between(touched)
-      for (dep <- shuffle if touched.nonEmpty) {
+      val replaced = between(touched)
+      for ((dep, factory, conf) <- shuffle if touched.nonEmpty) {
         val n = math.min(touched.size, sc.defaultParallelism)
         val runs = Array.tabulate(n + 1)(t => t * touched.size / n) // task t: leaves [runs(t), runs(t + 1))
         val reduce = new ShuffledRowRDD(dep,
           SQLShuffleReadMetricsReporter.createShuffleReadMetrics(sc),
           Array.tabulate[ShufflePartitionSpec](n)(t =>
             CoalescedPartitionSpec(leaves(runs(t))._1, leaves(runs(t + 1) - 1)._1 + 1)))
-        val dataSchema = nullable(StructType(dataCols.map(rows.schema(_)))).asInstanceOf[StructType]
-        val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(orcOptions))
-        val factory = new OrcFileFormat().prepareWrite(spark, job, orcOptions, dataSchema)
-        // one broadcast serves the read-back and the writers; their local
-        // files go through LocalFs, like the driver's (`topicFs`)
-        LocalFs.mapFileScheme(job.getConfiguration)
-        val conf = sc.broadcast(new SerializableConfiguration(job.getConfiguration))
-        try {
-          val tasks = new LeafTasks(attrs.map(_.dataType).toArray, keyOrdinals.toArray,
-            dataCols.map(rows.columns.indexOf(_)).toArray, dataSchema,
-            leaves.map(_._3).toArray, runs,
-            readBack.map(_.map(f => (f.getPath.toString, f.getLen)).toArray).toArray,
-            spark.sessionState.conf.caseSensitiveAnalysis, conf)
-          val stats = if (statsCols.isEmpty) Map.empty[Touched, String] else {
-            val isStr = statsCols.map(dataSchema(_).dataType == StringType)
-            val values = statsCols.zip(isStr).map { case (c, str) =>
-              val v = BoundReference(1 + dataSchema.fieldIndex(c), dataSchema(c).dataType, nullable = true)
-              if (str) v else Cast(v, LongType, tz)
-            }
-            sc.runJob(reduce, (ctx: TaskContext, it: Iterator[InternalRow]) =>
-                statsTails(tasks.rows(ctx, it), values, isStr.toArray))
-              .flatten.map { case (l, tail) =>
-                touched(l) -> s"${touched(l).markerLine}|$tail"
-              }.toMap
+        val tasks = new LeafTasks(attrs.map(_.dataType).toArray, keyOrdinals.toArray,
+          dataCols.map(rows.columns.indexOf(_)).toArray, dataSchema,
+          leaves.map(_._3).toArray, runs,
+          (if (readBack) replaced else touched.map(_ => Nil))
+            .map(_.map(f => (f.getPath.toString, f.getLen)).toArray).toArray,
+          spark.sessionState.conf.caseSensitiveAnalysis, conf)
+        val stats = if (statsCols.isEmpty) Map.empty[Touched, String] else {
+          val isStr = statsCols.map(dataSchema(_).dataType == StringType)
+          val values = statsCols.zip(isStr).map { case (c, str) =>
+            val v = BoundReference(1 + dataSchema.fieldIndex(c), dataSchema(c).dataType, nullable = true)
+            if (str) v else Cast(v, LongType, tz)
           }
-          val prefixNames = partCols.take(nPrefix)
-          if (!statsAfterHoist) rewriteStats(fs, root, prefixNames, stats)
-          val inflight = new Path(root, InflightMarker)
-          writeMarker(fs, inflight, touched.map(_.markerLine).mkString("\n"))
-          val writer = new LeafWriter(
-            touched.map(t => new Path(t.partitionDir(root), s"$ChunkCol=${t.cell}").toString).toArray,
-            factory, dataSchema, conf)
           sc.runJob(reduce, (ctx: TaskContext, it: Iterator[InternalRow]) =>
-            writer.write(ctx, tasks.rows(ctx, it)))
-          touched.foreach(t =>
-            hoistChunkDir(fs, t.partitionDir(root), t.partition.toString, t.cell, topic))
-          fs.delete(inflight, false)
-          if (statsAfterHoist) rewriteStats(fs, root, prefixNames, stats)
-        } finally conf.destroy()
+              statsTails(tasks.rows(ctx, it), values, isStr.toArray))
+            .flatten.map { case (l, tail) =>
+              touched(l) -> s"${touched(l).markerLine}|$tail"
+            }.toMap
+        }
+        val prefixNames = partCols.take(nPrefix)
+        if (!statsAfterHoist) rewriteStats(fs, root, prefixNames, stats)
+        val inflight = new Path(root, InflightMarker)
+        writeMarker(fs, inflight, touched.map(_.markerLine).mkString("\n"))
+        val writer = new LeafWriter(touched.map(stagingDir(root, _).toString).toArray,
+          factory, dataSchema, conf)
+        sc.runJob(reduce, (ctx: TaskContext, it: Iterator[InternalRow]) =>
+          writer.write(ctx, tasks.rows(ctx, it)))
+        touched.zip(replaced).foreach { case (t, old) => hoistStaged(fs, root, topic, t, old) }
+        fs.delete(inflight, false)
+        if (statsAfterHoist) rewriteStats(fs, root, prefixNames, stats)
       }
       touched
-    } finally shuffle.foreach(GraftStages.release(sc, _))
+    } finally shuffle.foreach { case (dep, _, conf) =>
+      GraftStages.release(sc, dep)
+      conf.destroy()
+    }
+  }
+
+  /** The ORC writer factory of a commit's leaf files, and the Hadoop conf
+    * its tasks use, broadcast: the session's conf with `orcOptions`. One
+    * broadcast serves the read-back and the writers; their local files go
+    * through LocalFs, like the driver's (`topicFs`).
+    */
+  private def writerConf(spark: SparkSession, orcOptions: Map[String, String],
+      dataSchema: StructType): (OutputWriterFactory, Broadcast[SerializableConfiguration]) = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConfWithOptions(orcOptions))
+    val factory = new OrcFileFormat().prepareWrite(spark, job, orcOptions, dataSchema)
+    LocalFs.mapFileScheme(job.getConfiguration)
+    (factory, spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration)))
   }
 
   /** Stage 1's pass over one input partition: the rows go on to the
@@ -1297,11 +1318,46 @@ object OffsetNamedOrcSink {
         .takeWhile(_.isDefined).flatten
   }
 
-  /** Hoist ONE chunk's staging dir to its committed offset name — the
-    * reference's exact key layout (`FileUtils.fileKeyToCommit`). Metadata
-    * only: one rename per committed file. Stale committed files for the
-    * chunk (matched exactly, incl. `-N` suffixes) are deleted first, so
-    * replays converge to one file per chunk.
+  /** The `_chunk=` staging dir of a touched leaf. */
+  private def stagingDir(root: Path, t: Touched): Path =
+    new Path(t.partitionDir(root), s"$ChunkCol=${t.cell}")
+
+  /** Hoist the file a commit just staged for leaf `t` to its committed
+    * offset name — the reference's exact key layout
+    * (`FileUtils.fileKeyToCommit`). The commit knows what is there: its
+    * write job staged the one `part-00000.orc`, and `replaced` are the
+    * committed files it probed before, which the new file replaces. So the
+    * hoist deletes those, renames the part and drops the staging dir, with
+    * no probe and no listing. A crash in between leaves the in-flight
+    * marker, and the recovery's discovering hoist (`hoistChunkDir`)
+    * finishes the leaf.
+    */
+  private def hoistStaged(fs: FileSystem, root: Path, topic: String, t: Touched,
+      replaced: Seq[FileStatus]): Unit = {
+    replaced.foreach(f => fs.delete(f.getPath, false))
+    val cDir = stagingDir(root, t)
+    renameCommitted(fs, new Path(cDir, PartFile), t.partitionDir(root), t.filePrefix(topic))
+    fs.delete(cDir, true)
+  }
+
+  /** Rename a staged part to the first committed name of its cell. Hadoop
+    * signals most rename failures (e.g. a failed S3A copy) by returning
+    * false, not throwing. An unchecked false here followed by the
+    * staging-dir delete would destroy the chunk's only copy — fail instead,
+    * leaving the staging dir AND the in-flight marker in place, so the
+    * next write/read recovers.
+    */
+  private def renameCommitted(fs: FileSystem, part: Path, pDir: Path, prefix: String): Unit = {
+    val t = new Path(pDir, CommittedName.file(prefix, 0))
+    if (!fs.rename(part, t))
+      throw new IOException(s"rename $part -> $t failed; staging dir kept for recovery")
+  }
+
+  /** Hoist ONE chunk's staging dir, as a crash left it, to its committed
+    * offset name: the recovery paths' hoist, which finds what is there.
+    * Metadata only: one rename per committed file. Stale committed files
+    * for the chunk (matched exactly, incl. `-N` suffixes) are deleted
+    * first, so replays converge to one file per chunk.
     */
   private def hoistChunkDir(fs: FileSystem, pDir: Path, p: String,
       cell: String, topic: String): Unit = {
@@ -1326,15 +1382,7 @@ object OffsetNamedOrcSink {
             "invariant is broken; refusing to hoist (a multi-part " +
             "rename pass is not crash-idempotent). Staging dir kept.")
       committedChunkFiles(fs, pDir, prefix).foreach(f => fs.delete(f.getPath, false))
-      val t = new Path(pDir, CommittedName.file(prefix, 0))
-      // Hadoop signals most rename failures (e.g. a failed S3A copy) by
-      // returning false, not throwing. An unchecked false here followed by
-      // the staging-dir delete would destroy the chunk's only copy — fail
-      // instead, leaving the staging dir AND the in-flight marker in
-      // place, so the next write/read recovers.
-      if (!fs.rename(parts.head.getPath, t))
-        throw new java.io.IOException(
-          s"rename ${parts.head.getPath} -> $t failed; staging dir kept for recovery")
+      renameCommitted(fs, parts.head.getPath, pDir, prefix)
     }
     fs.delete(cDir, true) // now holds only commit markers, if that
   }
@@ -1451,8 +1499,8 @@ object OffsetNamedOrcSink {
       readMarker(fs, new Path(root, StatsMarker)))
   }
 
-  /** The one relation constructor under every sink read: an ORC
-    * `HadoopFsRelation` over a `CommittedFileIndex`.
+  /** The one relation constructor under every sink read: a `SinkScan`
+    * over a listing of committed files.
     *
     * The listing is either the whole topic (`probed = None`: Spark's
     * `InMemoryFileIndex` over the topic dir, what `spark.read.orc` builds)
@@ -1476,12 +1524,9 @@ object OffsetNamedOrcSink {
     * the O9 rotation invariant. The input_file_name() fallback (legacy dirs
     * without a config marker) is NONDETERMINISTIC to Catalyst, and a
     * nondeterministic projection blocks every filter above it from pushing
-    * into the ORC scan — with the row-pure grid, point lookups reach the
-    * scan's row-group stats and bloom filters, and the file index's
-    * skipping.
-    *
-    * Two reads of the same topic compare equal (index equality by root
-    * paths and listed files), so `sameResult` and cache reuse hold.
+    * into the scan — with the row-pure grid, point lookups reach the
+    * scan's file skipping, its row test and ORC's row-group stats and
+    * bloom filters.
     */
   private def sinkRelation(spark: SparkSession, fs: FileSystem, root: Path,
       probed: Option[Seq[FileStatus]], config: Option[SinkConfig],
@@ -1507,15 +1552,13 @@ object OffsetNamedOrcSink {
       .orElse(new OrcFileFormat().inferSchema(spark, Map.empty, listing.allFiles()))
       .getOrElse(throw new IllegalStateException(
         s"$root holds no committed ORC file and no $SchemaMarker — no schema to read"))
-    val index = new CommittedFileIndex(listing,
-      new FileSkipping(qRoot, config, () => statsText))
     val chunk = config match {
       case Some(c) => col("offset") - pmod(col("offset"), lit(c.flushSize))
       case None => regexp_extract(input_file_name(), CommittedName.Tail, 2).cast("long")
     }
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
-        nullable(dataSchema).asInstanceOf[StructType], None, new OrcFileFormat,
-        Map.empty)(spark))
+    spark.baseRelationToDataFrame(new SinkScan(listing, partitionSchema,
+        nullable(dataSchema).asInstanceOf[StructType],
+        new FileSkipping(qRoot, config, () => statsText))(spark))
       .withColumn(ChunkCol, chunk)
   }
 
@@ -1544,78 +1587,228 @@ object OffsetNamedOrcSink {
     override def invalidateAll(): Unit = byPath = Map.empty
   }
 
-  /** The sink's file index: a listing of committed files plus file
-    * skipping. `listFiles` drops every file that a pushed data conjunct
-    * rules out (see `FileSkipping`); the row filter stays on top, so
-    * skipping only has to be conservative. Everything else — root paths,
-    * partition schema, `inputFiles`, size — is the listing's.
+  /** The sink's own relation: a listing of committed files, read with
+    * Spark's ORC reader, that evaluates the pushed predicates itself.
+    *
+    * Every pushed predicate `RowTest` can judge (`=`, `<`, `<=`, `>`, `>=`,
+    * `In`, `IsNull`, `IsNotNull` on a column, and `And` of these) is
+    * reported handled, so Spark plans no `Filter` for it, and no literal of
+    * a lookup window reaches whole-stage code: a lookup with a new window
+    * reuses the generated code of the last one. Anything else (a UDF, a
+    * cast, an OR, a column against a column) stays a `Filter` above the
+    * scan. A handled predicate on partition columns drops whole dirs; the
+    * others are judged per row, exactly. File skipping sees every pushed
+    * predicate (`FileSkipping`), and the ORC reader gets the data ones for
+    * its row-group stats and bloom filters.
+    *
+    * Two reads of the same topic compare equal (by root paths, listed
+    * files and schema), so `sameResult` and cache reuse hold.
     */
-  private final class CommittedFileIndex(listing: InMemoryFileIndex,
-      skipping: FileSkipping) extends FileIndex {
-    override def rootPaths: Seq[Path] = listing.rootPaths
-    override def partitionSchema: StructType = listing.partitionSchema
+  private final class SinkScan(private val listing: InMemoryFileIndex,
+      partitionSchema: StructType, dataSchema: StructType, skipping: FileSkipping)(
+      @transient spark: SparkSession)
+      extends BaseRelation with PrunedFilteredScan with FileRelation {
+    override def sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
+    override val schema: StructType = StructType(dataSchema ++ partitionSchema)
+    // the scan yields Spark's internal rows
+    override def needConversion: Boolean = false
+    override def sizeInBytes: Long =
+      (listing.sizeInBytes * spark.sessionState.conf.fileCompressionFactor).toLong
     override def inputFiles: Array[String] = listing.inputFiles
-    override def sizeInBytes: Long = listing.sizeInBytes
-    override def refresh(): Unit = listing.refresh()
-    override def metadataOpsTimeNs: Option[Long] = listing.metadataOpsTimeNs
 
-    override def listFiles(partitionFilters: Seq[Expression],
-        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-      val listed = listing.listFiles(partitionFilters, dataFilters)
-      val bounds = dataFilters.flatMap(conjuncts).flatMap(boundOf)
-      if (bounds.isEmpty) listed
-      else listed.map(d => d.copy(files = d.files.filter(f =>
-        skipping.keeps(f.fileStatus, bounds)))).filter(_.files.nonEmpty)
+    override def unhandledFilters(filters: Array[sources.Filter]): Array[sources.Filter] =
+      filters.filter(RowTest(_, schema).isEmpty)
+
+    override def buildScan(requiredColumns: Array[String],
+        filters: Array[sources.Filter]): RDD[Row] = {
+      val handled = filters.filter(RowTest(_, schema).isDefined)
+      val (onDirs, onRows) =
+        handled.partition(_.references.forall(partitionSchema.fieldNames.contains))
+      val bounds = filters.toSeq.flatMap(conjuncts).flatMap(boundOf(_, schema))
+      val dirTest = RowTest.all(onDirs.toSeq, partitionSchema)
+      val dirs = listing.listFiles(Nil, Nil).filter(d => dirTest(d.values))
+        .map(d => d.copy(files = d.files.filter(f => skipping.keeps(f.fileStatus, bounds))))
+        .filter(_.files.nonEmpty)
+      // the data columns to read: the requested ones and those the row
+      // test needs, which Spark does not request for a handled predicate
+      val needed = (requiredColumns ++ onRows.flatMap(_.references)).toSet
+      val readData = StructType(dataSchema.filter(f => needed(f.name)))
+      val readSchema = StructType(readData ++ partitionSchema)
+      val format = new OrcFileFormat
+      val batched = format.supportBatch(spark, readSchema)
+      val readFile = format.buildReaderWithPartitionValues(spark, dataSchema, partitionSchema,
+        readData, filters.toSeq.filter(_.references.forall(readData.fieldNames.contains)),
+        Map(FileFormat.OPTION_RETURNING_BATCH -> batched.toString),
+        spark.sessionState.newHadoopConf())
+      val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+      val splits = dirs.flatMap { d =>
+        d.files.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
+          format.isSplitable(spark, Map.empty, f.getPath), maxSplit, d.values))
+      }.sortBy(-_.length)
+      new SinkScanRDD(new FileScanRDD(spark, readFile,
+          FilePartition.getFilePartitions(spark, splits, maxSplit), readSchema),
+        batched, readSchema, onRows, requiredColumns.map(readSchema.fieldIndex))
+        .asInstanceOf[RDD[Row]]
     }
 
     private def files: Set[Path] = listing.allFiles().map(_.getPath).toSet
     override def equals(other: Any): Boolean = other match {
-      case o: CommittedFileIndex =>
-        rootPaths.toSet == o.rootPaths.toSet && files == o.files
+      case o: SinkScan => listing.rootPaths.toSet == o.listing.rootPaths.toSet &&
+        schema == o.schema && files == o.files
       case _ => false
     }
-    override def hashCode: Int = rootPaths.toSet.hashCode
+    override def hashCode: Int = listing.rootPaths.toSet.hashCode
+  }
+
+  /** The rows of a `SinkScan`: the file scan's rows (unpacked from the
+    * vectorized reader's batches when `batched`) over `readSchema` that
+    * pass every one of `tests`, as the columns at `out`. `numFiles` is the
+    * count of ORC files the scan opens.
+    */
+  private[graft] final class SinkScanRDD(files: FileScanRDD, batched: Boolean,
+      readSchema: StructType, tests: Array[sources.Filter], out: Array[Int])
+      extends RDD[InternalRow](files) {
+    def numFiles: Int = files.filePartitions.flatMap(_.files.map(_.filePath)).distinct.size
+
+    override protected def getPartitions: Array[Partition] = files.partitions
+    override protected def getPreferredLocations(split: Partition): Seq[String] =
+      files.preferredLocations(split)
+
+    override def compute(split: Partition, ctx: TaskContext): Iterator[InternalRow] = {
+      val in = files.iterator(split, ctx)
+      val rows =
+        if (batched) in.asInstanceOf[Iterator[ColumnarBatch]].flatMap(_.rowIterator().asScala)
+        else in
+      val kept = if (tests.isEmpty) rows else rows.filter(RowTest.all(tests.toSeq, readSchema))
+      if (out.toSeq == readSchema.indices) kept
+      else {
+        val view =
+          new ProjectingInternalRow(StructType(out.toSeq.map(readSchema(_))), out.toIndexedSeq)
+        kept.map { r => view.project(r); view }
+      }
+    }
+  }
+
+  /** Exact per-row evaluation of a pushed predicate, with Spark's own
+    * comparison semantics (`PhysicalDataType.ordering`: strings as UTF-8
+    * bytes, NaN above every double, -0.0 = 0.0) and SQL's null rule: a
+    * comparison with a null side is never true, so the row is dropped.
+    * Built as plain closures, so no code is generated.
+    */
+  private object RowTest {
+    /** The test of `f` on rows of `schema`, if `f` is one the scan judges:
+      * a comparison, `In`, `IsNull` or `IsNotNull` on a top-level column of
+      * an atomic type (strings in the binary collation), or `And` of such.
+      */
+    def apply(f: sources.Filter, schema: StructType): Option[InternalRow => Boolean] = {
+      def field(name: String): Option[(Int, DataType)] =
+        Some(schema.fieldNames.indexOf(name)).filter(_ >= 0)
+          .map(i => (i, schema(i).dataType)).filter { case (_, dt) => atomic(dt) }
+      def compare(name: String, v: Any)(keep: Int => Boolean) = field(name).flatMap {
+        case _ if v == null => Some((_: InternalRow) => false)
+        case (i, dt) => internal(v, dt).map(c => comparison(i, dt, c, keep))
+      }
+      f match {
+        case sources.EqualTo(a, v) => compare(a, v)(_ == 0)
+        case sources.LessThan(a, v) => compare(a, v)(_ < 0)
+        case sources.LessThanOrEqual(a, v) => compare(a, v)(_ <= 0)
+        case sources.GreaterThan(a, v) => compare(a, v)(_ > 0)
+        case sources.GreaterThanOrEqual(a, v) => compare(a, v)(_ >= 0)
+        case sources.In(a, vs) => field(a).flatMap { case (i, dt) =>
+          val values = vs.toSeq.filter(_ != null).map(internal(_, dt))
+          if (values.exists(_.isEmpty)) None
+          else {
+            val ord = PhysicalDataType.ordering(dt)
+            val sorted = values.flatten.sorted(ord).toArray[Any].map(_.asInstanceOf[AnyRef])
+            Some((r: InternalRow) => !r.isNullAt(i) &&
+              java.util.Arrays.binarySearch(sorted, r.get(i, dt), ord) >= 0)
+          }
+        }
+        case sources.IsNull(a) => field(a).map { case (i, _) => (r: InternalRow) => r.isNullAt(i) }
+        case sources.IsNotNull(a) => field(a).map { case (i, _) => (r: InternalRow) => !r.isNullAt(i) }
+        case sources.And(l, r) =>
+          for (x <- apply(l, schema); y <- apply(r, schema)) yield (row: InternalRow) => x(row) && y(row)
+        case _ => None
+      }
+    }
+
+    /** The conjunction of `fs`, each of which `apply` judges. */
+    def all(fs: Seq[sources.Filter], schema: StructType): InternalRow => Boolean = {
+      val tests = fs.map(apply(_, schema).get).toArray
+      r => {
+        var i = 0
+        while (i < tests.length && tests(i)(r)) i += 1
+        i == tests.length
+      }
+    }
+
+    private def atomic(dt: DataType): Boolean = dt match {
+      case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType |
+          DoubleType | DateType | TimestampType | TimestampNTZType | BinaryType => true
+      case _: DecimalType => true
+      case s => s == StringType // the binary collation
+
+    }
+
+    /** `v`, a pushed predicate's value, in the internal form of `dt`. */
+    private def internal(v: Any, dt: DataType): Option[Any] = (dt, v) match {
+      case (BooleanType, _: java.lang.Boolean) | (ByteType, _: java.lang.Byte) |
+          (ShortType, _: java.lang.Short) | (IntegerType, _: java.lang.Integer) |
+          (LongType, _: java.lang.Long) | (FloatType, _: java.lang.Float) |
+          (DoubleType, _: java.lang.Double) | (BinaryType, _: Array[Byte]) => Some(v)
+      case (_: DecimalType, d: java.math.BigDecimal) => Some(Decimal(d))
+      case (_: StringType, s: String) => Some(UTF8String.fromString(s))
+      case (DateType | TimestampType | TimestampNTZType, _) =>
+        scala.util.Try(CatalystTypeConverters.createToCatalystConverter(dt)(v)).toOption
+          .filter(c => c.isInstanceOf[java.lang.Integer] || c.isInstanceOf[java.lang.Long])
+      case _ => None
+    }
+
+    private def comparison(i: Int, dt: DataType, c: Any,
+        keep: Int => Boolean): InternalRow => Boolean = dt match {
+      case IntegerType | DateType =>
+        val x = c.asInstanceOf[Int]
+        r => !r.isNullAt(i) && keep(Integer.compare(r.getInt(i), x))
+      case LongType | TimestampType | TimestampNTZType =>
+        val x = c.asInstanceOf[Long]
+        r => !r.isNullAt(i) && keep(java.lang.Long.compare(r.getLong(i), x))
+      case _ =>
+        val ord = PhysicalDataType.ordering(dt)
+        r => !r.isNullAt(i) && keep(ord.compare(r.get(i, dt), c))
+    }
   }
 
   /** A pushed conjunct `column <op> value` that file skipping can judge:
-    * `op` is one of = < <= > >= with the column on the left, `value` a
-    * Long (integral column and literal) or a String (UTF-8-binary string
-    * column and literal).
+    * `op` is one of = < <= > >=, `value` a Long (integral column) or a
+    * String (UTF-8-binary string column).
     */
   private final case class Bound(column: String, op: String, value: Any)
 
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+  private def conjuncts(f: sources.Filter): Seq[sources.Filter] = f match {
+    case sources.And(l, r) => conjuncts(l) ++ conjuncts(r)
     case other => Seq(other)
   }
 
-  /** The Bound a conjunct states, if it is a bare column compared with a
-    * non-null literal of the column's kind. Anything else — an OR, a cast
-    * or expression on either side, a column-to-column compare — states
-    * none, and so skips no file.
+  /** The Bound a pushed conjunct states on a column of `schema`, if it is
+    * a comparison with a non-null value of the column's kind. Anything
+    * else — an OR, a cast or expression (never pushed), a column-to-column
+    * compare — states none, and so skips no file.
     */
-  private def boundOf(e: Expression): Option[Bound] = {
-    def integral(t: DataType) =
-      t == ByteType || t == ShortType || t == IntegerType || t == LongType
-    def mk(a: AttributeReference, op: String, l: Literal): Option[Bound] =
-      (l.value, a.dataType) match {
-        case (v: Number, t) if integral(t) && integral(l.dataType) =>
-          Some(Bound(a.name, op, v.longValue))
-        case (v: UTF8String, StringType) if l.dataType == StringType =>
-          Some(Bound(a.name, op, v.toString))
+  private def boundOf(f: sources.Filter, schema: StructType): Option[Bound] = {
+    def mk(column: String, op: String, v: Any): Option[Bound] =
+      (schema.find(_.name == column).map(_.dataType), v) match {
+        case (Some(ByteType | ShortType | IntegerType | LongType),
+            n @ (_: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer | _: java.lang.Long)) =>
+          Some(Bound(column, op, n.asInstanceOf[Number].longValue))
+        case (Some(StringType), s: String) => Some(Bound(column, op, s))
         case _ => None
       }
-    e match {
-      case EqualTo(a: AttributeReference, l: Literal) => mk(a, "=", l)
-      case EqualTo(l: Literal, a: AttributeReference) => mk(a, "=", l)
-      case LessThan(a: AttributeReference, l: Literal) => mk(a, "<", l)
-      case LessThan(l: Literal, a: AttributeReference) => mk(a, ">", l)
-      case LessThanOrEqual(a: AttributeReference, l: Literal) => mk(a, "<=", l)
-      case LessThanOrEqual(l: Literal, a: AttributeReference) => mk(a, ">=", l)
-      case GreaterThan(a: AttributeReference, l: Literal) => mk(a, ">", l)
-      case GreaterThan(l: Literal, a: AttributeReference) => mk(a, "<", l)
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) => mk(a, ">=", l)
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) => mk(a, "<=", l)
+    f match {
+      case sources.EqualTo(a, v) => mk(a, "=", v)
+      case sources.LessThan(a, v) => mk(a, "<", v)
+      case sources.LessThanOrEqual(a, v) => mk(a, "<=", v)
+      case sources.GreaterThan(a, v) => mk(a, ">", v)
+      case sources.GreaterThanOrEqual(a, v) => mk(a, ">=", v)
       case _ => None
     }
   }
@@ -2016,9 +2209,12 @@ object OffsetNamedOrcSink {
     // stats BEFORE anything is staged (the write() ordering): flat is the
     // full new content, so a crashed compaction recovers with consistent
     // metadata. orcOptions ride the same path as write() — compaction must
-    // not strip the topic's bloom filters.
+    // not strip the topic's bloom filters. A cell an earlier, interrupted
+    // compaction committed is replaced, not merged: `flat` holds all of it.
     commit(spark, newFs, newRoot, topic, flat, partCols, orcOptions,
-      if (cfg.statsCols.forall(flat.columns.contains)) cfg.statsCols else Nil)(_.map(_ => Nil))
+        if (cfg.statsCols.forall(flat.columns.contains)) cfg.statsCols else Nil,
+        readBack = false)(
+      _.map(t => committedChunkFiles(newFs, t.partitionDir(newRoot), t.filePrefix(topic))))
     newTopicDir
   }
 
@@ -2156,9 +2352,9 @@ object OffsetNamedOrcSink {
 
     // re-read EXACTLY the touched chunks' files, with the latched schema
     // (mixed pre-/post-widening physical schemas — the read() contract)
-    val files = touched.flatMap(t =>
-      committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic)))
-    val chunkRows = sinkRelation(spark, fs, root, Some(files), Some(cfg), None)
+    val committed = touched.map(t =>
+      t -> committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic))).toMap
+    val chunkRows = sinkRelation(spark, fs, root, Some(touched.flatMap(committed)), Some(cfg), None)
       .withColumn(ChunkCol, cellCol)
     val nBefore = chunkRows.count()
     val valueCols = chunkRows.columns.toSeq
@@ -2178,13 +2374,13 @@ object OffsetNamedOrcSink {
     // crash can never leave stats NARROWER than the surviving data
     val statsCols = if (cfg.statsCols.forall(survivors.columns.contains)) cfg.statsCols else Nil
     val live = commit(spark, fs, root, topic, survivors, partCols, Map.empty,
-        statsCols, statsAfterHoist = true) { live =>
+        statsCols, statsAfterHoist = true, readBack = false) { live =>
       // chunks with zero survivors stage nothing — delete their committed
-      // files directly (idempotent, convergent)
+      // files directly (idempotent, convergent); a live chunk's new file
+      // replaces its committed ones
       touched.filterNot(live.toSet).foreach(t =>
-        committedChunkFiles(fs, t.partitionDir(root), t.filePrefix(topic))
-          .foreach(f => fs.delete(f.getPath, false)))
-      live.map(_ => Nil)
+        committed(t).foreach(f => fs.delete(f.getPath, false)))
+      live.map(committed)
     }
     rewriteStats(fs, root, prefixCols, Map.empty, touched.filterNot(live.toSet).toSet)
     deleted

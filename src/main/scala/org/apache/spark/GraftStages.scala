@@ -2,14 +2,14 @@ package org.apache.spark
 
 /** Driver-side stage control the sink's commit needs and Spark keeps
   * private[spark] — so the helper lives under the spark package (like
-  * GraftOutputMetrics): running one shuffle's map stage on its own, as
+  * GraftOutputMetrics): starting one shuffle's map stage on its own, as
   * adaptive execution does, releasing that shuffle's files once its reduce
   * jobs are done, and the memory page size a task's sorter allocates.
   */
 object GraftStages {
-  /** Run the map stage of `dep` from the calling thread and wait for it. */
-  def runMapStage(sc: SparkContext, dep: ShuffleDependency[_, _, _]): MapOutputStatistics =
-    sc.submitMapStage(dep).get()
+  /** Start the map stage of `dep`; the returned future completes with it. */
+  def submit(sc: SparkContext, dep: ShuffleDependency[_, _, _]): SimpleFutureAction[MapOutputStatistics] =
+    sc.submitMapStage(dep)
 
   /** Delete the shuffle files of `dep` now, not when the dependency is
     * garbage-collected. */

@@ -1035,8 +1035,6 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
     // halves: the option reaches the writer through the commit path, and a
     // point lookup on the committed files reads a fraction of the rows a
     // bloom-less file must read.
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val n = 40000L
     // uid = md5-scrambled id: high-cardinality, no arrival-order locality
     val base = spark.range(n).select(
@@ -1063,20 +1061,14 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
     val target = spark.range(1)
       .select(conv(substring(md5(lit("0")), 1, 4), 16, 10).cast("int"))
       .head.getInt(0)
+    // rows the scan's tasks read from the files (their input records)
     def rowsRead(topicDir: String): (Long, Long) = {
       val df = OffsetNamedOrcSink.read(spark, topicDir)
         .filter(col("uid") === target)
       val hits = df.count()
-      df.collect()
-      def unwrap(p: SparkPlan): SparkPlan = p match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case other => other
-      }
-      val scans = unwrap(df.queryExecution.executedPlan).collect {
-        case f: FileSourceScanExec => f
-      }
-      assert(scans.nonEmpty, df.queryExecution.executedPlan.toString.take(2000))
-      (scans.map(_.metrics("numOutputRows").value).sum, hits)
+      val (_, work) = workDuring(df.collect())
+      assert(sinkScans(df).nonEmpty, df.queryExecution.executedPlan.toString.take(2000))
+      (work.recordsRead.sum, hits)
     }
     val (bloomRows, bloomHits) = rowsRead(bloomDir)
     val (plainRows, plainHits) = rowsRead(plainDir)
@@ -1456,22 +1448,39 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
     col("value.dval").as("dval"),
     concat(lit("e"), lpad(col("offset").cast("string"), 5, "0")).as("etype")))
 
-  /** (ORC files the scan of `df` opened — its `numFiles` metric — and the
-    * sorted rows of `cols`), from one execution of `df`.
-    */
-  private def scanOf(df: org.apache.spark.sql.DataFrame,
-      cols: Seq[String]): (Long, Seq[String]) = {
-    import org.apache.spark.sql.execution.FileSourceScanExec
+  /** The executed plan of `df`, final when adaptive. */
+  private def executedPlanOf(df: org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val q = df.select(cols.map(col): _*)
-    val rows = q.collect().map(_.toString).sorted.toSeq
-    val plan = q.queryExecution.executedPlan match {
+    df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case other => other
     }
-    val scans = plan.collect { case f: FileSourceScanExec => f }
+  }
+
+  /** The sink's own scans in the executed plan of `df`. */
+  private def sinkScans(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.RowDataSourceScanExec
+    executedPlanOf(df).collect { case s: RowDataSourceScanExec => s }
+  }
+
+  /** (ORC files the scan of `df` opened — the `numFiles` of a plain file
+    * scan, or of the sink's own scan — and the sorted rows of `cols`), from
+    * one execution of `df`.
+    */
+  private def scanOf(df: org.apache.spark.sql.DataFrame,
+      cols: Seq[String]): (Long, Seq[String]) = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec}
+    val q = df.select(cols.map(col): _*)
+    val rows = q.collect().map(_.toString).sorted.toSeq
+    val plan = executedPlanOf(q)
+    val scans = plan.collect {
+      case f: FileSourceScanExec => f.metrics("numFiles").value
+      case s: RowDataSourceScanExec => s.rdd match {
+        case r: OffsetNamedOrcSink.SinkScanRDD => r.numFiles.toLong
+      }
+    }
     assert(scans.size == 1, plan.toString.take(2000))
-    (scans.head.metrics("numFiles").value, rows)
+    (scans.head, rows)
   }
 
   /** `read(dir).filter(p)` against the same filter over a plain
@@ -1568,6 +1577,117 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
     assert(stats.delete())
     assert(skipped(topicDir, window)._1 == nAll)
     assert(skipped(topicDir, strWindow)._1 == nAll)
+  }
+
+  test("sink reads evaluate window predicates in the scan: new windows compile no code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.FilterExec
+    val topicDir = OffsetNamedOrcSink.write(clustered, freshOut(), flushSize = 50,
+      statsColumns = Seq("uid", "etype"))
+    val ref = OffsetNamedOrcSink.read(spark, topicDir)
+      .select("offset", "id", "uid", "etype").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2).toLong, r.getString(3)))
+    // (window kind, its read over [lo, lo + 100), the rows it must return)
+    val kinds: Seq[(String, Long => org.apache.spark.sql.DataFrame, Long => Seq[Long])] = Seq(
+      ("read().filter(offset)", lo => OffsetNamedOrcSink.read(spark, topicDir)
+        .filter(col("offset") >= lo && col("offset") < lo + 100),
+        lo => ref.collect { case (o, _, _, _) if o >= lo && o < lo + 100 => o }.toSeq),
+      ("read().filter(id)", lo => OffsetNamedOrcSink.read(spark, topicDir)
+        .filter(col("id") >= lo && col("id") < lo + 100),
+        lo => ref.collect { case (o, id, _, _) if id >= lo && id < lo + 100 => o }.toSeq),
+      ("readRange", lo => OffsetNamedOrcSink.readRange(spark, topicDir, lo, lo + 100),
+        lo => ref.collect { case (o, _, _, _) if o >= lo && o < lo + 100 => o }.toSeq),
+      ("readAsOf", lo => OffsetNamedOrcSink.readAsOf(spark, topicDir, "uid", lo, lo + 100),
+        lo => ref.collect { case (o, _, u, _) if u >= lo && u < lo + 100 => o }.toSeq),
+      ("readAsOfStr", lo => OffsetNamedOrcSink.readAsOfStr(spark, topicDir, "etype",
+        f"e$lo%05d", f"e${lo + 100}%05d"),
+        lo => ref.collect { case (o, _, _, e) if e >= f"e$lo%05d" && e < f"e${lo + 100}%05d" => o }.toSeq))
+    // every uid window holds the smallest uid
+    val minUid = ref.map(_._3).min
+    def window(kind: String, i: Int): Long =
+      if (kind == "readAsOf") minUid - i else 37L * i + 5
+    def run(kind: String, read: Long => org.apache.spark.sql.DataFrame,
+        want: Long => Seq[Long], i: Int): Unit = {
+      val lo = window(kind, i)
+      val df = read(lo)
+      val got = df.agg(count(lit(1)), coalesce(sum(col("offset")), lit(0L))).head()
+      val w = want(lo)
+      assert(w.nonEmpty && (got.getLong(0), got.getLong(1)) == ((w.size.toLong, w.sum)),
+        s"$kind [$lo, ${lo + 100}): got $got, want (${w.size}, ${w.sum})")
+      assert(executedPlanOf(df).collect { case f: FilterExec => f }.isEmpty,
+        s"$kind left a Filter above the scan: ${executedPlanOf(df)}")
+    }
+    for ((kind, read, want) <- kinds) run(kind, read, want, 0)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    for (i <- 1 to 20; (kind, read, want) <- kinds) run(kind, read, want, i)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiles == 0, s"$compiles compiles over ${20 * kinds.size} reads with new windows")
+  }
+
+  test("the sink's scan judges comparisons, In and null tests exactly on every column kind") {
+    import org.apache.spark.sql.execution.FilterExec
+    val withNulls = clustered.withColumn("value", struct(
+      col("value.flag").as("flag"), col("value.uid").as("uid"),
+      when(col("offset") % 5 =!= 0, col("value.id")).as("id"),
+      col("value.fval").as("fval"), col("value.dval").as("dval"),
+      when(col("offset") % 3 =!= 0, col("value.etype")).as("etype")))
+    val topicDir = OffsetNamedOrcSink.write(withNulls, freshOut(), flushSize = 100,
+      statsColumns = Seq("id", "etype"))
+    val one = spark.read.orc(topicDir).filter(col("offset") === 512L).head()
+    val (fv, dv, uid) = (one.getAs[Float]("fval"), one.getAs[Double]("dval"), one.getAs[Int]("uid"))
+    for ((what, p) <- Seq(
+        "In on a long column" -> col("id").isin(3L, 42L, 512L, 999L),
+        "In on strings, with a null" -> col("etype").isin("e00041", "e00512", null),
+        "In on an int column" -> col("uid").isin(uid, uid + 1),
+        "IsNull" -> col("id").isNull,
+        "IsNotNull and a bound" -> (col("etype").isNotNull && col("id") > 500L),
+        "float equality" -> (col("fval") === fv),
+        "double range" -> (col("dval") >= dv && col("dval") < dv + 50.0),
+        "boolean column" -> (col("flag") === true),
+        "partition column" -> (col("partition") === 1 && col("offset") < 500L),
+        "In on the partition column" -> col("partition").isin(0, 2),
+        "string bound" -> (col("etype") <= "e00100"))) {
+      val sink = OffsetNamedOrcSink.read(spark, topicDir).filter(p)
+      val plain = spark.read.orc(topicDir).filter(p)
+      val cols = plain.columns.toSeq.sorted
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+      val got = rows(sink)
+      assert(got.nonEmpty && got == rows(plain), s"$what: sink read differs from spark.read.orc")
+      assert(executedPlanOf(sink).collect { case f: FilterExec => f }.isEmpty,
+        s"$what left a Filter above the scan: ${executedPlanOf(sink)}")
+    }
+  }
+
+  test("the sink's scan leaves what it cannot judge to a Filter: UDF, cast, OR, column bound") {
+    import org.apache.spark.sql.execution.FilterExec
+    val topicDir = OffsetNamedOrcSink.write(clustered, freshOut(), flushSize = 100,
+      statsColumns = Seq("id", "etype"))
+    val odd = udf((x: Long) => x % 2 == 1)
+    for ((what, p) <- Seq(
+        "UDF" -> (odd(col("id")) && col("offset") < 500L),
+        "cast" -> (col("id").cast("string") === "512"),
+        "OR across columns" -> (col("id") < 150L || col("etype") >= "e00900"),
+        "column bound" -> (col("id") >= col("uid")))) {
+      val sink = OffsetNamedOrcSink.read(spark, topicDir).filter(p)
+      val plain = spark.read.orc(topicDir).filter(p)
+      val cols = plain.columns.toSeq.sorted
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+      val got = rows(sink)
+      assert(got.nonEmpty && got == rows(plain), s"$what: sink read differs from spark.read.orc")
+      val filters = executedPlanOf(sink).collect { case f: FilterExec => f }
+      assert(filters.size == 1 && sinkScans(sink).size == 1, s"$what: ${executedPlanOf(sink)}")
+      // the predicate the scan cannot judge is the Filter's, whole
+      val cond = filters.head.condition.sql
+      val kept = what match {
+        case "UDF" => cond.contains("UDF")
+        case "cast" => cond.contains("CAST(id AS STRING)")
+        case "OR across columns" => cond.contains(" OR ")
+        case _ => cond.contains("(id >= CAST(uid AS BIGINT))")
+      }
+      assert(kept, s"$what: Filter condition $cond")
+    }
   }
 
   /** Spark jobs started while `body` runs. */
@@ -1685,6 +1805,24 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
     val cells = OffsetNamedOrcSink.read(spark, topicDir)
       .select("partition", OffsetNamedOrcSink.ChunkCol).distinct().count()
     assert(files.length == cells)
+  }
+
+  test("a steady-state commit hoists what it staged: no _chunk= dir is listed") {
+    // the commit knows the one part file it staged per leaf and the
+    // committed files it probed for the read-back, so its hoist lists no
+    // staging dir; deleteRows hands its probed files to the hoist the same way
+    val out = freshOut()
+    val topicDir = OffsetNamedOrcSink.write(shaped.filter(col("offset") < 600), out, 250)
+    FsAudit.reset(); FsAudit.enabled = true
+    val erased = try {
+      // chunk 500 of each partition is half committed: read back and merged
+      OffsetNamedOrcSink.write(shaped.filter(col("offset") >= 400), out, 250)
+      OffsetNamedOrcSink.deleteRows(spark, topicDir, col("offset") % 7 === 0)
+    } finally FsAudit.enabled = false
+    val listed = FsAudit.dirsListed.toArray.map(_.toString).filter(_.contains("_chunk="))
+    assert(listed.isEmpty, s"steady-state commits listed: ${listed.mkString(", ")}")
+    assert(erased > 0 && erased == shaped.filter(col("offset") % 7 === 0).count())
+    assertCleanOnce(topicDir, 1000 - erased)
   }
 
   test("a replay half-covering a committed chunk keeps _graft_stats row counts exact") {
