@@ -17,14 +17,14 @@ import org.apache.orc.mapreduce.OrcMapreduceRecordReader
 import org.apache.spark.{GraftStages, Partition, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftOutputMetrics,
-  Row, SparkSession, sources}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow,
-  ProjectingInternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
-  Expression, JoinedRow, SpecificInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftColumnShim,
+  GraftOutputMetrics, Row, SparkSession, sources}
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute,
+  AttributeReference, BoundReference, Cast, EqualTo, Expression, GreaterThan,
+  GreaterThanOrEqual, JoinedRow, LessThan, LessThanOrEqual, Literal,
+  SpecificInternalRow, SubqueryExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.execution.{CoalescedPartitionSpec, FileRelation,
   PartitionedFileUtil, SQLExecution, ShufflePartitionSpec, ShuffledRowRDD,
   UnsafeExternalRowSorter, UnsafeRowSerializer}
@@ -37,7 +37,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.metric.{SQLShuffleReadMetricsReporter,
   SQLShuffleWriteMetricsReporter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{BaseRelation, PrunedFilteredScan}
+import org.apache.spark.sql.sources.{BaseRelation, CatalystScan}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
@@ -745,13 +745,19 @@ object OffsetNamedOrcSink {
           new UnsafeRowSerializer(attrs.size, null),
           SQLShuffleWriteMetricsReporter.createShuffleWriteMetrics(sc))
         val stage = GraftStages.submit(sc, dep)
-        val (factory, conf) = try writerConf(spark, orcOptions, dataSchema)
-          catch { case e: Throwable => stage.cancel(); throw e }
-        try stage.get()
-        catch { case e: Throwable =>
-          conf.destroy(); GraftStages.release(sc, dep); throw e
+        // the writers' conf is built while the map stage runs; if either
+        // fails, the stage stops and what was built goes with its shuffle
+        val built = scala.util.Try(writerConf(spark, orcOptions, dataSchema))
+        try {
+          val (factory, conf) = built.get
+          stage.get()
+          Some((dep, factory, conf))
+        } catch { case e: Throwable =>
+          if (!stage.isCompleted) stage.cancel()
+          built.foreach(_._2.destroy())
+          GraftStages.release(sc, dep)
+          throw e
         }
-        Some((dep, factory, conf))
       }
     }
     try {
@@ -1590,16 +1596,19 @@ object OffsetNamedOrcSink {
   /** The sink's own relation: a listing of committed files, read with
     * Spark's ORC reader, that evaluates the pushed predicates itself.
     *
-    * Every pushed predicate `RowTest` can judge (`=`, `<`, `<=`, `>`, `>=`,
-    * `In`, `IsNull`, `IsNotNull` on a column, and `And` of these) is
-    * reported handled, so Spark plans no `Filter` for it, and no literal of
-    * a lookup window reaches whole-stage code: a lookup with a new window
-    * reuses the generated code of the last one. Anything else (a UDF, a
-    * cast, an OR, a column against a column) stays a `Filter` above the
-    * scan. A handled predicate on partition columns drops whole dirs; the
-    * others are judged per row, exactly. File skipping sees every pushed
-    * predicate (`FileSkipping`), and the ORC reader gets the data ones for
-    * its row-group stats and bloom filters.
+    * A pushed predicate that Spark translates to a comparison (`=`, `<`,
+    * `<=`, `>`, `>=`), `In`, `IsNull` or `IsNotNull` on a column, or `And`
+    * of these (`judged`), is reported handled, so Spark plans no `Filter`
+    * for it, and no literal of a lookup window reaches whole-stage code: a
+    * lookup with a new window reuses the generated code of the last one.
+    * The scan evaluates such a predicate's Catalyst form per row with
+    * Catalyst's interpreted `eval`: Spark's own semantics, and no generated
+    * code. Anything else (a UDF, a cast, an OR, a column
+    * against a column) stays a `Filter` above the scan. Every predicate on
+    * partition columns alone drops whole dirs, as a file scan's partition
+    * filters do. File skipping (`FileSkipping`) sees every data predicate,
+    * and the ORC reader gets them for its row-group stats and bloom
+    * filters.
     *
     * Two reads of the same topic compare equal (by root paths, listed
     * files and schema), so `sameResult` and cache reuse hold.
@@ -1607,7 +1616,7 @@ object OffsetNamedOrcSink {
   private final class SinkScan(private val listing: InMemoryFileIndex,
       partitionSchema: StructType, dataSchema: StructType, skipping: FileSkipping)(
       @transient spark: SparkSession)
-      extends BaseRelation with PrunedFilteredScan with FileRelation {
+      extends BaseRelation with CatalystScan with FileRelation {
     override def sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
     override val schema: StructType = StructType(dataSchema ++ partitionSchema)
     // the scan yields Spark's internal rows
@@ -1617,27 +1626,40 @@ object OffsetNamedOrcSink {
     override def inputFiles: Array[String] = listing.inputFiles
 
     override def unhandledFilters(filters: Array[sources.Filter]): Array[sources.Filter] =
-      filters.filter(RowTest(_, schema).isEmpty)
+      filters.filterNot(judged)
 
-    override def buildScan(requiredColumns: Array[String],
-        filters: Array[sources.Filter]): RDD[Row] = {
-      val handled = filters.filter(RowTest(_, schema).isDefined)
-      val (onDirs, onRows) =
-        handled.partition(_.references.forall(partitionSchema.fieldNames.contains))
-      val bounds = filters.toSeq.flatMap(conjuncts).flatMap(boundOf(_, schema))
-      val dirTest = RowTest.all(onDirs.toSeq, partitionSchema)
-      val dirs = listing.listFiles(Nil, Nil).filter(d => dirTest(d.values))
+    private def judged(f: sources.Filter): Boolean = f match {
+      case sources.And(l, r) => judged(l) && judged(r)
+      case _: sources.EqualTo | _: sources.LessThan | _: sources.LessThanOrEqual |
+          _: sources.GreaterThan | _: sources.GreaterThanOrEqual | _: sources.In |
+          _: sources.IsNull | _: sources.IsNotNull => f.references.forall(schema.fieldNames.contains)
+      case _ => false
+    }
+
+    /** `filters` are every conjunct Spark pushes, handled or not. */
+    override def buildScan(requiredColumns: Seq[Attribute],
+        filters: Seq[Expression]): RDD[Row] = {
+      val onPartition = (a: Attribute) => partitionSchema.fieldNames.contains(a.name)
+      val (onDirs, onData) = filters
+        .filter(f => f.deterministic && !SubqueryExpression.hasSubquery(f))
+        .partition(_.references.forall(onPartition))
+      // the handled ones the dirs have not judged (as `unhandledFilters`
+      // sees them: translated with no nested columns)
+      val onRows = onData.filter(GraftColumnShim.translateFilter(_, nested = false).exists(judged))
+      val bounds = onData.flatMap(conjuncts).flatMap(boundOf)
+      val dirs = listing.listFiles(onDirs, Nil)
         .map(d => d.copy(files = d.files.filter(f => skipping.keeps(f.fileStatus, bounds))))
         .filter(_.files.nonEmpty)
       // the data columns to read: the requested ones and those the row
       // test needs, which Spark does not request for a handled predicate
-      val needed = (requiredColumns ++ onRows.flatMap(_.references)).toSet
+      val needed = (requiredColumns ++ onRows.flatMap(_.references)).map(_.name).toSet
       val readData = StructType(dataSchema.filter(f => needed(f.name)))
       val readSchema = StructType(readData ++ partitionSchema)
       val format = new OrcFileFormat
       val batched = format.supportBatch(spark, readSchema)
       val readFile = format.buildReaderWithPartitionValues(spark, dataSchema, partitionSchema,
-        readData, filters.toSeq.filter(_.references.forall(readData.fieldNames.contains)),
+        readData, onData.filterNot(_.references.exists(onPartition))
+          .flatMap(GraftColumnShim.translateFilter(_, nested = true)),
         Map(FileFormat.OPTION_RETURNING_BATCH -> batched.toString),
         spark.sessionState.newHadoopConf())
       val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
@@ -1645,9 +1667,12 @@ object OffsetNamedOrcSink {
         d.files.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
           format.isSplitable(spark, Map.empty, f.getPath), maxSplit, d.values))
       }.sortBy(-_.length)
+      val test = onRows.reduceOption(And).map(_.transform {
+        case a: AttributeReference => BoundReference(readSchema.fieldIndex(a.name), a.dataType, true)
+      })
       new SinkScanRDD(new FileScanRDD(spark, readFile,
           FilePartition.getFilePartitions(spark, splits, maxSplit), readSchema),
-        batched, readSchema, onRows, requiredColumns.map(readSchema.fieldIndex))
+        batched, readSchema, test, requiredColumns.map(a => readSchema.fieldIndex(a.name)).toArray)
         .asInstanceOf[RDD[Row]]
     }
 
@@ -1662,11 +1687,11 @@ object OffsetNamedOrcSink {
 
   /** The rows of a `SinkScan`: the file scan's rows (unpacked from the
     * vectorized reader's batches when `batched`) over `readSchema` that
-    * pass every one of `tests`, as the columns at `out`. `numFiles` is the
-    * count of ORC files the scan opens.
+    * pass `test`, a predicate bound to `readSchema`, as the columns at
+    * `out`. `numFiles` is the count of ORC files the scan opens.
     */
   private[graft] final class SinkScanRDD(files: FileScanRDD, batched: Boolean,
-      readSchema: StructType, tests: Array[sources.Filter], out: Array[Int])
+      readSchema: StructType, test: Option[Expression], out: Array[Int])
       extends RDD[InternalRow](files) {
     def numFiles: Int = files.filePartitions.flatMap(_.files.map(_.filePath)).distinct.size
 
@@ -1679,7 +1704,9 @@ object OffsetNamedOrcSink {
       val rows =
         if (batched) in.asInstanceOf[Iterator[ColumnarBatch]].flatMap(_.rowIterator().asScala)
         else in
-      val kept = if (tests.isEmpty) rows else rows.filter(RowTest.all(tests.toSeq, readSchema))
+      // Catalyst's interpreted eval, as `InterpretedPredicate` runs it
+      // without its per-row subexpression cache: a null result drops the row
+      val kept = test.fold(rows)(t => rows.filter(r => t.eval(r) == true))
       if (out.toSeq == readSchema.indices) kept
       else {
         val view =
@@ -1689,126 +1716,45 @@ object OffsetNamedOrcSink {
     }
   }
 
-  /** Exact per-row evaluation of a pushed predicate, with Spark's own
-    * comparison semantics (`PhysicalDataType.ordering`: strings as UTF-8
-    * bytes, NaN above every double, -0.0 = 0.0) and SQL's null rule: a
-    * comparison with a null side is never true, so the row is dropped.
-    * Built as plain closures, so no code is generated.
-    */
-  private object RowTest {
-    /** The test of `f` on rows of `schema`, if `f` is one the scan judges:
-      * a comparison, `In`, `IsNull` or `IsNotNull` on a top-level column of
-      * an atomic type (strings in the binary collation), or `And` of such.
-      */
-    def apply(f: sources.Filter, schema: StructType): Option[InternalRow => Boolean] = {
-      def field(name: String): Option[(Int, DataType)] =
-        Some(schema.fieldNames.indexOf(name)).filter(_ >= 0)
-          .map(i => (i, schema(i).dataType)).filter { case (_, dt) => atomic(dt) }
-      def compare(name: String, v: Any)(keep: Int => Boolean) = field(name).flatMap {
-        case _ if v == null => Some((_: InternalRow) => false)
-        case (i, dt) => internal(v, dt).map(c => comparison(i, dt, c, keep))
-      }
-      f match {
-        case sources.EqualTo(a, v) => compare(a, v)(_ == 0)
-        case sources.LessThan(a, v) => compare(a, v)(_ < 0)
-        case sources.LessThanOrEqual(a, v) => compare(a, v)(_ <= 0)
-        case sources.GreaterThan(a, v) => compare(a, v)(_ > 0)
-        case sources.GreaterThanOrEqual(a, v) => compare(a, v)(_ >= 0)
-        case sources.In(a, vs) => field(a).flatMap { case (i, dt) =>
-          val values = vs.toSeq.filter(_ != null).map(internal(_, dt))
-          if (values.exists(_.isEmpty)) None
-          else {
-            val ord = PhysicalDataType.ordering(dt)
-            val sorted = values.flatten.sorted(ord).toArray[Any].map(_.asInstanceOf[AnyRef])
-            Some((r: InternalRow) => !r.isNullAt(i) &&
-              java.util.Arrays.binarySearch(sorted, r.get(i, dt), ord) >= 0)
-          }
-        }
-        case sources.IsNull(a) => field(a).map { case (i, _) => (r: InternalRow) => r.isNullAt(i) }
-        case sources.IsNotNull(a) => field(a).map { case (i, _) => (r: InternalRow) => !r.isNullAt(i) }
-        case sources.And(l, r) =>
-          for (x <- apply(l, schema); y <- apply(r, schema)) yield (row: InternalRow) => x(row) && y(row)
-        case _ => None
-      }
-    }
-
-    /** The conjunction of `fs`, each of which `apply` judges. */
-    def all(fs: Seq[sources.Filter], schema: StructType): InternalRow => Boolean = {
-      val tests = fs.map(apply(_, schema).get).toArray
-      r => {
-        var i = 0
-        while (i < tests.length && tests(i)(r)) i += 1
-        i == tests.length
-      }
-    }
-
-    private def atomic(dt: DataType): Boolean = dt match {
-      case BooleanType | ByteType | ShortType | IntegerType | LongType | FloatType |
-          DoubleType | DateType | TimestampType | TimestampNTZType | BinaryType => true
-      case _: DecimalType => true
-      case s => s == StringType // the binary collation
-
-    }
-
-    /** `v`, a pushed predicate's value, in the internal form of `dt`. */
-    private def internal(v: Any, dt: DataType): Option[Any] = (dt, v) match {
-      case (BooleanType, _: java.lang.Boolean) | (ByteType, _: java.lang.Byte) |
-          (ShortType, _: java.lang.Short) | (IntegerType, _: java.lang.Integer) |
-          (LongType, _: java.lang.Long) | (FloatType, _: java.lang.Float) |
-          (DoubleType, _: java.lang.Double) | (BinaryType, _: Array[Byte]) => Some(v)
-      case (_: DecimalType, d: java.math.BigDecimal) => Some(Decimal(d))
-      case (_: StringType, s: String) => Some(UTF8String.fromString(s))
-      case (DateType | TimestampType | TimestampNTZType, _) =>
-        scala.util.Try(CatalystTypeConverters.createToCatalystConverter(dt)(v)).toOption
-          .filter(c => c.isInstanceOf[java.lang.Integer] || c.isInstanceOf[java.lang.Long])
-      case _ => None
-    }
-
-    private def comparison(i: Int, dt: DataType, c: Any,
-        keep: Int => Boolean): InternalRow => Boolean = dt match {
-      case IntegerType | DateType =>
-        val x = c.asInstanceOf[Int]
-        r => !r.isNullAt(i) && keep(Integer.compare(r.getInt(i), x))
-      case LongType | TimestampType | TimestampNTZType =>
-        val x = c.asInstanceOf[Long]
-        r => !r.isNullAt(i) && keep(java.lang.Long.compare(r.getLong(i), x))
-      case _ =>
-        val ord = PhysicalDataType.ordering(dt)
-        r => !r.isNullAt(i) && keep(ord.compare(r.get(i, dt), c))
-    }
-  }
-
-  /** A pushed conjunct `column <op> value` that file skipping can judge:
-    * `op` is one of = < <= > >=, `value` a Long (integral column) or a
-    * String (UTF-8-binary string column).
+  /** A pushed conjunct `column <op> literal` that file skipping can judge:
+    * `op` is one of = < <= > >= with the column on the left, `value` a
+    * Long (integral column and literal) or a String (UTF-8-binary string
+    * column and literal).
     */
   private final case class Bound(column: String, op: String, value: Any)
 
-  private def conjuncts(f: sources.Filter): Seq[sources.Filter] = f match {
-    case sources.And(l, r) => conjuncts(l) ++ conjuncts(r)
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
     case other => Seq(other)
   }
 
-  /** The Bound a pushed conjunct states on a column of `schema`, if it is
-    * a comparison with a non-null value of the column's kind. Anything
-    * else — an OR, a cast or expression (never pushed), a column-to-column
-    * compare — states none, and so skips no file.
+  /** The Bound a conjunct states, if it is a bare column compared with a
+    * non-null literal of the column's kind. Anything else — an OR, a cast
+    * or expression on either side, a column-to-column compare — states
+    * none, and so skips no file.
     */
-  private def boundOf(f: sources.Filter, schema: StructType): Option[Bound] = {
-    def mk(column: String, op: String, v: Any): Option[Bound] =
-      (schema.find(_.name == column).map(_.dataType), v) match {
-        case (Some(ByteType | ShortType | IntegerType | LongType),
-            n @ (_: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer | _: java.lang.Long)) =>
-          Some(Bound(column, op, n.asInstanceOf[Number].longValue))
-        case (Some(StringType), s: String) => Some(Bound(column, op, s))
+  private def boundOf(e: Expression): Option[Bound] = {
+    def integral(t: DataType) =
+      t == ByteType || t == ShortType || t == IntegerType || t == LongType
+    def mk(a: AttributeReference, op: String, l: Literal): Option[Bound] =
+      (l.value, a.dataType) match {
+        case (v: Number, t) if integral(t) && integral(l.dataType) =>
+          Some(Bound(a.name, op, v.longValue))
+        case (v: UTF8String, StringType) if l.dataType == StringType =>
+          Some(Bound(a.name, op, v.toString))
         case _ => None
       }
-    f match {
-      case sources.EqualTo(a, v) => mk(a, "=", v)
-      case sources.LessThan(a, v) => mk(a, "<", v)
-      case sources.LessThanOrEqual(a, v) => mk(a, "<=", v)
-      case sources.GreaterThan(a, v) => mk(a, ">", v)
-      case sources.GreaterThanOrEqual(a, v) => mk(a, ">=", v)
+    e match {
+      case EqualTo(a: AttributeReference, l: Literal) => mk(a, "=", l)
+      case EqualTo(l: Literal, a: AttributeReference) => mk(a, "=", l)
+      case LessThan(a: AttributeReference, l: Literal) => mk(a, "<", l)
+      case LessThan(l: Literal, a: AttributeReference) => mk(a, ">", l)
+      case LessThanOrEqual(a: AttributeReference, l: Literal) => mk(a, "<=", l)
+      case LessThanOrEqual(l: Literal, a: AttributeReference) => mk(a, ">=", l)
+      case GreaterThan(a: AttributeReference, l: Literal) => mk(a, ">", l)
+      case GreaterThan(l: Literal, a: AttributeReference) => mk(a, "<", l)
+      case GreaterThanOrEqual(a: AttributeReference, l: Literal) => mk(a, ">=", l)
+      case GreaterThanOrEqual(l: Literal, a: AttributeReference) => mk(a, "<=", l)
       case _ => None
     }
   }

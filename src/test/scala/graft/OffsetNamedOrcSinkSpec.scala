@@ -1690,6 +1690,17 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
     }
   }
 
+  test("the sink's scan drops partition dirs by a partition predicate Spark cannot push") {
+    // pmod(partition, 2) = 0 translates to no data source filter, so it
+    // stays a Filter; the scan still prunes the odd partitions' dirs by
+    // it, as a file scan's partition filters do
+    val topicDir = OffsetNamedOrcSink.write(clustered, freshOut(), flushSize = 100)
+    val (nEven, nPlain) = skipped(topicDir, pmod(col("partition"), lit(2)) === 0)
+    val (nAll, _) = skipped(topicDir, col("offset") >= 0L)
+    assert(nEven > 0 && nEven < nAll && nEven == nPlain,
+      s"opened $nEven of $nAll files; the plain scan opened $nPlain")
+  }
+
   /** Spark jobs started while `body` runs. */
   private def jobsDuring[T](body: => T): (T, Int) = {
     val (out, work) = workDuring(body)
