@@ -14,32 +14,34 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.orc.OrcFile
 import org.apache.orc.mapred.OrcStruct
 import org.apache.orc.mapreduce.OrcMapreduceRecordReader
-import org.apache.spark.{GraftStages, Partition, TaskContext}
+import org.apache.spark.{GraftStages, TaskContext}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftColumnShim,
-  GraftOutputMetrics, Row, SparkSession, sources}
-import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute,
-  AttributeReference, BoundReference, Cast, EqualTo, Expression, GreaterThan,
-  GreaterThanOrEqual, JoinedRow, LessThan, LessThanOrEqual, Literal,
-  SpecificInternalRow, SubqueryExpression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftOutputMetrics,
+  SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  BoundReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual,
+  InSet, JoinedRow, LeafExpression, LessThan, LessThanOrEqual, Literal,
+  Predicate, SpecificInternalRow, UnaryExpression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
+  CodeGenerator, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
+import org.apache.spark.sql.catalyst.planning.ScanOperation
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{CoalescedPartitionSpec, FileRelation,
-  PartitionedFileUtil, SQLExecution, ShufflePartitionSpec, ShuffledRowRDD,
+import org.apache.spark.sql.execution.{CoalescedPartitionSpec, FilterExec,
+  SQLExecution, ShufflePartitionSpec, ShuffledRowRDD, SparkPlan, SparkStrategy,
   UnsafeExternalRowSorter, UnsafeRowSerializer}
-import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition,
-  FileScanRDD, FileStatusCache, InMemoryFileIndex, OutputWriter,
-  OutputWriterFactory, RecordReaderIterator}
+import org.apache.spark.sql.execution.datasources.{FileIndex,
+  FileSourceStrategy, FileStatusCache, HadoopFsRelation, InMemoryFileIndex,
+  LogicalRelation, OutputWriter, OutputWriterFactory, PartitionDirectory,
+  RecordReaderIterator}
 import org.apache.spark.sql.execution.datasources.orc.{OrcDeserializer,
   OrcFileFormat, OrcUtils}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.metric.{SQLShuffleReadMetricsReporter,
   SQLShuffleWriteMetricsReporter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{BaseRelation, CatalystScan}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.{CollectionAccumulator, SerializableConfiguration}
 import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
@@ -77,15 +79,15 @@ import graft.io.LocalFs
   *    of how many files the topic has accumulated. The full directory walk
   *    exists only on the recovery path, gated by an in-flight marker: it
   *    runs at most once after a crash, never per batch;
-  *  - every read (`read`, `readRange`, `readAsOf`, `readAsOfStr`) is the
-  *    sink's own scan (`SinkScan`, built by `sinkRelation`) over a listing
-  *    of committed files. It skips files at planning time: a pushed
-  *    `column <op> literal` conjunct on `offset` is judged against the
-  *    chunk range in each file's name, and one on a tracked stats column
-  *    against the cell's `_graft_stats` line. It evaluates every pushed
-  *    predicate it can judge itself, per row, so no window literal reaches
-  *    generated code and a lookup with a new window compiles nothing. The
-  *    window reads build the listing from the statuses their exact-name
+  *  - every read (`read`, `readRange`, `readAsOf`, `readAsOfStr`) is
+  *    Spark's ORC file scan over one committed-file index (`sinkRelation`).
+  *    It skips files at planning time: a pushed `column <op> literal`
+  *    conjunct on `offset` is judged against the chunk range in each
+  *    file's name, and one on a tracked stats column against the cell's
+  *    `_graft_stats` line. The `Filter` above the scan reads its window
+  *    values from the generated code's references (`ParamLiterals`), so a
+  *    lookup with a new window reuses the compiled code of the last one.
+  *    The window reads build the index from the statuses their exact-name
   *    probes return, so planning them lists nothing and runs no job.
   *
   * Durability protocol (one commit per rotation file, `FileUtils.java:10-26`):
@@ -1505,8 +1507,9 @@ object OffsetNamedOrcSink {
       readMarker(fs, new Path(root, StatsMarker)))
   }
 
-  /** The one relation constructor under every sink read: a `SinkScan`
-    * over a listing of committed files.
+  /** The one relation constructor under every sink read: an ORC
+    * `HadoopFsRelation` over a `CommittedFileIndex`, planned by Spark's
+    * file scan.
     *
     * The listing is either the whole topic (`probed = None`: Spark's
     * `InMemoryFileIndex` over the topic dir, what `spark.read.orc` builds)
@@ -1530,9 +1533,12 @@ object OffsetNamedOrcSink {
     * the O9 rotation invariant. The input_file_name() fallback (legacy dirs
     * without a config marker) is NONDETERMINISTIC to Catalyst, and a
     * nondeterministic projection blocks every filter above it from pushing
-    * into the scan — with the row-pure grid, point lookups reach the
-    * scan's file skipping, its row test and ORC's row-group stats and
-    * bloom filters.
+    * into the ORC scan — with the row-pure grid, point lookups reach the
+    * scan's row-group stats and bloom filters, and the file index's
+    * skipping.
+    *
+    * Every read installs `ParamLiterals` in its session's planner, so a
+    * `Filter` over it compiles no window literal into generated code.
     */
   private def sinkRelation(spark: SparkSession, fs: FileSystem, root: Path,
       probed: Option[Seq[FileStatus]], config: Option[SinkConfig],
@@ -1558,13 +1564,16 @@ object OffsetNamedOrcSink {
       .orElse(new OrcFileFormat().inferSchema(spark, Map.empty, listing.allFiles()))
       .getOrElse(throw new IllegalStateException(
         s"$root holds no committed ORC file and no $SchemaMarker — no schema to read"))
+    val index = new CommittedFileIndex(listing,
+      new FileSkipping(qRoot, config, () => statsText))
     val chunk = config match {
       case Some(c) => col("offset") - pmod(col("offset"), lit(c.flushSize))
       case None => regexp_extract(input_file_name(), CommittedName.Tail, 2).cast("long")
     }
-    spark.baseRelationToDataFrame(new SinkScan(listing, partitionSchema,
-        nullable(dataSchema).asInstanceOf[StructType],
-        new FileSkipping(qRoot, config, () => statsText))(spark))
+    ParamLiterals.install(spark)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
+        nullable(dataSchema).asInstanceOf[StructType], None, new OrcFileFormat,
+        Map.empty)(spark))
       .withColumn(ChunkCol, chunk)
   }
 
@@ -1593,127 +1602,115 @@ object OffsetNamedOrcSink {
     override def invalidateAll(): Unit = byPath = Map.empty
   }
 
-  /** The sink's own relation: a listing of committed files, read with
-    * Spark's ORC reader, that evaluates the pushed predicates itself.
+  /** The sink's file index: a listing of committed files plus file
+    * skipping. `listFiles` drops every file that a pushed data conjunct
+    * rules out (see `FileSkipping`); the row filter stays on top, so
+    * skipping only has to be conservative. Everything else — root paths,
+    * partition schema, `inputFiles`, size — is the listing's.
     *
-    * A pushed predicate that Spark translates to a comparison (`=`, `<`,
-    * `<=`, `>`, `>=`), `In`, `IsNull` or `IsNotNull` on a column, or `And`
-    * of these (`judged`), is reported handled, so Spark plans no `Filter`
-    * for it, and no literal of a lookup window reaches whole-stage code: a
-    * lookup with a new window reuses the generated code of the last one.
-    * The scan evaluates such a predicate's Catalyst form per row with
-    * Catalyst's interpreted `eval`: Spark's own semantics, and no generated
-    * code. Anything else (a UDF, a cast, an OR, a column
-    * against a column) stays a `Filter` above the scan. Every predicate on
-    * partition columns alone drops whole dirs, as a file scan's partition
-    * filters do. File skipping (`FileSkipping`) sees every data predicate,
-    * and the ORC reader gets them for its row-group stats and bloom
-    * filters.
-    *
-    * Two reads of the same topic compare equal (by root paths, listed
-    * files and schema), so `sameResult` and cache reuse hold.
+    * Two reads of the same topic compare equal (index equality by root
+    * paths and listed files), so `sameResult` and cache reuse hold.
     */
-  private final class SinkScan(private val listing: InMemoryFileIndex,
-      partitionSchema: StructType, dataSchema: StructType, skipping: FileSkipping)(
-      @transient spark: SparkSession)
-      extends BaseRelation with CatalystScan with FileRelation {
-    override def sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
-    override val schema: StructType = StructType(dataSchema ++ partitionSchema)
-    // the scan yields Spark's internal rows
-    override def needConversion: Boolean = false
-    override def sizeInBytes: Long =
-      (listing.sizeInBytes * spark.sessionState.conf.fileCompressionFactor).toLong
+  private final class CommittedFileIndex(listing: InMemoryFileIndex,
+      skipping: FileSkipping) extends FileIndex {
+    override def rootPaths: Seq[Path] = listing.rootPaths
+    override def partitionSchema: StructType = listing.partitionSchema
     override def inputFiles: Array[String] = listing.inputFiles
+    override def sizeInBytes: Long = listing.sizeInBytes
+    override def refresh(): Unit = listing.refresh()
+    override def metadataOpsTimeNs: Option[Long] = listing.metadataOpsTimeNs
 
-    override def unhandledFilters(filters: Array[sources.Filter]): Array[sources.Filter] =
-      filters.filterNot(judged)
-
-    private def judged(f: sources.Filter): Boolean = f match {
-      case sources.And(l, r) => judged(l) && judged(r)
-      case _: sources.EqualTo | _: sources.LessThan | _: sources.LessThanOrEqual |
-          _: sources.GreaterThan | _: sources.GreaterThanOrEqual | _: sources.In |
-          _: sources.IsNull | _: sources.IsNotNull => f.references.forall(schema.fieldNames.contains)
-      case _ => false
-    }
-
-    /** `filters` are every conjunct Spark pushes, handled or not. */
-    override def buildScan(requiredColumns: Seq[Attribute],
-        filters: Seq[Expression]): RDD[Row] = {
-      val onPartition = (a: Attribute) => partitionSchema.fieldNames.contains(a.name)
-      val (onDirs, onData) = filters
-        .filter(f => f.deterministic && !SubqueryExpression.hasSubquery(f))
-        .partition(_.references.forall(onPartition))
-      // the handled ones the dirs have not judged (as `unhandledFilters`
-      // sees them: translated with no nested columns)
-      val onRows = onData.filter(GraftColumnShim.translateFilter(_, nested = false).exists(judged))
-      val bounds = onData.flatMap(conjuncts).flatMap(boundOf)
-      val dirs = listing.listFiles(onDirs, Nil)
-        .map(d => d.copy(files = d.files.filter(f => skipping.keeps(f.fileStatus, bounds))))
-        .filter(_.files.nonEmpty)
-      // the data columns to read: the requested ones and those the row
-      // test needs, which Spark does not request for a handled predicate
-      val needed = (requiredColumns ++ onRows.flatMap(_.references)).map(_.name).toSet
-      val readData = StructType(dataSchema.filter(f => needed(f.name)))
-      val readSchema = StructType(readData ++ partitionSchema)
-      val format = new OrcFileFormat
-      val batched = format.supportBatch(spark, readSchema)
-      val readFile = format.buildReaderWithPartitionValues(spark, dataSchema, partitionSchema,
-        readData, onData.filterNot(_.references.exists(onPartition))
-          .flatMap(GraftColumnShim.translateFilter(_, nested = true)),
-        Map(FileFormat.OPTION_RETURNING_BATCH -> batched.toString),
-        spark.sessionState.newHadoopConf())
-      val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
-      val splits = dirs.flatMap { d =>
-        d.files.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
-          format.isSplitable(spark, Map.empty, f.getPath), maxSplit, d.values))
-      }.sortBy(-_.length)
-      val test = onRows.reduceOption(And).map(_.transform {
-        case a: AttributeReference => BoundReference(readSchema.fieldIndex(a.name), a.dataType, true)
-      })
-      new SinkScanRDD(new FileScanRDD(spark, readFile,
-          FilePartition.getFilePartitions(spark, splits, maxSplit), readSchema),
-        batched, readSchema, test, requiredColumns.map(a => readSchema.fieldIndex(a.name)).toArray)
-        .asInstanceOf[RDD[Row]]
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val listed = listing.listFiles(partitionFilters, dataFilters)
+      val bounds = dataFilters.flatMap(conjuncts).flatMap(boundOf)
+      if (bounds.isEmpty) listed
+      else listed.map(d => d.copy(files = d.files.filter(f =>
+        skipping.keeps(f.fileStatus, bounds)))).filter(_.files.nonEmpty)
     }
 
     private def files: Set[Path] = listing.allFiles().map(_.getPath).toSet
     override def equals(other: Any): Boolean = other match {
-      case o: SinkScan => listing.rootPaths.toSet == o.listing.rootPaths.toSet &&
-        schema == o.schema && files == o.files
+      case o: CommittedFileIndex =>
+        rootPaths.toSet == o.rootPaths.toSet && files == o.files
       case _ => false
     }
-    override def hashCode: Int = listing.rootPaths.toSet.hashCode
+    override def hashCode: Int = rootPaths.toSet.hashCode
   }
 
-  /** The rows of a `SinkScan`: the file scan's rows (unpacked from the
-    * vectorized reader's batches when `batched`) over `readSchema` that
-    * pass `test`, a predicate bound to `readSchema`, as the columns at
-    * `out`. `numFiles` is the count of ORC files the scan opens.
+  /** The planner strategy of sink reads: it plans a scan of a sink relation
+    * as `FileSourceStrategy` does, then takes every window value out of
+    * the source of the `Filter`'s generated code. `Literal` writes a
+    * boolean, integral, float, double, date or timestamp value into the
+    * Java source, and `InSet` the values of a byte, short, int or date set,
+    * which would make each new window a new class for Janino to compile
+    * (~30 ms each). In the `FilterExec` condition such a literal
+    * becomes a `ParamLiteral` and such a set a `ParamInSet`, whose code
+    * reads the value from its references; a new window then reuses the
+    * compiled code of the last one. The scan's partition and data filters
+    * keep their literals, so file skipping and ORC's pushdown see them.
     */
-  private[graft] final class SinkScanRDD(files: FileScanRDD, batched: Boolean,
-      readSchema: StructType, test: Option[Expression], out: Array[Int])
-      extends RDD[InternalRow](files) {
-    def numFiles: Int = files.filePartitions.flatMap(_.files.map(_.filePath)).distinct.size
-
-    override protected def getPartitions: Array[Partition] = files.partitions
-    override protected def getPreferredLocations(split: Partition): Seq[String] =
-      files.preferredLocations(split)
-
-    override def compute(split: Partition, ctx: TaskContext): Iterator[InternalRow] = {
-      val in = files.iterator(split, ctx)
-      val rows =
-        if (batched) in.asInstanceOf[Iterator[ColumnarBatch]].flatMap(_.rowIterator().asScala)
-        else in
-      // Catalyst's interpreted eval, as `InterpretedPredicate` runs it
-      // without its per-row subexpression cache: a null result drops the row
-      val kept = test.fold(rows)(t => rows.filter(r => t.eval(r) == true))
-      if (out.toSeq == readSchema.indices) kept
-      else {
-        val view =
-          new ProjectingInternalRow(StructType(out.toSeq.map(readSchema(_))), out.toIndexedSeq)
-        kept.map { r => view.project(r); view }
+  private object ParamLiterals extends SparkStrategy {
+    /** Put the strategy in `spark`'s planner, once per session. */
+    def install(spark: SparkSession): Unit = {
+      val methods = spark.experimental
+      methods.synchronized {
+        if (!methods.extraStrategies.contains(this)) methods.extraStrategies :+= this
       }
     }
+
+    override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+      case ScanOperation(_, _, _, LogicalRelation(r: HadoopFsRelation, _, _, _, _))
+          if r.location.isInstanceOf[CommittedFileIndex] =>
+        FileSourceStrategy(plan).map(_.transform {
+          case f: FilterExec => f.copy(condition = f.condition.transform {
+            case Literal(v, t) if v != null && inlined(t) => ParamLiteral(v, t)
+            case InSet(c, set) if set.nonEmpty && switched(c.dataType) => ParamInSet(c, set)
+          })
+        })
+      case _ => Nil
+    }
+
+    private val inlined: Set[DataType] = Set(BooleanType, ByteType, ShortType,
+      IntegerType, LongType, FloatType, DoubleType, DateType, TimestampType, TimestampNTZType)
+    private val switched: Set[DataType] = Set(ByteType, ShortType, IntegerType, DateType)
+  }
+
+  /** A non-null literal whose generated code reads its value from the
+    * references of the generated class, not from its source. Not foldable,
+    * so it is evaluated, never folded; it prints as the literal does.
+    */
+  private[graft] final case class ParamLiteral(value: Any, dataType: DataType)
+      extends LeafExpression {
+    override def nullable: Boolean = false
+    override def eval(input: InternalRow): Any = value
+    override def toString: String = Literal(value, dataType).toString
+    override def sql: String = Literal(value, dataType).sql
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("param", value, CodeGenerator.boxedType(dataType))
+      val v = ctx.addMutableState(CodeGenerator.javaType(dataType), "param", v => s"$v = $ref;")
+      ev.copy(code = EmptyBlock, isNull = FalseLiteral, value = JavaCode.global(v, dataType))
+    }
+  }
+
+  /** `InSet` over a non-empty set, whose generated code reads the set from
+    * its references — as `InSet`'s own code does for a set it does not
+    * compile to `switch` cases.
+    */
+  private[graft] final case class ParamInSet(child: Expression, hset: Set[Any])
+      extends UnaryExpression with Predicate {
+    @transient private lazy val in = InSet(child, hset)
+    override def nullable: Boolean = in.nullable
+    override def eval(input: InternalRow): Any = in.eval(input)
+    override def toString: String = in.toString
+    override def sql: String = in.sql
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, c => {
+        val set = ctx.addReferenceObj("set", hset, "scala.collection.immutable.Set")
+        s"${ev.value} = $set.contains($c);" +
+          (if (hset.contains(null)) s" ${ev.isNull} = !${ev.value};" else "")
+      })
+    override protected def withNewChildInternal(c: Expression): ParamInSet = copy(child = c)
   }
 
   /** A pushed conjunct `column <op> literal` that file skipping can judge:

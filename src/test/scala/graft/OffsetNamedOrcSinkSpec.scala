@@ -1067,7 +1067,7 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
         .filter(col("uid") === target)
       val hits = df.count()
       val (_, work) = workDuring(df.collect())
-      assert(sinkScans(df).nonEmpty, df.queryExecution.executedPlan.toString.take(2000))
+      compileFreeFilters(df, Seq(target))
       (work.recordsRead.sum, hits)
     }
     val (bloomRows, bloomHits) = rowsRead(bloomDir)
@@ -1457,28 +1457,54 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
     }
   }
 
-  /** The sink's own scans in the executed plan of `df`. */
-  private def sinkScans(df: org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.execution.RowDataSourceScanExec
-    executedPlanOf(df).collect { case s: RowDataSourceScanExec => s }
+  /** The Filters above the one file scan of the sink read `df`, after
+    * asserting the plan that keeps a new window from compiling code: in a
+    * Filter condition, no value that generated code writes into its source
+    * is left (a `ParamLiteral` or `ParamInSet` stands in for it; string and
+    * decimal literals the code already reads from its references), and
+    * every value the Filters hold, and each of `window`, is also in the
+    * scan's pushed filters as a plain literal.
+    */
+  private def compileFreeFilters(df: org.apache.spark.sql.DataFrame,
+      window: Seq[Any] = Nil): Seq[org.apache.spark.sql.execution.FilterExec] = {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, InSet, Literal}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    import org.apache.spark.sql.types._
+    import OffsetNamedOrcSink.{ParamInSet, ParamLiteral}
+    val plan = executedPlanOf(df)
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 1, s"not one file scan: $plan")
+    val filters = plan.collect { case f: FilterExec => f }
+    def values(e: Expression): Seq[String] = e.collect {
+      case Literal(v, _) => Seq(v)
+      case ParamLiteral(v, _) => Seq(v)
+      case InSet(_, set) => set.toSeq
+      case ParamInSet(_, set) => set.toSeq
+    }.flatten.filter(_ != null).map(_.toString)
+    val compiled = filters.flatMap(_.condition.collect {
+      case l @ Literal(v, t) if v != null && t != StringType && !t.isInstanceOf[DecimalType] => l
+      case i @ InSet(c, _) if Seq(ByteType, ShortType, IntegerType, DateType).contains(c.dataType) => i
+    })
+    assert(compiled.isEmpty, s"$compiled compile into a Filter: $plan")
+    val pushed = (scans.head.partitionFilters ++ scans.head.dataFilters).flatMap(values).toSet
+    val held = filters.flatMap(f => values(f.condition)) ++ window.map(_.toString)
+    assert(held.forall(pushed), s"${held.filterNot(pushed)} not in the scan's pushed filters: $plan")
+    filters
   }
 
-  /** (ORC files the scan of `df` opened — the `numFiles` of a plain file
-    * scan, or of the sink's own scan — and the sorted rows of `cols`), from
-    * one execution of `df`.
+  /** Walks a plan into its adaptive query stages. */
+  private object Stages extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** (ORC files the scan of `df` opened, and the sorted rows of `cols`),
+    * from one execution of `df`.
     */
   private def scanOf(df: org.apache.spark.sql.DataFrame,
       cols: Seq[String]): (Long, Seq[String]) = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     val q = df.select(cols.map(col): _*)
     val rows = q.collect().map(_.toString).sorted.toSeq
-    val plan = executedPlanOf(q)
-    val scans = plan.collect {
-      case f: FileSourceScanExec => f.metrics("numFiles").value
-      case s: RowDataSourceScanExec => s.rdd match {
-        case r: OffsetNamedOrcSink.SinkScanRDD => r.numFiles.toLong
-      }
-    }
+    val plan = q.queryExecution.executedPlan
+    val scans = Stages.collect(plan) { case f: FileSourceScanExec => f.metrics("numFiles").value }
     assert(scans.size == 1, plan.toString.take(2000))
     (scans.head, rows)
   }
@@ -1579,53 +1605,75 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
     assert(skipped(topicDir, strWindow)._1 == nAll)
   }
 
-  test("sink reads evaluate window predicates in the scan: new windows compile no code") {
+  test("sink reads keep window values out of generated code: new windows compile no code") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    import org.apache.spark.sql.execution.FilterExec
+    import OffsetNamedOrcSink.{ParamInSet, ParamLiteral}
     val topicDir = OffsetNamedOrcSink.write(clustered, freshOut(), flushSize = 50,
       statsColumns = Seq("uid", "etype"))
     val ref = OffsetNamedOrcSink.read(spark, topicDir)
       .select("offset", "id", "uid", "etype").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2).toLong, r.getString(3)))
-    // (window kind, its read over [lo, lo + 100), the rows it must return)
-    val kinds: Seq[(String, Long => org.apache.spark.sql.DataFrame, Long => Seq[Long])] = Seq(
-      ("read().filter(offset)", lo => OffsetNamedOrcSink.read(spark, topicDir)
-        .filter(col("offset") >= lo && col("offset") < lo + 100),
-        lo => ref.collect { case (o, _, _, _) if o >= lo && o < lo + 100 => o }.toSeq),
-      ("read().filter(id)", lo => OffsetNamedOrcSink.read(spark, topicDir)
-        .filter(col("id") >= lo && col("id") < lo + 100),
-        lo => ref.collect { case (o, id, _, _) if id >= lo && id < lo + 100 => o }.toSeq),
-      ("readRange", lo => OffsetNamedOrcSink.readRange(spark, topicDir, lo, lo + 100),
-        lo => ref.collect { case (o, _, _, _) if o >= lo && o < lo + 100 => o }.toSeq),
-      ("readAsOf", lo => OffsetNamedOrcSink.readAsOf(spark, topicDir, "uid", lo, lo + 100),
-        lo => ref.collect { case (o, _, u, _) if u >= lo && u < lo + 100 => o }.toSeq),
-      ("readAsOfStr", lo => OffsetNamedOrcSink.readAsOfStr(spark, topicDir, "etype",
-        f"e$lo%05d", f"e${lo + 100}%05d"),
-        lo => ref.collect { case (o, _, _, e) if e >= f"e$lo%05d" && e < f"e${lo + 100}%05d" => o }.toSeq))
     // every uid window holds the smallest uid
     val minUid = ref.map(_._3).min
+    // In windows: 8 offsets (stays In), and 12 uids, which Spark plans as
+    // an InSet whose own code compiles its int values into `switch` cases
+    def offsets(lo: Long) = (0 until 8).map(k => lo + 11 * k)
+    def uidSet(lo: Long) = minUid.toInt +: (1 to 11).map(k => (lo * 100 + k).toInt)
+    // (window kind, its read of the window at lo, the rows it must return,
+    // the window's values)
+    val kinds: Seq[(String, Long => org.apache.spark.sql.DataFrame, Long => Seq[Long],
+        Long => Seq[Any])] = Seq(
+      ("read().filter(offset)", lo => OffsetNamedOrcSink.read(spark, topicDir)
+        .filter(col("offset") >= lo && col("offset") < lo + 100),
+        lo => ref.collect { case (o, _, _, _) if o >= lo && o < lo + 100 => o }.toSeq,
+        lo => Seq(lo, lo + 100)),
+      ("read().filter(id)", lo => OffsetNamedOrcSink.read(spark, topicDir)
+        .filter(col("id") >= lo && col("id") < lo + 100),
+        lo => ref.collect { case (o, id, _, _) if id >= lo && id < lo + 100 => o }.toSeq,
+        lo => Seq(lo, lo + 100)),
+      ("read().filter(offset IN 8 values)", lo => OffsetNamedOrcSink.read(spark, topicDir)
+        .filter(col("offset").isin(offsets(lo): _*)),
+        lo => ref.collect { case (o, _, _, _) if offsets(lo).contains(o) => o }.toSeq,
+        offsets),
+      ("read().filter(uid IN 12 values)", lo => OffsetNamedOrcSink.read(spark, topicDir)
+        .filter(col("uid").isin(uidSet(lo): _*)),
+        lo => ref.collect { case (o, _, u, _) if uidSet(lo).contains(u.toInt) => o }.toSeq,
+        uidSet),
+      ("readRange", lo => OffsetNamedOrcSink.readRange(spark, topicDir, lo, lo + 100),
+        lo => ref.collect { case (o, _, _, _) if o >= lo && o < lo + 100 => o }.toSeq,
+        lo => Seq(lo, lo + 100)),
+      ("readAsOf", lo => OffsetNamedOrcSink.readAsOf(spark, topicDir, "uid", lo, lo + 100),
+        lo => ref.collect { case (o, _, u, _) if u >= lo && u < lo + 100 => o }.toSeq,
+        lo => Seq(lo, lo + 100)),
+      ("readAsOfStr", lo => OffsetNamedOrcSink.readAsOfStr(spark, topicDir, "etype",
+        f"e$lo%05d", f"e${lo + 100}%05d"),
+        lo => ref.collect { case (o, _, _, e) if e >= f"e$lo%05d" && e < f"e${lo + 100}%05d" => o }.toSeq,
+        lo => Seq(f"e$lo%05d", f"e${lo + 100}%05d")))
     def window(kind: String, i: Int): Long =
       if (kind == "readAsOf") minUid - i else 37L * i + 5
     def run(kind: String, read: Long => org.apache.spark.sql.DataFrame,
-        want: Long => Seq[Long], i: Int): Unit = {
+        want: Long => Seq[Long], values: Long => Seq[Any], i: Int): Unit = {
       val lo = window(kind, i)
       val df = read(lo)
       val got = df.agg(count(lit(1)), coalesce(sum(col("offset")), lit(0L))).head()
       val w = want(lo)
       assert(w.nonEmpty && (got.getLong(0), got.getLong(1)) == ((w.size.toLong, w.sum)),
-        s"$kind [$lo, ${lo + 100}): got $got, want (${w.size}, ${w.sum})")
-      assert(executedPlanOf(df).collect { case f: FilterExec => f }.isEmpty,
-        s"$kind left a Filter above the scan: ${executedPlanOf(df)}")
+        s"$kind ${values(lo)}: got $got, want (${w.size}, ${w.sum})")
+      val filters = compileFreeFilters(df, values(lo))
+      // string windows are literals their code already references
+      assert(kind == "readAsOfStr" || filters.exists(_.condition.exists {
+        case _: ParamLiteral | _: ParamInSet => true
+        case _ => false
+      }), s"$kind: no window value read from references: ${executedPlanOf(df)}")
     }
-    for ((kind, read, want) <- kinds) run(kind, read, want, 0)
+    for ((kind, read, want, values) <- kinds) run(kind, read, want, values, 0)
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    for (i <- 1 to 20; (kind, read, want) <- kinds) run(kind, read, want, i)
+    for (i <- 1 to 20; (kind, read, want, values) <- kinds) run(kind, read, want, values, i)
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
     assert(compiles == 0, s"$compiles compiles over ${20 * kinds.size} reads with new windows")
   }
 
   test("the sink's scan judges comparisons, In and null tests exactly on every column kind") {
-    import org.apache.spark.sql.execution.FilterExec
     val withNulls = clustered.withColumn("value", struct(
       col("value.flag").as("flag"), col("value.uid").as("uid"),
       when(col("offset") % 5 =!= 0, col("value.id")).as("id"),
@@ -1654,13 +1702,11 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
         df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
       val got = rows(sink)
       assert(got.nonEmpty && got == rows(plain), s"$what: sink read differs from spark.read.orc")
-      assert(executedPlanOf(sink).collect { case f: FilterExec => f }.isEmpty,
-        s"$what left a Filter above the scan: ${executedPlanOf(sink)}")
+      compileFreeFilters(sink)
     }
   }
 
   test("the sink's scan leaves what it cannot judge to a Filter: UDF, cast, OR, column bound") {
-    import org.apache.spark.sql.execution.FilterExec
     val topicDir = OffsetNamedOrcSink.write(clustered, freshOut(), flushSize = 100,
       statsColumns = Seq("id", "etype"))
     val odd = udf((x: Long) => x % 2 == 1)
@@ -1676,8 +1722,8 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
         df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
       val got = rows(sink)
       assert(got.nonEmpty && got == rows(plain), s"$what: sink read differs from spark.read.orc")
-      val filters = executedPlanOf(sink).collect { case f: FilterExec => f }
-      assert(filters.size == 1 && sinkScans(sink).size == 1, s"$what: ${executedPlanOf(sink)}")
+      val filters = compileFreeFilters(sink)
+      assert(filters.size == 1, s"$what: ${executedPlanOf(sink)}")
       // the predicate the scan cannot judge is the Filter's, whole
       val cond = filters.head.condition.sql
       val kept = what match {
@@ -1691,14 +1737,40 @@ class OffsetNamedOrcSinkSpec extends SparkSpec {
   }
 
   test("the sink's scan drops partition dirs by a partition predicate Spark cannot push") {
-    // pmod(partition, 2) = 0 translates to no data source filter, so it
-    // stays a Filter; the scan still prunes the odd partitions' dirs by
-    // it, as a file scan's partition filters do
+    // pmod(partition, 2) = 0 translates to no data source filter; the scan
+    // still prunes the odd partitions' dirs by it, as a partition filter
     val topicDir = OffsetNamedOrcSink.write(clustered, freshOut(), flushSize = 100)
     val (nEven, nPlain) = skipped(topicDir, pmod(col("partition"), lit(2)) === 0)
     val (nAll, _) = skipped(topicDir, col("offset") >= 0L)
     assert(nEven > 0 && nEven < nAll && nEven == nPlain,
       s"opened $nEven of $nAll files; the plain scan opened $nPlain")
+  }
+
+  test("a join on partition prunes a sink read's dirs dynamically") {
+    import org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val topicDir = OffsetNamedOrcSink.write(clustered, freshOut(), flushSize = 100)
+    // a small filtered table: the join's broadcast side, holding partition 1
+    val keys = spark.range(4).select(col("id").cast("int").as("p"), (col("id") * 7).as("w"))
+      .filter(col("w") === 7L)
+    val dpp = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
+    def joined(pruning: Boolean) = {
+      spark.conf.set(dpp, pruning)
+      try {
+        val df = OffsetNamedOrcSink.read(spark, topicDir)
+          .join(keys, col("partition") === col("p"))
+        val (files, rows) = scanOf(df, Seq("offset", "partition", "w"))
+        val dynamic = Stages.collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec =>
+          s.partitionFilters.exists(_.isInstanceOf[DynamicPruningExpression])
+        }
+        (files, rows, dynamic)
+      } finally spark.conf.unset(dpp)
+    }
+    val (nPruned, pruned, dynamic) = joined(pruning = true)
+    val (nAll, all, _) = joined(pruning = false)
+    assert(dynamic == Seq(true), s"scan partition filters carry no dynamic pruning: $dynamic")
+    assert(pruned.nonEmpty && pruned == all, "the pruned join returns other rows")
+    assert(nPruned > 0 && nPruned < nAll, s"pruned scan opened $nPruned of $nAll files")
   }
 
   /** Spark jobs started while `body` runs. */

@@ -231,6 +231,25 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("Window"), p.take(3000))
   }
 
+  test("plain explode infers a Filter that inlines the exploded expression; explode_outer none") {
+    // why the shingle queries explode with explode_outer: the inferred
+    // `size(sh) > 0 AND isnotnull(sh)` re-evaluates the whole shingle
+    // expression (its split() and lambda) inside the Filter
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, Size}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val docs = Tables(spark, sf, "documents")
+      .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
+      .select(col("doc_id"), operators.DedupOps.shingleHashes.as("sh"))
+    def inferred(exploded: org.apache.spark.sql.Column) =
+      docs.select(exploded).queryExecution.optimizedPlan.collect {
+        case f: Filter if f.condition.exists(_.isInstanceOf[Size]) => f.condition
+      }
+    val plain = inferred(explode(col("sh")))
+    assert(plain.size == 1 && plain.head.exists(_.isInstanceOf[LambdaFunction]), plain)
+    assert(inferred(explode_outer(col("sh"))).isEmpty)
+  }
+
   test("q_embed_centroid partially aggregates before the (label, dim) shuffle") {
     val p = plan("q_embed_centroid")
     assert(p.contains("partial_avg") || p.contains("partial_sum"), p.take(3000))

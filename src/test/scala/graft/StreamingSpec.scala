@@ -298,6 +298,27 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a listing that sees a _chunk= staging dir fails; a recursive lookup with the committed-name glob reads past it") {
+    // why streamFromSink lists recursively: a `_`-prefixed dir whose name
+    // holds `=` is not hidden from listings, and partition inference meets
+    // `_chunk` below `partition`
+    val base = tmp("graft-staging-listing-")
+    Seq((1L, "a")).toDF("offset", "v").write.orc(s"$base/partition=0")
+    val dir = new java.io.File(s"$base/partition=0")
+    dir.listFiles.filter(_.getName.endsWith(".orc")).foreach(f =>
+      assert(f.renameTo(new java.io.File(dir, "events+0+0000000000.orc"))))
+    Seq((2L, "b")).toDF("offset", "v").write.orc(s"$base/partition=0/_chunk=250")
+    for (glob <- Seq(None, Some("*+*+*.orc"))) {
+      val reader = glob.foldLeft(spark.read.option("basePath", base))(
+        _.option("pathGlobFilter", _))
+      val e = intercept[Exception](reader.orc(s"$base/partition=*").count())
+      assert(e.getMessage.contains("CONFLICTING_PARTITION_COLUMN_NAMES"), e.getMessage)
+    }
+    assert(spark.read.schema("offset long, v string")
+      .option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", "*+*+*.orc").orc(base).count() == 1)
+  }
+
   test("streamFromSink derives dt from the path under the TimeDaily layout") {
     import graft.streaming.OffsetNamedOrcSink.Layout
     val outDir = tmp("graft-tail-dt-")
