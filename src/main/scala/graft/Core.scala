@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.round
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, round, sum}
 import org.apache.spark.sql.types.DecimalType
 
 /** One engine query: the Spark implementation plus (when SQL-expressible) the
@@ -52,6 +53,67 @@ object Exact {
     */
   def cents(c: Column): Column =
     round(c * org.apache.spark.sql.functions.lit(100.0)).cast("long")
+}
+
+/** Exact global ranks and running totals without a row-level window
+  * over a whole group (a window that partitions on a low-cardinality key,
+  * or on nothing, sorts the group in ONE task — the WindowExec warning).
+  *
+  * The two-level decomposition: pick a bucket key that is a monotone
+  * function of the window's ordering (`v div 100000`, a hash prefix, a
+  * coarse length bin, ...); then
+  *   1. `withBucketOffsets` totals the weight per (groups, bucket) — a
+  *      #groups × #buckets table — takes the EXCLUSIVE running sum over
+  *      those totals in bucket order (a window over #buckets rows per
+  *      group), and broadcasts that offset back onto every row;
+  *   2. the caller's own window, partitioned by (groups, bucket) — high
+  *      cardinality, bounded rows per task — adds the in-bucket part:
+  *      `row_number` for a rank, an inclusive `sum` for a cumulative
+  *      total, a RANGE `count` for a tie-aware rank, or `sumBefore` for
+  *      an exclusive one.
+  * offset + in-bucket value equals the unpartitioned window's value
+  * exactly, because no row in a lower bucket sorts after a row in a
+  * higher one. `sumBefore` alone is the exclusive running sum over a
+  * grid that is already small (mannwhitney, kruskal, feature_split, ...).
+  */
+object Prefix {
+  /** Exclusive running sum of `c` over `w`'s ordering: the sum over the
+    * rows strictly before this one, 0 (not null) on the first row. */
+  def sumBefore(c: Column, w: WindowSpec): Column =
+    coalesce(sum(c).over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
+
+  /** `rows` joined with column `as`: per `groups`, the total `weight` of
+    * the buckets below this row's `bucket`. `weight` is the per-bucket
+    * aggregate (`count(lit(1L))`, `sum("cnt")`, ...). With `total`, the
+    * group's whole weight rides along under that name. The offsets table
+    * is #groups × #buckets rows and is broadcast into the join.
+    */
+  def withBucketOffsets(rows: DataFrame, groups: Seq[String], bucket: String,
+      weight: Column, as: String, total: Option[String] = None): DataFrame = {
+    val keys = groups :+ bucket
+    val w = Window.partitionBy(groups.map(col): _*)
+    val bw = col("bucket_weight")
+    val offsets = rows.groupBy(keys.map(col): _*).agg(weight.as("bucket_weight"))
+      .select(keys.map(col) ++ Seq(sumBefore(bw, w.orderBy(bucket)).as(as)) ++
+        total.map(sum(bw).over(w).as(_)): _*)
+    rows.join(broadcast(offsets), keys)
+  }
+}
+
+/** The local SparkSession every main and the tests build: `cpus` cores and
+  * as many shuffle partitions, UTC session time zone, no UI, WARN logs.
+  */
+object Session {
+  def local(cpus: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md / FIXTURES.md §B).

@@ -1,25 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only optimization probe (not part of the driver contract).
   *
   * For each named query: one untimed warmup, then N timed runs split into
   * CONSTRUCT (registry fn call — eager localCheckpoints + Catalyst analysis
   * happen here) and EXECUTE (noop write: optimization + codegen + run).
-  * `--fixed` additionally times the harness floor: an empty job, a bare
+  * `--fixed` instead times the harness floor: an empty job, a bare
   * parquet-read setup, and a full scan of each base table.
+  * `--plan q…` instead prints each query's optimized logical plan with the
+  * `#N` expression ids stripped, so two builds' plans diff line by line.
   */
 object PerfProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "2").toInt
+
+    if (args.headOption.contains("--plan")) {
+      args.tail.foreach { n =>
+        val plan = SparkEntry.queries(n)(spark, d).queryExecution.optimizedPlan
+        println(s"===== $n =====")
+        println(plan.toString.replaceAll("#\\d+", ""))
+      }
+      spark.stop(); return
+    }
 
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{GQuery, QueryModule, Tables}
+import graft.{GQuery, Prefix, QueryModule, Tables}
 
 /** Multimodal-column block (north-star): media as opaque `binary` payloads
   * with typed metadata, processed through the real distributed plumbing —
@@ -432,9 +432,8 @@ object MultimodalOps extends QueryModule {
           octet_length(col("text").cast("binary")).cast("long").as("bytes"))
       val w = org.apache.spark.sql.expressions.Window.partitionBy("source")
         .orderBy(col("bytes").desc, col("doc_id").asc)
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
       assets
-        .withColumn("cb", coalesce(sum("bytes").over(w), lit(0L)))
+        .withColumn("cb", Prefix.sumBefore(col("bytes"), w))
         .withColumn("shard", expr(s"cb div $target"))
         .groupBy("source", "shard")
         .agg(count(lit(1L)).as("n_assets"), sum("bytes").as("bytes"))
@@ -655,10 +654,8 @@ object MultimodalOps extends QueryModule {
       val wPlace = org.apache.spark.sql.expressions.Window
         .partitionBy("source")
         .orderBy(col("bytes").desc, col("doc_id").asc)
-        .rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
       val placed = assets
-        .withColumn("cb", coalesce(sum("bytes").over(wPlace), lit(0L)))
+        .withColumn("cb", Prefix.sumBefore(col("bytes"), wPlace))
         .withColumn("shard", expr(s"cb div $target"))
       val wIdx = org.apache.spark.sql.expressions.Window
         .partitionBy("source", "shard")
@@ -666,10 +663,7 @@ object MultimodalOps extends QueryModule {
       placed
         .withColumn("rec_idx",
           (row_number().over(wIdx) - 1).cast("long"))
-        .withColumn("offset",
-          coalesce(sum("bytes").over(wIdx.rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)),
-            lit(0L)))
+        .withColumn("offset", Prefix.sumBefore(col("bytes"), wIdx))
         .select(col("source"), col("shard"), col("rec_idx"), col("doc_id"),
           col("offset"), col("bytes"))
         .orderBy("source", "shard", "rec_idx")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataTypes
-import graft.{GQuery, QueryModule, Tables}
+import graft.{GQuery, Prefix, QueryModule, Tables}
 import graft.Exact.{cents, dround}
 
 /** Third block: analytics + training-pipeline operators beyond the round-1/2
@@ -1433,10 +1433,8 @@ object AnalyticsOps extends QueryModule {
     * corpus it falls in — the easy→hard schedule a curriculum-training run
     * consumes. The naive form is `ntile()`/`row_number()` over a GLOBAL
     * ORDER BY — one task holds the corpus (the WindowExec warning). Here
-    * the exact global rank comes from the q_dist_histogram two-level
-    * decomposition instead: a (bin) histogram agg, a tiny ordered-bin
-    * prefix window (#bins rows), then a per-bin row_number — high
-    * cardinality, bounded rows per task — plus the broadcast bin offset.
+    * the exact global rank comes from `graft.Prefix` instead: broadcast
+    * offsets over 64-char length bins plus a per-bin row_number.
     * Phase arithmetic stays integral (`div` ≡ DuckDB `//`) so the t2 hash
     * gates exact ints, and the floor formula — NOT ntile(), which
     * distributes remainders differently — is mirrored in the oracle.
@@ -1445,14 +1443,9 @@ object AnalyticsOps extends QueryModule {
     (s, d) => {
       val docs = t(s, d, "documents").select(col("doc_id"), col("n_chars"))
         .withColumn("bin", floor(col("n_chars") / 64))
-      val binCounts = docs.groupBy("bin").agg(count(lit(1)).as("cnt"))
-      val wBins = Window.orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = binCounts.select(col("bin"),
-        coalesce(sum("cnt").over(wBins), lit(0L)).as("off"),
-        sum("cnt").over(Window.partitionBy()).as("total"))
       val wInBin = Window.partitionBy("bin").orderBy("n_chars", "doc_id")
-      docs.join(broadcast(offsets), "bin")
+      Prefix.withBucketOffsets(docs, Nil, "bin", count(lit(1)), "off",
+          total = Some("total"))
         .withColumn("rank", col("off") + row_number().over(wInBin))
         .select(col("doc_id"), col("n_chars"), col("rank"),
           expr("CAST(((rank - 1) * 5) div total AS INT)").as("phase"))
@@ -2518,7 +2511,7 @@ object AnalyticsOps extends QueryModule {
     * BIGINT. Emits n1, n2, the integer numerator, D, and the (smallest)
     * value attaining it.
     *
-    * Scale: the ECDF prefix sum uses the q_dist_histogram two-level shape —
+    * Scale: the ECDF prefix sum uses the `graft.Prefix` two-level shape —
     * bucket totals (≈105 rows) take the tiny global window, in-bucket
     * windows run per-bucket in parallel — NOT a single N-row sort; the
     * oracle deliberately computes the same statistic with a flat global
@@ -2546,10 +2539,9 @@ object AnalyticsOps extends QueryModule {
         .agg(sum("c1").as("t1"), sum("c2").as("t2"))
         .localCheckpoint(true)
       val wb = Window.orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
       val bp = btot.select(col("bkt"),
-        coalesce(sum("t1").over(wb), lit(0L)).as("off1"),
-        coalesce(sum("t2").over(wb), lit(0L)).as("off2"))
+        Prefix.sumBefore(col("t1"), wb).as("off1"),
+        Prefix.sumBefore(col("t2"), wb).as("off2"))
       val tot = btot.agg(sum("t1").as("n1"), sum("t2").as("n2"))
       val wv = Window.partitionBy("bkt").orderBy("v")
       val sc = vals.join(broadcast(bp), "bkt")
@@ -2924,12 +2916,8 @@ object AnalyticsOps extends QueryModule {
       def bounds(cn: String, div: Long) = {
         val grid = perUser.groupBy(cn).agg(count(lit(1L)).as("cnt"))
           .withColumn("bkt", expr(s"$cn div $div"))
-        val wb = Window.orderBy("bkt")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val off = grid.groupBy("bkt").agg(sum("cnt").as("t"))
-          .select(col("bkt"), coalesce(sum("t").over(wb), lit(0L)).as("off"))
         val wv = Window.partitionBy("bkt").orderBy(cn)
-        val cum = grid.join(broadcast(off), "bkt")
+        val cum = Prefix.withBucketOffsets(grid, Nil, "bkt", sum("cnt"), "off")
           .select(col(cn).as("v"), (col("off") + sum("cnt").over(wv)).as("c"))
         val aggs = (1 to 4).map(j =>
           min(when(col("c") * 5 >= col("n") * j, col("v"))).as(s"${cn}_b$j"))
@@ -3057,29 +3045,24 @@ object AnalyticsOps extends QueryModule {
         .select(cents("l_quantity").as("x"), cents("l_extendedprice").as("y"))
         .localCheckpoint(true)
       def rankMap(c: String) = {
-        val w = Window.orderBy(c)
-          .rowsBetween(Window.unboundedPreceding, -1)
         rows.groupBy(c).agg(count(lit(1L)).as("cnt"))
-          .withColumn("cumb", coalesce(sum("cnt").over(w), lit(0L)))
+          .withColumn("cumb", Prefix.sumBefore(col("cnt"), Window.orderBy(c)))
           .select(col(c), (col("cumb") * 2 + col("cnt") + 1).as(s"r$c"))
       }
       // x has ~50 distinct values — its rank map broadcasts for free. y is
       // near-unique (the price domain), so the r11 shape — groupBy(y) +
       // UNPARTITIONED cumsum window + a 500k-row broadcast rank map — paid
-      // a single-task global sort and a heavyweight broadcast build. The
-      // xi two-level trick computes ry directly on the rows instead:
+      // a single-task global sort and a heavyweight broadcast build.
+      // `Prefix` computes ry directly on the rows instead:
       // bucket offsets (≤ ~105-row window) + within-bucket RANGE count of
       // strictly-smaller values + an equal-value count. Exactly
       // ry = 2·(#rows below y) + (#rows at y) + 1, the same integer.
       val ybkt = rows.withColumn("ybkt", expr("y div 100000"))
-      val boff = ybkt.groupBy("ybkt").agg(count(lit(1L)).as("bc"))
-        .withColumn("off", coalesce(sum("bc").over(Window.orderBy("ybkt")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("ybkt", "off")
       val wLt = Window.partitionBy("ybkt").orderBy("y")
         .rangeBetween(Window.unboundedPreceding, -1)
       val wEq = Window.partitionBy("ybkt", "y")
-      val ranked = ybkt.join(broadcast(boff), "ybkt")
+      val ranked = Prefix.withBucketOffsets(ybkt, Nil, "ybkt",
+          count(lit(1L)), "off")
         .withColumn("ry",
           (col("off") + count(lit(1L)).over(wLt)) * 2
             + count(lit(1L)).over(wEq) + 1)
@@ -4002,9 +3985,8 @@ object AnalyticsOps extends QueryModule {
           when(col("dd") > 0, 1L).otherwise(0L).as("pos"))
       val grid = diffs.groupBy("ad")
         .agg(count(lit(1L)).as("t"), sum("pos").as("tp"))
-      val w = Window.orderBy("ad").rowsBetween(Window.unboundedPreceding, -1)
       val ranked = grid
-        .withColumn("cum", coalesce(sum("t").over(w), lit(0L)))
+        .withColumn("cum", Prefix.sumBefore(col("t"), Window.orderBy("ad")))
         .withColumn("rank2", col("cum") * 2 + col("t") + 1)
       val agg = ranked.agg(
         sum("t").as("n"), sum("tp").as("npos"),
@@ -4612,9 +4594,8 @@ object AnalyticsOps extends QueryModule {
         .agg(sum(when(col("g") === 1, 1L).otherwise(0L)).as("c1"),
           sum(when(col("g") === 0, 1L).otherwise(0L)).as("c0"))
         .withColumn("t", col("c1") + col("c0"))
-      val w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
       val ranked = grid
-        .withColumn("cum", coalesce(sum("t").over(w), lit(0L)))
+        .withColumn("cum", Prefix.sumBefore(col("t"), Window.orderBy("v")))
       val agg = ranked.agg(
         sum("c1").as("n1"), sum("c0").as("n0"),
         sum(col("c1") * (col("cum") * 2 + col("t") + 1)).as("r2"),
@@ -5164,9 +5145,8 @@ object AnalyticsOps extends QueryModule {
         .groupBy("v")
         .agg(count(lit(1L)).as("cnt"), types.map(tp =>
           sum(when(col("event_type") === tp, 1L).otherwise(0L)).as(s"c_$tp")): _*)
-      val w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
       val ranked = perV
-        .withColumn("cum", coalesce(sum("cnt").over(w), lit(0L)))
+        .withColumn("cum", Prefix.sumBefore(col("cnt"), Window.orderBy("v")))
       val aggCols =
         types.map(tp => sum(col(s"c_$tp") * (col("cum") * 2 + col("cnt") + 1))
           .as(s"s2_$tp")) ++
@@ -6728,12 +6708,12 @@ object AnalyticsOps extends QueryModule {
         .groupBy("bin").agg(count(lit(1L)).as("n"), sum("pos").as("pos"))
         // grid-sized, feeds tot + the prefix window — materialize once
         .localCheckpoint(true)
-      val w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, -1)
+      val w = Window.orderBy("bin")
       val tot = bins.agg(sum("n").as("nt"), sum("pos").as("pt"))
       val cand = bins
         .select(col("bin"),
-          coalesce(sum("n").over(w), lit(0L)).as("nl"),
-          coalesce(sum("pos").over(w), lit(0L)).as("pl"))
+          Prefix.sumBefore(col("n"), w).as("nl"),
+          Prefix.sumBefore(col("pos"), w).as("pl"))
         .crossJoin(broadcast(tot))
         .filter(col("nl") > 0L && col("nl") < col("nt"))
         .select(col("bin"), (col("bin") * 5000L).as("cut_cents"),
@@ -12134,11 +12114,9 @@ object AnalyticsOps extends QueryModule {
         .select(datediff(col("lp"), col("fd")).cast("long").as("dur"))
         .filter(col("dur") >= 1)
       val grid = durs.groupBy("dur").agg(count(lit(1L)).as("cnt"))
-      val wCum = Window.orderBy("dur")
-        .rowsBetween(Window.unboundedPreceding, -1)
       val nTot = grid.agg(sum("cnt").as("n"))
       val pts = grid
-        .withColumn("cum_prev", coalesce(sum("cnt").over(wCum), lit(0L)))
+        .withColumn("cum_prev", Prefix.sumBefore(col("cnt"), Window.orderBy("dur")))
         .crossJoin(broadcast(nTot))
         .withColumn("r2", lit(2) * col("cum_prev") + col("cnt") + 1)
         .withColumn("x", round(log(col("dur").cast("double")) * 1e6)
@@ -12779,9 +12757,8 @@ object AnalyticsOps extends QueryModule {
     * [cum, cum+w) crosses a multiple of step = W div 400 — exactly-∝-size
     * inclusion with a FIXED expected take, zero rejection, and any unit
     * with w ≥ step certainly included. The global cumulative is the
-    * two-level prefix sum (q_stats_ks rule): 256 hash-prefix buckets get
-    * offsets from a 256-row window; within-bucket cumsums run parallel
-    * partitions — no corpus-sized single-task sort. The hash covers every
+    * `graft.Prefix` two-level prefix sum over 256 hash-prefix buckets —
+    * no corpus-sized single-task sort. The hash covers every
     * output-relevant column ((okey, line, part, supp, qty, flag)), so
     * hash-equal rows are (w, flag)-identical and the aggregated output is
     * invariant to their relative order (the xi tie-break argument).
@@ -12804,18 +12781,12 @@ object AnalyticsOps extends QueryModule {
         // two consumers (bucket totals + the cumsum join) — materialize so
         // the lineitem scan and the 600k-row md5 pass run once, not twice
         .localCheckpoint(true)
-      val bktTot = rows.groupBy("bkt").agg(sum("w").as("bw"))
-        .withColumn("off",
-          coalesce(sum("bw").over(Window.orderBy("bkt")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      val wTot = bktTot.agg(sum("bw").as("tw"))
+      val wTot = rows.groupBy("bkt").agg(sum("w").as("bw"))
+        .agg(sum("bw").as("tw"))
         .select(expr("tw div 400").as("step"))
-      val wIn = Window.partitionBy("bkt").orderBy("h")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      rows
-        .join(broadcast(bktTot.select("bkt", "off")), "bkt")
-        .withColumn("cum_before",
-          col("off") + coalesce(sum("w").over(wIn), lit(0L)))
+      Prefix.withBucketOffsets(rows, Nil, "bkt", sum("w"), "off")
+        .withColumn("cum_before", col("off")
+          + Prefix.sumBefore(col("w"), Window.partitionBy("bkt").orderBy("h")))
         .crossJoin(broadcast(wTot))
         .withColumn("sel",
           expr("(cum_before + w) div step > cum_before div step"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{GQuery, QueryModule, Tables}
+import graft.{GQuery, Prefix, QueryModule, Tables}
 import graft.Exact.{cents, dround}
 
 /** Second relational block: the operator categories beyond Relational.scala's
@@ -76,7 +76,7 @@ object RelationalExt extends QueryModule {
             ORDER BY o_orderkey"""))
 
   /** Scale-safe twin of q_window_distribution: exact cume_dist via the
-    * distributed two-level prefix sum, never a window sort over ~N/5 rows
+    * `graft.Prefix` two-level prefix sum, never a window sort over ~N/5 rows
     * in one task (q_window_distribution partitions the row-level window on
     * a 5-value key — the textbook low-cardinality window skew; a plain
     * per-value histogram doesn't fix it when the value is near-unique, as
@@ -103,19 +103,11 @@ object RelationalExt extends QueryModule {
         // two consumers (bin totals + the cume-dist join) — materialize the
         // (prio, price)-grid once instead of re-running the orders agg
         .localCheckpoint(true)
-      val binTotals = hist.groupBy("o_orderpriority", "bin")
-        .agg(sum("cnt").as("bin_cnt"))
-      val wBins = Window.partitionBy("o_orderpriority").orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val wPrio = Window.partitionBy("o_orderpriority")
-      val binOffsets = binTotals
-        .select(col("o_orderpriority"), col("bin"),
-          coalesce(sum("bin_cnt").over(wBins), lit(0L)).as("bin_off"),
-          sum("bin_cnt").over(wPrio).as("total"))
       val wInBin = Window.partitionBy("o_orderpriority", "bin")
         .orderBy("o_totalprice")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      hist.join(broadcast(binOffsets), Seq("o_orderpriority", "bin"))
+      Prefix.withBucketOffsets(hist, Seq("o_orderpriority"), "bin",
+          sum("cnt"), "bin_off", total = Some("total"))
         .select(col("o_orderpriority"), col("o_totalprice"), col("cnt"),
           dround((col("bin_off") + sum("cnt").over(wInBin)) / col("total"), 6)
             .as("cd"))
@@ -788,7 +780,8 @@ object RelationalExt extends QueryModule {
     * have them). The weighted q-quantile is the smallest value v whose
     * inclusive cumulative weight reaches q·W.
     *
-    * Plan is the q_stats_auc/ks two-level prefix sum: collapse to the
+    * Plan is the `graft.Prefix` two-level prefix sum, spelled out because
+    * the bucket totals also feed the flag totals: collapse to the
     * (flag, cent-value) grid in one partial agg, then bucket offsets (tiny
     * agg, broadcast back via a flag-partitioned window over ≤ #buckets
     * rows) + in-bucket running sums — no single-partition window ever sees
@@ -811,11 +804,8 @@ object RelationalExt extends QueryModule {
       // column-pruned scan is far cheaper than the corpus checkpoint.
       val bktAgg = src.groupBy("flag", "bkt").agg(sum("w").as("bw"))
         .localCheckpoint(true) // bucket-grid-sized; feeds off + tot
-      val wOff = Window.partitionBy("flag").orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val off = bktAgg
-        .select(col("flag"), col("bkt"),
-          coalesce(sum("bw").over(wOff), lit(0L)).as("off"))
+      val off = bktAgg.select(col("flag"), col("bkt"), Prefix.sumBefore(
+        col("bw"), Window.partitionBy("flag").orderBy("bkt")).as("off"))
       val tot = bktAgg.groupBy("flag").agg(sum("bw").as("totw"))
       // one exchange for grid-agg AND window: clustering by (flag, bkt)
       // satisfies both the groupBy (subset of its keys) and the window

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{GQuery, QueryModule, Tables}
+import graft.{GQuery, Prefix, QueryModule, Tables}
 import graft.Exact.{cents, dround}
 
 /** Round-6 block: ranking/scoring operators a training-data platform runs on
@@ -34,8 +34,8 @@ object ScoringOps extends QueryModule {
     * auc_ppm = (2R⁺ − n⁺(n⁺+1))·10⁶ div (2·n⁺·n⁻).
     *
     * Scale: one hash-agg to the distinct cent grid (bounded by the score
-    * domain, ~49k cells here), then the dist_histogram/stats_ks two-level
-    * prefix sum — bucket offsets (tiny agg, broadcast) + in-bucket running
+    * domain, ~49k cells here), then the `graft.Prefix` two-level prefix
+    * sum — bucket offsets (tiny agg, broadcast) + in-bucket running
     * sums — so no single-partition window ever sees the full grid. All five
     * one-vs-rest AUCs come from the same single pass.
     */
@@ -49,13 +49,9 @@ object ScoringOps extends QueryModule {
         .agg(count(lit(1L)).as("cnt"), types.map(tp =>
           sum(when(col("event_type") === tp, 1L).otherwise(0L)).as(s"c_$tp")): _*)
       val b = perV.withColumn("bkt", expr("v div 100000"))
-      val wb = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-      val off = b.groupBy("bkt").agg(sum("cnt").as("bc"))
-        .select(col("bkt"), coalesce(sum("bc").over(wb), lit(0L)).as("off"))
-      val wv = Window.partitionBy("bkt").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val ranked = b.join(broadcast(off), "bkt")
-        .withColumn("cumb", col("off") + coalesce(sum("cnt").over(wv), lit(0L)))
+      val ranked = Prefix.withBucketOffsets(b, Nil, "bkt", sum("cnt"), "off")
+        .withColumn("cumb", col("off") + Prefix.sumBefore(col("cnt"),
+          Window.partitionBy("bkt").orderBy("v")))
       val s2 = ranked.agg(sum("cnt").as("n"),
         (types.map(tp => sum(col(s"c_$tp") * (col("cumb") * 2 + col("cnt") + 1))
           .as(s"s2_$tp")) ++
@@ -1254,12 +1250,6 @@ object ScoringOps extends QueryModule {
         .select("grp", "ymin", "w", "n")
       val libk = li.join(broadcast(bmm), Seq("grp"))
         .withColumn("b", expr("CAST((y - ymin) div w AS INT)"))
-      val btot = libk.groupBy("grp", "b").agg(count(lit(1L)).as("bc"))
-      val wB = Window.partitionBy("grp").orderBy("b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offs = btot
-        .withColumn("off", coalesce(sum("bc").over(wB), lit(0L)))
-        .select("grp", "b", "off")
       // level 2: within-bucket tie-aware cumulative count (RANGE frame
       // includes ties; ties never straddle buckets — equal y ⇒ equal b).
       // Both frames share one (grp, b)-ordered sort; l = n − r + c.
@@ -1267,7 +1257,8 @@ object ScoringOps extends QueryModule {
         .rangeBetween(Window.unboundedPreceding, Window.currentRow)
       val wTie = Window.partitionBy("grp", "b").orderBy("y")
         .rangeBetween(Window.currentRow, Window.currentRow)
-      val seq0 = libk.join(broadcast(offs), Seq("grp", "b"))
+      val seq0 = Prefix.withBucketOffsets(libk, Seq("grp"), "b",
+          count(lit(1L)), "off")
         .withColumn("r", col("off") + count(lit(1L)).over(wCum))
         .withColumn("l", col("n") - col("r") + count(lit(1L)).over(wTie))
       // ONE ranked-corpus pass serves EVERY consumer: the wIn lag and the
@@ -1636,7 +1627,7 @@ object ScoringOps extends QueryModule {
     * Ties are rank-order-insensitive in S₁ (equal x swap freely), so the
     * custkey tiebreak is presentation-only.
     *
-    * Scale: ranks come from the dist_histogram two-level prefix sum — per
+    * Scale: ranks come from the `graft.Prefix` two-level prefix sum — per
     * (segment, spend-bucket) offsets broadcast back, in-bucket row_number —
     * so no segment-wide single-partition sort.
     */
@@ -1649,14 +1640,10 @@ object ScoringOps extends QueryModule {
         .agg(coalesce(sum(cents(col("o_totalprice"))),
           lit(0)).cast("long").as("cents"))
       val b = spend.withColumn("bkt", expr("cents div 1000000"))
-      val wb = Window.partitionBy("c_mktsegment").orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val off = b.groupBy("c_mktsegment", "bkt").agg(count(lit(1L)).as("bc"))
-        .select(col("c_mktsegment"), col("bkt"),
-          coalesce(sum("bc").over(wb), lit(0L)).as("off"))
       val wv = Window.partitionBy("c_mktsegment", "bkt")
         .orderBy(col("cents").asc, col("c_custkey").asc)
-      val ranked = b.join(broadcast(off), Seq("c_mktsegment", "bkt"))
+      val ranked = Prefix.withBucketOffsets(b, Seq("c_mktsegment"), "bkt",
+          count(lit(1L)), "off")
         .select(col("c_mktsegment"), col("cents"),
           (col("off") + row_number().over(wv)).as("rk"))
       ranked.groupBy("c_mktsegment")

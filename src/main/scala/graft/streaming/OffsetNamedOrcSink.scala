@@ -21,12 +21,12 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftOutputMetrics,
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
   BoundReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual,
-  InSet, JoinedRow, LeafExpression, LessThan, LessThanOrEqual, Literal,
+  In, InSet, JoinedRow, LeafExpression, LessThan, LessThanOrEqual, Literal,
   Predicate, SpecificInternalRow, UnaryExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   CodeGenerator, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.catalyst.planning.ScanOperation
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{CoalescedPartitionSpec, FilterExec,
   SQLExecution, ShufflePartitionSpec, ShuffledRowRDD, SparkPlan, SparkStrategy,
@@ -1649,6 +1649,12 @@ object OffsetNamedOrcSink {
     * reads the value from its references; a new window then reuses the
     * compiled code of the last one. The scan's partition and data filters
     * keep their literals, so file skipping and ORC's pushdown see them.
+    *
+    * Before `FileSourceStrategy` derives the scan's filters, a top-level
+    * `In`/`InSet` conjunct loses its null values: ORC's search argument
+    * throws on a null `IN` value (and then prunes nothing), while a null
+    * in the list can make the conjunct null but never true, so the Filter
+    * keeps the same rows.
     */
   private object ParamLiterals extends SparkStrategy {
     /** Put the strategy in `spark`'s planner, once per session. */
@@ -1662,13 +1668,28 @@ object OffsetNamedOrcSink {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
       case ScanOperation(_, _, _, LogicalRelation(r: HadoopFsRelation, _, _, _, _))
           if r.location.isInstanceOf[CommittedFileIndex] =>
-        FileSourceStrategy(plan).map(_.transform {
+        FileSourceStrategy(plan.transform {
+          case f: Filter => f.copy(condition = withoutNullIn(f.condition))
+        }).map(_.transform {
           case f: FilterExec => f.copy(condition = f.condition.transform {
             case Literal(v, t) if v != null && inlined(t) => ParamLiteral(v, t)
             case InSet(c, set) if set.nonEmpty && switched(c.dataType) => ParamInSet(c, set)
           })
         })
       case _ => Nil
+    }
+
+    private def withoutNullIn(e: Expression): Expression = e match {
+      case And(l, r) => And(withoutNullIn(l), withoutNullIn(r))
+      // the optimizer rewrites an In of one distinct value to an EqualTo,
+      // so a non-null value always remains
+      case In(v, list) if list.exists(isNull) => In(v, list.filterNot(isNull))
+      case InSet(v, set) if set.contains(null) => InSet(v, set - null)
+      case other => other
+    }
+    private def isNull(e: Expression): Boolean = e match {
+      case Literal(null, _) => true
+      case _ => false
     }
 
     private val inlined: Set[DataType] = Set(BooleanType, ByteType, ShortType,

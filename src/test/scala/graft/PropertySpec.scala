@@ -201,6 +201,27 @@ class PropertySpec extends SparkSpec {
     spend.unpersist()
   }
 
+  test("Spark cast facts the oracle twins rely on") {
+    // DuckDB, measured on the same literals, agrees on the two decimal
+    // casts but rounds DOUBLE → BIGINT half-even (2.675 → 3) and
+    // TRUNCATES a bare DECIMAL(30,8) → DECIMAL(18,2) (1.00500000 → 1.00):
+    // twins floor() before an integer cast and round(dec, s) before a
+    // rescale
+    val r = spark.sql("""SELECT
+      CAST(CAST(2.675 AS DOUBLE) AS BIGINT) AS b2675,
+      CAST(CAST(-2.675 AS DOUBLE) AS BIGINT) AS bm2675,
+      CAST(CAST(1.005 AS DOUBLE) AS DECIMAL(18,2)) AS d1005,
+      CAST(CAST(-1.005 AS DOUBLE) AS DECIMAL(18,2)) AS dm1005,
+      CAST(CAST(CAST(1.005 AS DOUBLE) AS DECIMAL(30,8)) AS DECIMAL(18,2))
+        AS rescale1005""").head()
+    assert(r.getLong(0) == 2L && r.getLong(1) == -2L, "DOUBLE → BIGINT truncates")
+    assert(r.getDecimal(2) == new java.math.BigDecimal("1.01") &&
+      r.getDecimal(3) == new java.math.BigDecimal("-1.01"),
+      "DOUBLE → DECIMAL(18,2) rounds the shortest repr HALF_UP")
+    assert(r.getDecimal(4) == new java.math.BigDecimal("1.01"),
+      "bare DECIMAL(30,8) → DECIMAL(18,2) rescale is HALF_UP")
+  }
+
   test("BPE merge priorities are monotonically non-increasing") {
     // Each merge can only create pairs bounded by the merged pair's count
     // and never raises an existing pair's count — so greedy argmax counts

@@ -1664,4 +1664,9 @@ class StreamingSpec extends SparkSpec {
       s"keyed state grew with history: $lastStateRows rows in store " +
         "(expected <= one live cycle of 1750)")
   }
+
+  test("SparkEntry.entry, the flagship pipeline, returns every sf0.001 event") {
+    val n = SparkEntry.entry(spark).count()
+    assert(n > 0 && n == Tables(spark, sf, "events").count(), s"entry rows $n")
+  }
 }

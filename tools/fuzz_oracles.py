@@ -28,7 +28,8 @@ Perturbations (all index/key-modular, no RNG):
       exercises the n=1 / g=1 / zero-cell degenerate-group guards)
 
 Cast-semantics ground truth (measured live, Spark 4.1.2 vs DuckDB 1.x —
-graft.FuzzProbe is the Spark twin of the probe below):
+the Spark side is asserted by PropertySpec "Spark cast facts the oracle
+twins rely on", the DuckDB side is the probe below):
   - CAST(DOUBLE AS DECIMAL(18,2)): both engines round the shortest decimal
     repr half-away-from-zero (1.005 -> 1.01, 0.125 -> 0.13, 2.675 -> 2.68,
     -1.005 -> -1.01). The cents pattern is cross-engine safe.

@@ -43,8 +43,8 @@ Usage:
                                    [--out /tmp/graft_sf1] [--copies 10]
   python3 tools/scale_probe.py run [--out /tmp/graft_sf1] [query ...]
       # default query set: the 25 heaviest from bench_r9_full.json;
-      # runs graft.Scratch (warmup + 2 timed) on sf0.1 and the synth dir,
-      # prints min-of-2 seconds each + the exponent, writes
+      # runs graft.PerfProbe (warmup + 2 timed) on sf0.1 and the synth dir,
+      # prints min-of-2 construct + execute seconds each + the exponent, writes
       # /tmp/graft_sf1/scale_probe.json
 """
 import json
@@ -232,16 +232,16 @@ def default_queries():
 def time_queries(sfdir, queries):
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sfdir, GRAFT_XMX="24g")
     p = subprocess.run(
-        [f"{REPO}/tools/run_verify.sh", "graft.Scratch"] + queries,
+        [f"{REPO}/tools/run_verify.sh", "graft.PerfProbe"] + queries,
         env=env, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
         text=True)
+    # PerfProbe prints `query  construct  execute` (min of its timed runs,
+    # seconds); a query whose warmup failed prints no such line
     times = {}
     for line in p.stdout.splitlines():
-        m = re.match(r"^(\S+?)( \(2\))?\s+([0-9.]+) s$", line.strip())
+        m = re.match(r"^(\S+)\s+([0-9.]+)\s+([0-9.]+)$", line.strip())
         if m:
-            q = m.group(1)
-            t = float(m.group(3))
-            times[q] = min(times.get(q, 1e9), t)
+            times[m.group(1)] = float(m.group(2)) + float(m.group(3))
     return times
 
 
